@@ -72,7 +72,7 @@ class Dedup(Filter):
             from gohangout_spark.io import ensure_event_time
 
             keyed = ensure_event_time(keyed, ts)
-            out = keyed.withWatermark(ts, self.keep_within)
+            out = keyed.withWatermark(f"`{ts}`", self.keep_within)
             out = out.dropDuplicatesWithinWatermark(key_names)
         elif self.order_by:
             w = Window.partitionBy(*key_names).orderBy(

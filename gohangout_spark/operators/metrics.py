@@ -68,9 +68,10 @@ class LinkMetric(Filter):
         # mode the window then finalizes only after offset windows' worth
         # of event time has passed its end.
         self.window_offset = int(window_offset)
-        # strict_cumulative routes streaming runs through the
-        # applyInPandasWithState op (exact per-tick re-emission + explicit
-        # reserveWindow state lifetime); default uses the built-in windowed
+        # strict_cumulative routes streaming runs through
+        # streaming/stateful.py: the reference's ts - ts % batchWindow
+        # bucket as a grouping key under a reserveWindow watermark, state in
+        # the JVM state store; default uses the built-in windowed
         # aggregation in update mode (SURVEY §4 documented delta)
         self.strict_cumulative = bool(strict_cumulative)
 
@@ -97,7 +98,7 @@ class LinkMetric(Filter):
 
             delay = max(self.reserve_window, self.batch_window * self.window_offset)
             src = ensure_event_time(src, self.ts_field)
-            src = src.withWatermark(self.ts_field, f"{delay} seconds")
+            src = src.withWatermark(f"`{self.ts_field}`", f"{delay} seconds")
         win = F.window(ts, f"{self.batch_window} seconds")
         grouped = src.groupBy(win.alias("window"), *[F.col(f"`{f}`") for f in gf])
         out = grouped.agg(*self._aggs(df))
@@ -125,8 +126,8 @@ class LinkMetric(Filter):
                     f"(got {self.fields!r})"
                 )
             # same skip-if-missing rule as metrics_df (updateMetric early
-            # return): null event time or link fields would otherwise become
-            # a None group key and crash the stateful update function
+            # return): null event time or link fields would otherwise be
+            # counted under a null group key
             skip = field_col(self.ts_field, guarded).isNotNull()
             for fname in self._group_fields():
                 skip = skip & field_col(fname, guarded).isNotNull()

@@ -1,19 +1,32 @@
-"""Strict-parity cumulative LinkMetric as a custom stateful streaming op.
+"""Strict-parity cumulative LinkMetric as a native streaming aggregation.
 
 The reference's ``accumulateMode: cumulative`` re-emits the RUNNING total for
 a (window, fields...) group every emission tick while keeping state for
 ``reserveWindow`` seconds (/root/reference/filter/link_metric.go:169-179,
-214-219). Spark's built-in windowed aggregation in ``update`` output mode is
-the 95% answer (gohangout_spark.operators.metrics); what it cannot reproduce
-is state lifetime decoupled from the aggregation window. This module closes
-that gap with ``applyInPandasWithState``:
+214-219). This module keeps that state in the JVM state store with one
+``groupBy(window_start, *fields).agg(...)`` in ``update`` output mode:
 
 - group key: (window_start, *fields) where window_start = event-time bucket
-  ``ts - ts % batchWindow`` (link_metric.go:219)
-- per micro-batch: add the batch's rows into the group's running stats and
-  emit the updated totals (cumulative re-emission)
-- state expiry: event-time timeout at window_end + reserveWindow — the exact
-  ``reserveWindow`` retention rule, enforced by the state store.
+  ``ts - ts % batchWindow`` (link_metric.go:219), carrying the watermark
+  ``max(window_start) - reserveWindow``
+- per micro-batch: the batch's rows merge into the group's running
+  count/min/max/sum and the updated totals are emitted (cumulative
+  re-emission); a group whose values are all null emits count 0, sum 0.0
+  and null min/max/mean
+- watermark rule: micro-batch b drops every row whose window_start is at or
+  below the watermark of batch b-1, and evicts (without emitting) every
+  group whose window_start is at or below its own watermark.
+
+Eviction at ``window_start <= watermark`` is shorter than the reference's
+window end + ``reserveWindow`` retention, and emits the same rows: the
+watermark never moves back, so once a group is evicted every later row for
+it is at or below the previous batch's watermark and is dropped before it
+reaches the state store. Longer retention would hold totals no row could
+ever update again.
+
+Checkpoints written by the earlier Python state operator
+(``applyInPandasWithState``) do not restore into this plan: a query on such
+a checkpoint must start from a fresh checkpoint location.
 
 Scale: state is O(live groups × a few longs), partitioned by group hash
 across executors; RocksDB state store handles beyond-memory cardinality.
@@ -21,12 +34,8 @@ across executors; RocksDB state store handles beyond-memory cardinality.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from gohangout_spark.expr.paths import field_col
 
@@ -54,8 +63,7 @@ def cumulative_link_metric_stream(
             "value field last"
         )
     reserve = int(reserve_window or batch_window)
-    n_fields = len(group_fields)
-    has_stats = stats_field is not None
+    keys = [f"__k{i}" for i in range(len(group_fields))]
 
     ts = field_col(ts_field, df)
     bucket = F.timestamp_seconds(
@@ -63,83 +71,26 @@ def cumulative_link_metric_stream(
     ).alias("window_start")
 
     cols = [bucket] + [
-        field_col(f, df).cast("string").alias(f"__k{i}")
-        for i, f in enumerate(group_fields)
+        field_col(f, df).cast("string").alias(k) for k, f in zip(keys, group_fields)
     ]
-    if has_stats:
+    if stats_field is not None:
         cols.append(field_col(stats_field, df).cast("double").alias("__v"))
     src = df.select(*cols).withWatermark("window_start", f"{reserve} seconds")
 
-    key_ddl = ", ".join(f"__k{i} string" for i in range(n_fields))
-    if has_stats:
-        out_schema = (
-            f"window_start timestamp, {key_ddl}, count long, "
-            "min double, max double, sum double, mean double"
-        )
-        state_schema = "count long, min double, max double, sum double"
-        out_cols = ["window_start", *[f"__k{i}" for i in range(n_fields)],
-                    "count", "min", "max", "sum", "mean"]
+    if stats_field is not None:
+        v = F.col("__v")
+        n = F.count(v)
+        total = F.coalesce(F.sum(v), F.lit(0.0))
+        aggs = [
+            n.alias("count"),
+            F.min(v).alias("min"),
+            F.max(v).alias("max"),
+            total.alias("sum"),
+            F.when(n > 0, total / n).alias("mean"),
+        ]
     else:
-        out_schema = f"window_start timestamp, {key_ddl}, count long"
-        state_schema = "count long"
-        out_cols = ["window_start", *[f"__k{i}" for i in range(n_fields)], "count"]
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # reserveWindow elapsed: drop state (link_metric.go expiry —
-            # totals were already emitted cumulatively)
-            state.remove()
-            return
-        window_start = key[0]
-        if has_stats:
-            cnt, mn, mx, sm = state.get if state.exists else (0, None, None, 0.0)
-            for pdf in pdfs:
-                v = pdf["__v"].dropna()
-                if len(v):
-                    cnt += int(len(v))
-                    bmin, bmax = float(v.min()), float(v.max())
-                    mn = bmin if mn is None else min(mn, bmin)
-                    mx = bmax if mx is None else max(mx, bmax)
-                    sm += float(v.sum())
-            state.update((cnt, mn, mx, sm))
-            row = (window_start, *key[1:], cnt, mn, mx, sm, (sm / cnt) if cnt else None)
-        else:
-            (cnt,) = state.get if state.exists else (0,)
-            for pdf in pdfs:
-                cnt += int(len(pdf))
-            state.update((cnt,))
-            row = (window_start, *key[1:], cnt)
-        # event-time timeout at window_end + reserveWindow; the key arrives
-        # as a tz-naive datetime in the SESSION timezone (pinned UTC by the
-        # engine) — timegm treats it as UTC regardless of the worker's OS tz
-        # (naive .timestamp() would re-interpret it in the OS zone)
-        import calendar
-
-        epoch = calendar.timegm(window_start.timetuple())
-        expiry_ms = int((epoch + batch_window + reserve) * 1000)
-        try:
-            state.setTimeoutTimestamp(expiry_ms)
-        except Exception:
-            # expiry already behind the watermark: without a registered
-            # timeout the group would never be re-invoked and its state
-            # would leak — anchor the timeout just past the watermark
-            try:
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-            except Exception:
-                state.remove()
-        yield pd.DataFrame([row], columns=out_cols)
-
-    out = src.groupBy(
-        "window_start", *[f"__k{i}" for i in range(n_fields)]
-    ).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    for i, f in enumerate(group_fields):
-        out = out.withColumnRenamed(f"__k{i}", f)
+        aggs = [F.count(F.lit(1)).alias("count")]
+    out = src.groupBy("window_start", *keys).agg(*aggs)
+    for k, f in zip(keys, group_fields):
+        out = out.withColumnRenamed(k, f)
     return out

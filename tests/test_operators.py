@@ -835,6 +835,32 @@ class TestDedup:
             q.stop()
         assert got == [1, 2, 3, 4], got
 
+    def test_streaming_default_timestamp(self, spark, tmp_path):
+        """Streaming Dedup on the default ``@timestamp`` field: the
+        watermark column name is quoted, so ``@`` parses."""
+        import datetime
+
+        from gohangout_spark.operators import Dedup, FilterBox
+
+        src = str(tmp_path / "dd_at_src")
+        base = datetime.datetime(2024, 1, 1)
+        spark.createDataFrame(
+            [(i, base + datetime.timedelta(seconds=i)) for i in (1, 2, 2, 3)],
+            "eid long, `@timestamp` timestamp",
+        ).coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema("eid long, `@timestamp` timestamp").parquet(src)
+        out = FilterBox(Dedup(fields="eid", keep_within="1 hour")).apply(stream)
+        q = (
+            out.writeStream.format("memory").queryName("dd_default_ts")
+            .outputMode("append").start()
+        )
+        try:
+            q.processAllAvailable()
+            got = sorted(r["eid"] for r in spark.sql("SELECT * FROM dd_default_ts").collect())
+        finally:
+            q.stop()
+        assert got == [1, 2, 3], got
+
 
 class TestAsofLookup:
     def _dim(self, spark, tmp_path):

@@ -1,7 +1,7 @@
 """Cumulative LinkMetric strict-parity test: totals must be RE-EMITTED and
-GROW across micro-batches for the same (window, key) group — the semantics
-Spark's built-in update-mode agg has, plus explicit reserveWindow state
-lifetime (applyInPandasWithState)."""
+GROW across micro-batches for the same (window, key) group — a native
+update-mode aggregation keyed on the batchWindow bucket, whose state is
+evicted once the bucket falls to the reserveWindow watermark."""
 
 import datetime
 
@@ -65,6 +65,120 @@ def test_cumulative_across_microbatches(spark, tmp_path, stats):
         assert final["sum"] == pytest.approx(total)
         assert final["min"] == 0.0 and final["max"] == 2.0
         assert final["mean"] == pytest.approx(total / 100)
+
+
+# Four file-stream batches over 100 s buckets (reserveWindow 100 s): two
+# groups, rows out of order inside and across batches, null values, and two
+# rows whose bucket is at or behind the previous batch's watermark.
+_LOG_BATCHES = [
+    [("a", 10, 1.0), ("a", 150, 5.0), ("b", 120, None), ("a", 30, 3.0)],
+    [("a", 60, 2.0), ("b", 250, 4.0), ("b", 110, None)],
+    [("a", 20, 9.0), ("a", 190, 7.0), ("b", 320, -1.0), ("a", 205, None)],
+    [("b", 150, 8.0), ("b", 299, 3.0), ("a", 260, 6.0), ("a", 410, 0.5)],
+]
+# Hand-computed per-batch emission log: (batch, window_start offset, key,
+# count, min, max, sum, mean). W_b = max(window_start) of batches < b minus
+# 100 s; batch b drops rows with window_start <= W_{b-1} (batch 2's a@0,
+# batch 3's b@100) and its emissions are the running totals of the groups
+# it touched. An all-null group emits count 0, sum 0.0 and null min/max/mean.
+_STATS_LOG = [
+    (0, 0, "a", 2, 1.0, 3.0, 4.0, 2.0),
+    (0, 100, "a", 1, 5.0, 5.0, 5.0, 5.0),
+    (0, 100, "b", 0, None, None, 0.0, None),
+    (1, 0, "a", 3, 1.0, 3.0, 6.0, 2.0),
+    (1, 100, "b", 0, None, None, 0.0, None),
+    (1, 200, "b", 1, 4.0, 4.0, 4.0, 4.0),
+    (2, 100, "a", 2, 5.0, 7.0, 12.0, 6.0),
+    (2, 200, "a", 0, None, None, 0.0, None),
+    (2, 300, "b", 1, -1.0, -1.0, -1.0, -1.0),
+    (3, 200, "a", 1, 6.0, 6.0, 6.0, 6.0),
+    (3, 200, "b", 2, 3.0, 4.0, 7.0, 3.5),
+    (3, 400, "a", 1, 0.5, 0.5, 0.5, 0.5),
+]
+_COUNT_LOG = [
+    (0, 0, "a", 2), (0, 100, "a", 1), (0, 100, "b", 1),
+    (1, 0, "a", 3), (1, 100, "b", 2), (1, 200, "b", 1),
+    (2, 100, "a", 2), (2, 200, "a", 1), (2, 300, "b", 1),
+    (3, 200, "a", 2), (3, 200, "b", 2), (3, 400, "a", 1),
+]
+
+
+@pytest.mark.parametrize("stats", [False, True])
+def test_strict_path_emission_log(spark, tmp_path, capsys, stats):
+    """Pins the strict path's per-batch emission log: running totals per
+    (window, key) group, rows behind the watermark dropped, all-null groups
+    emitted with count 0. The executed plan keeps its state in the JVM:
+    no Python state operator."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    src = str(tmp_path / "log_src")
+    for batch in _LOG_BATCHES:
+        rows = [(k, v, base + datetime.timedelta(seconds=t)) for k, t, v in batch]
+        spark.createDataFrame(rows, "k string, v double, ts timestamp").coalesce(
+            1
+        ).write.mode("append").parquet(src)
+        time.sleep(0.05)  # distinct mtimes -> deterministic file order
+
+    stream = (
+        spark.readStream.schema("k string, v double, ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    out = cumulative_link_metric_stream(
+        stream, fields_link="k", batch_window=100, reserve_window=100,
+        ts_field="ts", stats_field="v" if stats else None,
+    )
+    offset = (F.col("window_start").cast("long") - int(base.timestamp())).alias("ws")
+    cols = [offset, "k", "count"] + (["min", "max", "sum", "mean"] if stats else [])
+    log = []
+    q = (
+        out.writeStream.foreachBatch(
+            lambda bdf, bid: log.extend(
+                (bid, *r) for r in bdf.select(*cols).collect()
+            )
+        )
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "log_ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        q.explain()
+        plan = capsys.readouterr().out
+    finally:
+        q.stop()
+    assert sorted(log, key=lambda r: r[:3]) == (_STATS_LOG if stats else _COUNT_LOG)
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
+def test_link_metric_stream_default_timestamp(spark, tmp_path):
+    """Non-strict streaming LinkMetric on the default ``@timestamp`` field:
+    the watermark column name is quoted, so ``@`` parses."""
+    from gohangout_spark.operators import FilterBox, LinkMetric
+
+    src = str(tmp_path / "at_src")
+    spark.createDataFrame(
+        [("g", BASE + datetime.timedelta(seconds=i)) for i in range(20)],
+        "name string, `@timestamp` timestamp",
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("name string, `@timestamp` timestamp").parquet(src)
+    lm = LinkMetric(fields_link="name", batch_window=100,
+                    accumulate_mode="cumulative", drop_original_event=True)
+    out = FilterBox(lm).apply(stream)
+    q = (
+        out.writeStream.format("memory").queryName("lm_default_ts")
+        .outputMode("update").start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM lm_default_ts").collect()
+    finally:
+        q.stop()
+    assert [(r["name"], r["count"]) for r in rows] == [("g", 20)], rows
 
 
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
@@ -177,7 +291,7 @@ def test_observability_listener(spark, tmp_path):
 
 def test_strict_cumulative_from_yaml(spark, tmp_path):
     """strictCumulative: true in a YAML LinkMetric routes the streaming run
-    through the applyInPandasWithState op."""
+    through the native cumulative aggregation in streaming/stateful.py."""
     from gohangout_spark.pipeline import Pipeline
     from gohangout_spark.sinks import MemorySink
 
