@@ -32,26 +32,12 @@ def _is_field_ref(s: str) -> bool:
     return bool(_BRACKET_RE.match(s)) or bool(_JSONPATH_RE.match(s))
 
 
-# Opt-in switch for the sprig long-tail pandas-UDF fallback (SURVEY §1.3):
-# the common sprig subset compiles to JVM Columns below; actions outside it
-# raise at compile time UNLESS this is enabled (module default or per-call
-# kwarg), in which case known-long-tail functions run as an Arrow-batched
-# pandas UDF. Off by default: the UDF path is the slow path, and silent
-# fallback would hide a 10-100x regression in a hot pipeline.
-_ALLOW_UDF_TEMPLATES = False
-
-
-def set_allow_udf_templates(enabled: bool = True) -> None:
-    global _ALLOW_UDF_TEMPLATES
-    _ALLOW_UDF_TEMPLATES = enabled
-
-
 def compile_render(
     value,
     df: DataFrame | None = None,
     ts_field: str = "@timestamp",
     bare_is_field: bool = True,
-    allow_udf_templates: bool | None = None,
+    allow_udf_templates: bool = False,
 ) -> Column:
     """Compile a render spec to a Column.
 
@@ -60,9 +46,11 @@ def compile_render(
     as a literal unless it looks like a reference; field-name sides treat bare
     words as one-level fields.
 
-    ``allow_udf_templates`` (None → module default, see
-    set_allow_udf_templates) gates the sprig long-tail pandas-UDF fallback
-    for template actions outside the Column-compiled subset.
+    ``allow_udf_templates`` opts in to the sprig long-tail pandas-UDF
+    fallback (SURVEY §1.3) for template actions outside the
+    Column-compiled subset. Off by default: the UDF path is the slow path,
+    and a silent fallback would hide a 10-100x regression in a hot
+    pipeline.
     """
     if not isinstance(value, str):
         return F.lit(value)
@@ -72,8 +60,7 @@ def compile_render(
     if "%{" in s:
         return _compile_index_pattern(s, df, ts_field)
     if "{{" in s:
-        allow = _ALLOW_UDF_TEMPLATES if allow_udf_templates is None else allow_udf_templates
-        return _compile_template(s, df, ts_field, allow_udf=allow)
+        return _compile_template(s, df, ts_field, allow_udf=allow_udf_templates)
     if bare_is_field and re.fullmatch(r"[A-Za-z_@][A-Za-z0-9_@.\-]*", s or "") and (
         df is None or s in df.columns
     ):

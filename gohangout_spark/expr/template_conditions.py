@@ -28,10 +28,6 @@ class TemplateConditionError(ValueError):
     pass
 
 
-def is_template_condition(s: str) -> bool:
-    return s.strip().startswith("{{")
-
-
 def _tokenize(s: str) -> list[str]:
     toks, i, n = [], 0, len(s)
     while i < n:

@@ -252,35 +252,6 @@ def ngram_jaccard_pairs(
 
 # ----------------------------------------------------------------- simhash
 
-def simhash_udf(num_bits: int = 64):
-    """Vectorized SimHash over token arrays (Arrow batches, numpy)."""
-
-    @F.pandas_udf("long")
-    def simhash(tok_series: pd.Series) -> pd.Series:
-        out = np.zeros(len(tok_series), dtype=np.int64)
-        import hashlib
-
-        for i, toks in enumerate(tok_series):
-            if toks is None or len(toks) == 0:
-                continue
-            acc = np.zeros(num_bits, dtype=np.int64)
-            for t in toks:
-                # deterministic across workers/runs (builtin hash() is
-                # randomized per process via PYTHONHASHSEED)
-                digest = hashlib.blake2b(str(t).encode(), digest_size=8).digest()
-                h = np.int64(np.uint64(int.from_bytes(digest, "big")).astype(np.int64))
-                bits = (np.uint64(h) >> np.arange(num_bits, dtype=np.uint64)) & np.uint64(1)
-                acc += np.where(bits.astype(bool), 1, -1)
-            sig = np.uint64(0)
-            for b in range(num_bits):
-                if acc[b] > 0:
-                    sig |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
-
-    return simhash
-
-
 _BIT_POWERS = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 

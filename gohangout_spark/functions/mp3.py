@@ -283,18 +283,3 @@ class Mp3LayerICodec:
         sb, info = self.decode_subbands(payload)
         return self._synthesize(sb), info["sample_rate"]
 
-
-class Mp3AudioCodec:
-    """Adapter exposing Mp3LayerICodec through the audio-codec contract
-    (decode(payload, sample_rate) -> float PCM) — the compressed-LOSSY
-    perceptual-codec path next to ImaAdpcmAudioCodec."""
-
-    def __init__(self, nb: int = 10):
-        self.nb = nb
-
-    def decode(self, payload: bytes, sample_rate: int = 32000) -> np.ndarray:
-        pcm, _sr = Mp3LayerICodec(sample_rate=32000, nb=self.nb).decode(payload)
-        return pcm
-
-    def encode(self, pcm: np.ndarray, sample_rate: int = 32000) -> bytes:
-        return Mp3LayerICodec(sample_rate=sample_rate, nb=self.nb).encode(pcm)

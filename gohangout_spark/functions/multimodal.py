@@ -862,33 +862,6 @@ def extract_adpcm_decode_stats(df: DataFrame, block_align: int = 20) -> DataFram
     return _extract_pcm_decode_stats(df, decode)
 
 
-class G711AudioCodec:
-    """Adapter exposing functions.g711.G711Codec through the audio-codec
-    contract — the telephony LOSSY audio path (2:1 companding, stateless
-    per sample). Decode differs from the encoded PCM, so the gate checks
-    the decoded stream itself: the multimodal_g711_decode oracle replays
-    BOTH the companding encode and the expansion decode as pure SQL
-    arithmetic from the closed-form fixture, and pytest cross-checks all
-    four maps bit-for-bit against CPython's audioop over the full
-    16-bit / 256-code ranges (tests/test_multimodal.py)."""
-
-    def __init__(self, law: str = "ulaw"):
-        self.law = law
-
-    def decode(self, payload: bytes, sample_rate: int = 8000) -> np.ndarray:
-        from gohangout_spark.functions.g711 import G711Codec
-
-        return G711Codec(self.law, sample_rate).decode(payload).astype(
-            np.float64
-        ) / 32768.0
-
-    def encode(self, pcm: np.ndarray, sample_rate: int = 8000) -> bytes:
-        from gohangout_spark.functions.g711 import G711Codec
-
-        ints = np.round(np.clip(pcm, -1.0, 1.0) * 32767).astype(np.int64)
-        return G711Codec(self.law, sample_rate).encode(ints)
-
-
 def make_g711_media_table(
     spark, n: int = 32, n_samples: int = 400, sample_rate: int = 8000
 ) -> DataFrame:

@@ -53,15 +53,3 @@ def salted_agg(
     partials = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*partial_exprs)
     return partials.groupBy(*keys).agg(*final_exprs)
 
-
-def salted_broadcast_left(
-    big: DataFrame, small: DataFrame, key: str, salt_buckets: int = 8
-) -> DataFrame:
-    """Skew-proof equi-join of a big table against a small one: replicate the
-    small side ``salt_buckets``× with explicit salts; the big side salts
-    randomly. Mostly superseded by broadcast joins + AQE, kept for the case
-    of a medium small-side that exceeds the broadcast threshold."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("__salt")
-    small_rep = small.select("*", salts)
-    big_salted = big.withColumn("__salt", (F.rand() * salt_buckets).cast("int"))
-    return big_salted.join(small_rep, [key, "__salt"]).drop("__salt")

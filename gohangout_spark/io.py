@@ -80,10 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names or TABLES}
-
-
 def rebalance_for_compute(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Repartition a source that planned (far) fewer partitions than the
     session has cores, for CPU-bound per-row work (regex/HOF text

@@ -117,6 +117,14 @@ class LinkMetric(Filter):
         if streaming and self.strict_cumulative and self.accumulate_mode == "cumulative":
             from gohangout_spark.streaming.stateful import cumulative_link_metric_stream
 
+            if self.reduce:
+                # the strict path aggregates raw events only; merging
+                # pre-counted ones would silently count rows instead
+                raise ValueError(
+                    f"{type(self).__name__}: strictCumulative with "
+                    "accumulateMode cumulative does not support reduce: "
+                    "drop strictCumulative or reduce"
+                )
             stats = (
                 self.fields[-1] if isinstance(self, LinkStatsMetric) else None
             )

@@ -214,39 +214,25 @@ class Pipeline:
         input_frames = self._input_frames(spark, streaming=True)
         for i, raw in enumerate(input_frames):
             sinks = self.sinks
-            if refreshables:
-                # Translate refresh_interval (filter/translate.go:108-116):
-                # a dict baked into a started streaming plan can never change,
-                # so the CHAIN is applied inside foreachBatch — each
-                # micro-batch recompiles against the (possibly reloaded)
-                # dictionary. Valid because refreshable chains are stateless
-                # per-row transforms; windowed metrics keep the in-plan path.
-                df = raw
+            # Translate refresh_interval (filter/translate.go:108-116): a
+            # dict baked into a started streaming plan can never change, so
+            # with refreshables the CHAIN is applied inside foreachBatch —
+            # each micro-batch recompiles against the (possibly reloaded)
+            # dictionary. Valid because refreshable chains are stateless
+            # per-row transforms; windowed metrics keep the in-plan path.
+            df = raw if refreshables else self.transform(raw)
 
-                def fan_out(batch_df: DataFrame, epoch_id: int, _sinks=sinks):
+            def fan_out(batch_df: DataFrame, epoch_id: int, _sinks=sinks):
+                if refreshables:
                     for t in refreshables:
                         t.maybe_refresh()
-                    out_df = self.transform(batch_df)
-                    out_df.persist()
-                    try:
-                        for sink in _sinks:
-                            sink.write_micro_batch(
-                                self._sink_df(out_df, sink), epoch_id
-                            )
-                    finally:
-                        out_df.unpersist()
-            else:
-                df = self.transform(raw)
-
-                def fan_out(batch_df: DataFrame, epoch_id: int, _sinks=sinks):
-                    batch_df.persist()
-                    try:
-                        for sink in _sinks:
-                            sink.write_micro_batch(
-                                self._sink_df(batch_df, sink), epoch_id
-                            )
-                    finally:
-                        batch_df.unpersist()
+                    batch_df = self.transform(batch_df)
+                batch_df.persist()
+                try:
+                    for sink in _sinks:
+                        sink.write_micro_batch(self._sink_df(batch_df, sink), epoch_id)
+                finally:
+                    batch_df.unpersist()
 
             mode = output_mode or self._default_mode()
             from gohangout_spark.sinks import FileSink as _FileSink

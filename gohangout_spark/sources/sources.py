@@ -439,14 +439,7 @@ class KafkaSource(Source):
                             1,  # CreateTime, what magic-1 carries
                         )
                     )
-        df = spark.createDataFrame(
-            rows,
-            "key binary, value binary, topic string, partition int, "
-            "offset long, timestamp_ms long, timestampType int",
-        ).withColumn("timestamp", F.timestamp_millis(F.col("timestamp_ms"))).drop(
-            "timestamp_ms"
-        )
-        return self._finish(df)
+        return self._dev_wire_frame(spark, rows)
 
     def _batch_dev_wire_group(self, spark, opts):
         """group.id tier: join the consumer group, drain the OWNED
@@ -476,18 +469,12 @@ class KafkaSource(Source):
             message_format=self.conf.get("wire_format", "v0"),
             sasl_user=sasl_user, sasl_password=sasl_pw,
         )
-        if len(specs) == 1:
-            consumer = mk(specs[0])
-            rows = []
-            try:
-                consumer.join()
-                for topic, part, offset, ts, key, value in consumer.poll():
-                    rows.append((key, value, topic, part, offset, ts, 1))
-                consumer.commit()
-            finally:
-                consumer.close()
-        else:
-            rows = self._drain_group_threads([mk(t) for t in specs])
+        rows = self._drain_group_threads([mk(t) for t in specs])
+        return self._dev_wire_frame(spark, rows)
+
+    def _dev_wire_frame(self, spark, rows):
+        """Connector-shaped frame over fetched (key, value, topic,
+        partition, offset, timestamp_ms, timestampType) rows."""
         df = spark.createDataFrame(
             rows,
             "key binary, value binary, topic string, partition int, "

@@ -2143,7 +2143,7 @@ def tpch_q4(spark, sf_dir):
     the first join, dropping the second orders scan + semi join — and it
     LOST at 100× facts, 2.2 → 2.6 s: widening every distinct-exchange
     row by the priority string costs more at scale than the saved
-    dimension-cheap scan; tools/ab_q4.py carries the record.)"""
+    dimension-cheap scan; 843c7da:tools/ab_q4.py carries the record.)"""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
@@ -3131,7 +3131,7 @@ def purchase_attribution(spark, sf_dir):
     flag + per-role CASE payload) and fed to joins._asof_select, the
     same single implementation of the asof semantics asof_join runs.
     scans 2 → 1 (audit); 1.13× at sf0.1, 1.34× at 100× events, identical
-    rows both scales (tools/ab_purchase_attribution.py)."""
+    rows both scales (0b5df52:tools/ab_purchase_attribution.py)."""
     from gohangout_spark.functions.joins import _asof_select
 
     ev = _events(spark, sf_dir)
@@ -5700,7 +5700,7 @@ def curation_funnel(spark, sf_dir):
     # clean survivors materialize (localCheckpoint — its own concurrent
     # job); wall becomes max(fit, clean) + score instead of
     # fit + (clean + score). Composition and rows are unchanged
-    # (identity-checked in tools/ab_funnel_overlap.py).
+    # (identity-checked in 843c7da:tools/ab_funnel_overlap.py).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -8598,7 +8598,7 @@ def kmv_distinct_users_q(spark, sf_dir):
     # kmv_table's pushed copy collapses and both consumers ride one
     # ReusedExchange: scans 2 → 1, RoundRobin 2 → 1 (audit), a wash at
     # sf0.1 and 1.24× at 100× events where the saved pass is a full
-    # corpus scan (tools/ab_kmv_shared.py).
+    # corpus scan (f6f40e4:tools/ab_kmv_shared.py).
     du = (
         ev.where(F.col("user_id").cast("string").isNotNull())
         .select("event_type", "user_id")

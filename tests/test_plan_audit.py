@@ -11,6 +11,7 @@ accidentally plans a theta join fails the shape test; a whitelisted query
 whose build side silently grows fails the bound test.
 """
 
+from gohangout_spark.plan_metrics import executed_plan, node_counts, node_metrics, walk
 from gohangout_spark.workload import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -61,51 +62,25 @@ BNLJ_OK = {
 }
 
 
-def _walk(node, visit):
-    """Generic JVM SparkPlan traversal that follows AQE wrappers
-    (AdaptiveSparkPlanExec.executedPlan, *QueryStageExec.plan)."""
-    name = node.getClass().getSimpleName()
-    visit(node, name)
-    if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), visit)
-        return
-    if name.endswith("QueryStageExec"):
-        _walk(node.plan(), visit)
-        return
-    for i in range(node.children().size()):
-        _walk(node.children().apply(i), visit)
-
-
 def _bnlj_broadcast_rows(df):
     """Execute df and return the numOutputRows metric of every
     BroadcastExchange feeding a BroadcastNestedLoopJoin build side."""
     df.collect()
-    sides = []
-
-    def find_joins(node, name):
-        if name == "BroadcastNestedLoopJoinExec":
-            build = node.buildSide().toString()
-            sides.append(node.right() if "Right" in build else node.left())
-
-    _walk(df._jdf.queryExecution().executedPlan(), find_joins)
+    sides = [
+        node.right() if "Right" in node.buildSide().toString() else node.left()
+        for node, name in walk(executed_plan(df))
+        if name == "BroadcastNestedLoopJoinExec"
+    ]
 
     counts = []
     for side in sides:
-        found = []
-
-        def read_metric(node, name):
-            if found:
-                return
+        for node, name in walk(side):
             if name == "BroadcastExchangeExec":
-                found.append(int(node.metrics().apply("numOutputRows").value()))
-            elif name == "ReusedExchangeExec":
-                found.append(
-                    int(node.child().metrics().apply("numOutputRows").value())
-                )
-
-        _walk(side, read_metric)
-        if found:
-            counts.append(found[0])
+                counts.append(node_metrics(node)["numOutputRows"])
+                break
+            if name == "ReusedExchangeExec":
+                counts.append(node_metrics(node.child())["numOutputRows"])
+                break
     return counts
 
 
@@ -161,13 +136,7 @@ def test_exchange_reuse_invariants(spark):
     for name, (min_reuse, max_gen) in sorted(EXCHANGE_REUSE.items()):
         df = QUERIES[name][0](spark, SF)
         df.collect()
-        counts = {"ReusedExchangeExec": 0, "GenerateExec": 0}
-
-        def visit(node, n):
-            if n in counts:
-                counts[n] += 1
-
-        _walk(df._jdf.queryExecution().executedPlan(), visit)
+        counts = node_counts(df)
         if counts["ReusedExchangeExec"] < min_reuse:
             bad[name] = f"ReusedExchange {counts['ReusedExchangeExec']} < {min_reuse}"
         if counts["GenerateExec"] > max_gen:

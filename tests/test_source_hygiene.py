@@ -1,11 +1,17 @@
-"""Every package module compiles with SyntaxWarning and DeprecationWarning
-raised as errors (e.g. an invalid ``\\s`` escape in a docstring), so the
-package imports cleanly under ``python -W error``."""
+"""Source hygiene without a Spark session: every package module compiles
+with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
+``\\s`` escape in a docstring), so the package imports cleanly under
+``python -W error``; the AQE-aware plan walk has one definition; the A/B
+runner's variant specs parse."""
 
+import importlib.util
 import pathlib
 import warnings
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "gohangout_spark"
+import pytest
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "gohangout_spark"
 
 
 def test_modules_compile_without_warnings():
@@ -19,3 +25,31 @@ def test_modules_compile_without_warnings():
             except SyntaxError as e:
                 failures.append(f"{path.relative_to(PKG)}:{e.lineno}: {e.msg}")
     assert not failures, failures
+
+
+def test_plan_walk_defined_once():
+    """Only plan_metrics.py follows the AQE wrappers; everything else walks
+    plans through it."""
+    allowed = {PKG / "plan_metrics.py", pathlib.Path(__file__).resolve()}
+    names = ("AdaptiveSparkPlanExec", "QueryStageExec")
+    offenders = [
+        str(path.relative_to(ROOT))
+        for d in ("gohangout_spark", "tests", "tools")
+        for path in sorted((ROOT / d).rglob("*.py"))
+        if path not in allowed and any(n in path.read_text(encoding="utf-8") for n in names)
+    ]
+    assert not offenders, offenders
+
+
+def test_ab_bench_spec_parser():
+    from gohangout_spark.workload import tpch_q6
+
+    spec = importlib.util.spec_from_file_location("ab_bench", ROOT / "tools" / "ab_bench.py")
+    ab_bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab_bench)
+    parse_spec = ab_bench.parse_spec
+    assert parse_spec("a=gohangout_spark.workload:tpch_q6") == ("a", tpch_q6)
+    for bad in ("gohangout_spark.workload:tpch_q6", "a=gohangout_spark.workload",
+                "=gohangout_spark.workload:tpch_q6", "a=:tpch_q6"):
+        with pytest.raises(ValueError, match="label=module:fn"):
+            parse_spec(bad)

@@ -6,12 +6,22 @@ times VARIANTS of a plan inside ONE Spark session, interleaved
 (A,B,A,B,...) with a JVM GC before each sample, and reports per-variant
 medians — machine drift hits both variants equally.
 
-Usage: a caller script registers variants as {name: fn(spark, sf_dir) -> DF}
-and calls run_ab(variants, rounds=5).
+Usage:
+
+    python tools/ab_bench.py [--rounds N] label=module:fn [label=module:fn ...]
+
+Each ``module:fn`` is imported and called as fn(spark, sf_dir) -> DataFrame,
+so a registry query is ``gohangout_spark.workload:<name>`` and a candidate
+plan shape is any importable function with that signature (``tools/`` is
+on the path when run as a script). Tables are read from
+$SPARK_GRAFT_SF_DIR. A caller may also import run_ab and pass
+{label: fn} directly.
 """
 
 from __future__ import annotations
 
+import argparse
+import importlib
 import json
 import os
 import statistics
@@ -49,3 +59,30 @@ def run_ab(variants: dict, rounds: int = 5, sf_dir: str | None = None, spark=Non
     }
     print(json.dumps(out))
     return out
+
+
+def parse_spec(spec: str):
+    """``label=module:fn`` -> (label, the imported fn)."""
+    label, eq, target = spec.partition("=")
+    module, colon, attr = target.partition(":")
+    if not (eq and colon and label and module and attr):
+        raise ValueError(f"variant spec {spec!r} is not label=module:fn")
+    return label, getattr(importlib.import_module(module), attr)
+
+
+def main():
+    ap = argparse.ArgumentParser(description="Interleaved A/B of DataFrame variants.")
+    ap.add_argument("--rounds", type=int, default=5)
+    ap.add_argument("variants", nargs="+", metavar="label=module:fn")
+    args = ap.parse_args()
+    try:
+        variants = dict(parse_spec(s) for s in args.variants)
+    except ValueError as e:
+        ap.error(str(e))
+    if len(variants) != len(args.variants):
+        ap.error("variant labels must be unique")
+    run_ab(variants, rounds=args.rounds)
+
+
+if __name__ == "__main__":
+    main()

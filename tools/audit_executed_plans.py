@@ -13,7 +13,21 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gohangout_spark import get_spark
+from gohangout_spark.plan_metrics import node_counts
 from gohangout_spark.workload import QUERIES
+
+OPERATORS = (
+    "FileSourceScanExec",
+    "GenerateExec",
+    "ReusedExchangeExec",
+    "ShuffleExchangeExec",
+    "BroadcastExchangeExec",
+    "ArrowEvalPythonExec",
+    "MapInPandasExec",
+    "SortMergeJoinExec",
+    "BroadcastNestedLoopJoinExec",
+    "CartesianProductExec",
+)
 
 
 def main():
@@ -27,27 +41,8 @@ def main():
             # collect (not noop-save) so AQE finalizes THIS DataFrame's own
             # QueryExecution; headline-query outputs are oracle-sized (small)
             df.collect()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            final = plan.split("== Initial Plan ==")[0]
-            counts = {
-                op: final.count(op)
-                for op in (
-                    "Scan parquet",
-                    "Generate explode",
-                    "ReusedExchange",
-                    "Exchange hashpartitioning",
-                    "Exchange RoundRobin",
-                    "BroadcastExchange",
-                    "ArrowEvalPython",
-                    "MapInPandas",
-                    "SortMergeJoin",
-                    "CartesianProduct",
-                )
-            }
-            # the noop save runs its own QueryExecution; df's own QE may
-            # be unexecuted (isFinalPlan=false) — note which we saw
-            finalized = "isFinalPlan=true" in plan
-            print(name, "final" if finalized else "STATIC", {k: v for k, v in counts.items() if v})
+            counts = node_counts(df)
+            print(name, {op: counts[op] for op in OPERATORS if counts[op]})
         except Exception as e:  # noqa: BLE001
             print(name, "ERROR", str(e)[:200])
         sys.stdout.flush()

@@ -29,19 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from gohangout_spark import get_spark
-
-
-def _walk(node, visit):
-    name = node.getClass().getSimpleName()
-    visit(node, name)
-    if name == "AdaptiveSparkPlanExec":
-        _walk(node.executedPlan(), visit)
-        return
-    if name.endswith("QueryStageExec"):
-        _walk(node.plan(), visit)
-        return
-    for i in range(node.children().size()):
-        _walk(node.children().apply(i), visit)
+from gohangout_spark.plan_metrics import executed_plan, node_metrics, walk
 
 
 def spill_of(df, reduce_big: bool):
@@ -52,22 +40,12 @@ def spill_of(df, reduce_big: bool):
     df.collect()
     wall = time.time() - t0
     spill = {"total_spill_bytes": 0, "peak_mem_max": 0}
-
-    def visit(node, name):
-        try:
-            it = node.metrics().iterator()
-        except Exception:
-            return
-        while it.hasNext():
-            kv = it.next()
-            mname = kv._1()
-            val = int(kv._2().value())
+    for node, _ in walk(executed_plan(df)):
+        for mname, val in node_metrics(node).items():
             if "spill" in mname.lower() and val > 0:
                 spill["total_spill_bytes"] += val
             if "peak" in mname.lower():
                 spill["peak_mem_max"] = max(spill["peak_mem_max"], val)
-
-    _walk(df._jdf.queryExecution().executedPlan(), visit)
     return wall, spill
 
 
