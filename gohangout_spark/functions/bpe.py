@@ -23,6 +23,7 @@ a 100 TB corpus:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -135,14 +136,12 @@ def bpe_encode_udf(merges: list[tuple[str, str]]):
     training applies merges in discovery order, which this reproduces:
     an earlier merge always outranks a later one). Arrow-batched; the
     merge-rank dict broadcasts with the serialized UDF."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     ranks = {tuple(m): i for i, m in enumerate(merges)}
 
-    # explicit SCALAR type: postponed annotations stringify inferred hints
-    @pandas_udf("array<string>", PandasUDFType.SCALAR)
-    def _enc(text):
+    @pandas_udf("array<string>")
+    def _enc(text: pd.Series) -> pd.Series:
         import re
 
         out = []

@@ -1104,14 +1104,12 @@ def remove_dup_spans_pandas(
     """
     import re as _re
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     joined = _dup_span_starts(docs, w=w, text_col=text_col, id_col=id_col)
 
-    # explicit SCALAR type: the module's postponed annotations would leave
-    # the decorator unable to infer the signature from stringified hints
-    @pandas_udf("string", PandasUDFType.SCALAR)
-    def _rewrite(text, starts):
+    @pandas_udf("string")
+    def _rewrite(text: pd.Series, starts: pd.Series) -> pd.Series:
         out = []
         for t, st in zip(text, starts):
             toks = [x for x in _re.split(r"[^a-z0-9]+", (t or "").lower()) if x]

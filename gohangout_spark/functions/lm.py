@@ -27,6 +27,7 @@ DuckDB SQL and hash-matches).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -328,16 +329,15 @@ def perplexity_pandas(
         raise ValueError(f"model must have {V * V} entries, got {len(model)}")
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     table = np.asarray(model, dtype=np.float64)
     lut = np.full(256, -1, dtype=np.int16)
     for idx, ch in enumerate(ALPHABET):
         lut[ord(ch)] = idx
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def _ppl(norm):
+    @pandas_udf("double")
+    def _ppl(norm: pd.Series) -> pd.Series:
         n = len(norm)
         out = np.full(n, np.nan)
         strs = norm.fillna("").to_numpy()

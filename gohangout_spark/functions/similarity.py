@@ -1212,11 +1212,10 @@ def hashed_embeddings_pandas(
     import hashlib as _hashlib
     import re as _re
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit SCALAR type: postponed annotations stringify inferred hints
-    @pandas_udf("array<double>", PandasUDFType.SCALAR)
-    def _vec(text):
+    @pandas_udf("array<double>")
+    def _vec(text: pd.Series) -> pd.Series:
         out = []
         suffix = f"-{seed}".encode()
         for t in text:

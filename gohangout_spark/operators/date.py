@@ -12,6 +12,8 @@ compile time by expr.dateformat)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ from gohangout_spark.operators.base import Filter, FilterEffect
 
 _NUM_RE = r"^-?\d{1,11}(\.\d+)?$"   # seconds epoch; 11 digits ≈ year 5138
 _MS_RE = r"^-?\d{1,14}$"
+_QUOTED_RE = re.compile(r"'[^']*'")  # quoted literal text in a Java pattern
 
 _RFC3339_PATTERNS = [
     "yyyy-MM-dd'T'HH:mm:ssXXX",
@@ -57,7 +60,11 @@ class Date(Filter):
         (Go ParseInLocation only uses location when the layout has no zone)."""
         if not self.location:
             return parsed
-        if java_pattern is None or any(t in java_pattern for t in ("X", "z", "Z", "O")):
+        if java_pattern is None:
+            return parsed
+        # quoted text is literal: Go's bare `Z` becomes 'Z', not a zone
+        letters = _QUOTED_RE.sub("", java_pattern)
+        if any(t in letters for t in ("X", "z", "Z", "O")):
             return parsed
         return F.to_utc_timestamp(parsed, self.location)
 

@@ -39,6 +39,15 @@ class Sink:
         self.write_batch(df)
 
 
+class _BulkSink(Sink):
+    """A sink that drains through ``bulk_send_lines`` (Elasticsearch,
+    ClickHouse-HTTP, InfluxDB). A streaming micro-batch is flagged as such,
+    so the engine may send a small one from the driver."""
+
+    def write_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
+        self.write_batch(df, micro_batch=True)
+
+
 class StdoutSink(Sink):
     """JSON-line print (stdout_output.go:40-46)."""
 
@@ -268,13 +277,14 @@ class RRHostSelector:
         self.weight[self.index] = min(self.weight[self.index] + 1, self.init_weight)
 
 
-class ElasticsearchSink(Sink):
+class ElasticsearchSink(_BulkSink):
     """Bulk-index via the _bulk API. The action+source NDJSON lines are built
     IN-PLAN (rendered index / id / routing / action — index patterns like
     'web-%{appid}-%{+2006-01-02}' compile to concat/date_format exprs exactly
     like elasticsearch_output.go:49-92); executors POST partition-wise through
     a pluggable transport, so there is no driver bottleneck and no Python
-    per-row loop for the encoding itself.
+    per-row loop for the encoding itself. A streaming micro-batch that fits
+    one bulk request is sent from the driver instead (``bulk_send_lines``).
 
     Bulk engine parity (output/bulk_http.go:16-20,126-143): flush triggers on
     buffered BYTES (``bulk_size``, default 15 MB), action COUNT
@@ -415,7 +425,7 @@ class ElasticsearchSink(Sink):
             source = F.coalesce(raw, source)
         return df.select(F.concat(meta, F.lit("\n"), source).alias("line"))
 
-    def write_batch(self, df: DataFrame) -> None:
+    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
         self.maybe_resniff()
         bulk_send_lines(
             self.bulk_lines(df),
@@ -434,6 +444,7 @@ class ElasticsearchSink(Sink):
             retries=self.retries,
             no_host_wait=self.no_host_wait,
             compress=self.compress,
+            micro_batch=micro_batch,
         )
 
 
@@ -484,12 +495,18 @@ def bulk_send_lines(
     compress: bool = True,
     host_ok=None,
     get_retry_lines=None,
+    micro_batch: bool = False,
 ) -> None:
     """The shared HTTP bulk engine (output/bulk_http.go:73-312) as a
     partition-wise sender: flush on action count / buffered bytes / elapsed
     interval; weighted-RR host selection with decay/recovery
-    (RRHostSelector); bounded retries. Used by the ES and InfluxDB sinks —
-    the same code path the reference shares between them.
+    (RRHostSelector); bounded retries. Used by the ES, ClickHouse-HTTP and
+    InfluxDB sinks — the same code path the reference shares between them.
+
+    A streaming ``micro_batch`` that fits one bulk request
+    (``_driver_lines``) goes through the same sender on the driver, as one
+    request, instead of one Python worker task per partition; anything
+    larger, and every batch job, drains partition-wise.
 
     The interval trigger runs on a ticker thread (the reference's ticker
     goroutine, bulk_http.go:92-101) so a stalled upstream iterator cannot
@@ -590,7 +607,26 @@ def bulk_send_lines(
             stop.set()
             t.join(2.0)
 
-    lines.foreachPartition(send_partition)
+    small = _driver_lines(lines, bulk_actions) if micro_batch else None
+    if small is None:
+        lines.foreachPartition(send_partition)
+    elif small:
+        send_partition(small)
+
+
+def _driver_lines(lines: DataFrame, bulk_actions: int) -> list | None:
+    """A micro-batch's rows, collected to the driver, when it has no more
+    rows than ``bulk_actions``; else None. The reference buffers that many
+    docs in process (bulk_http.go:16-20), so a small trigger costs one count
+    and one collect over the frame the pipeline persisted per micro-batch,
+    both JVM-only jobs. A batch job is never counted: its frame is not
+    persisted, and the count would recompute the whole chain."""
+    # counted on the physical plan's RDD: one stage, where Dataset.count
+    # adds a shuffle and a final aggregation stage
+    n = lines._jdf.queryExecution().toRdd().count()
+    if n > bulk_actions:
+        return None
+    return lines.collect() if n else []
 
 
 def _urllib_transport(url: str, payload: bytes):
@@ -618,7 +654,7 @@ CH_DEFAULTS = {
 }
 
 
-class ClickHouseSink(Sink):
+class ClickHouseSink(_BulkSink):
     """DESC-driven schema coercion (clickhouse_output.go:65-153,156-248):
     the table's column→type map comes from a live ``DESC TABLE`` against the
     ClickHouse HTTP interface (no JDBC jar needed) — or a hand-supplied
@@ -776,7 +812,7 @@ class ClickHouseSink(Sink):
             cols.append(c.alias(name))
         return df.select(*cols)
 
-    def write_batch(self, df: DataFrame) -> None:
+    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
         out = self.projection(df)
         hosts = self.conf.get("hosts")
         if hosts:
@@ -799,6 +835,7 @@ class ClickHouseSink(Sink):
                 flush_interval=float(self.conf.get("flush_interval", 30.0)),
                 retries=int(self.conf.get("retry", 3)),
                 compress=bool(self.conf.get("compress", True)),
+                micro_batch=micro_batch,
             )
             return
         url = self.conf.get("jdbc_url")
@@ -838,7 +875,7 @@ def _ch_default(spark_type: str):
     return ""
 
 
-class InfluxdbSink(Sink):
+class InfluxdbSink(_BulkSink):
     """Line-protocol encoding as one Column expression
     (influxdb_output.go:25-64): measurement,tag=v field=v ns-timestamp."""
 
@@ -892,7 +929,7 @@ class InfluxdbSink(Sink):
         super().__init__(conf)
         self.transport = transport or _urllib_transport
 
-    def write_batch(self, df: DataFrame) -> None:
+    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
         """POST line-protocol batches to /write?db=… through the shared
         bulk engine (influxdb_output.go:180-210 wires the same
         HTTPBulkProcessor the ES output uses); InfluxDB answers 204 on
@@ -912,6 +949,7 @@ class InfluxdbSink(Sink):
             retries=int(conf.get("retry", 3)),
             no_host_wait=float(conf.get("no_host_wait", 30)),
             compress=bool(conf.get("compress", False)),
+            micro_batch=micro_batch,
         )
 
 

@@ -10,6 +10,7 @@ timezone representation differences.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from gohangout_spark.functions import psl as _psl
@@ -3435,12 +3436,12 @@ def udaf_geomean(spark, sf_dir):
     recommend it for algebraic aggregates (use event_value_geomean's
     closed form)."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG (the module's postponed annotations would leave
-    # the decorator unable to infer the aggregate signature)
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    # Series -> scalar hints make this a grouped aggregate; the module's
+    # postponed annotations resolve against its top-level pandas import
+    @pandas_udf("double")
+    def geomean(v: pd.Series) -> float:
         return float(np.exp(np.log(v.to_numpy() + 1.0).mean()))
 
     ev = _events(spark, sf_dir)
@@ -4882,17 +4883,13 @@ def multimodal_video_frames(spark, sf_dir):
         make_rawvideo_media_table,
         sample_video_frames,
     )
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     media = make_rawvideo_media_table(spark, n=24)
     frames = sample_video_frames(media, every_n=2, codec=RawVideoCodec())
 
-    # explicit SCALAR type: the module's postponed annotations would
-    # stringify the type hints the decorator needs (same note as
-    # event_value_geomean)
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def mean_r(frame):
+    @pandas_udf("double")
+    def mean_r(frame: pd.Series) -> pd.Series:
         ppm = PpmCodec()
         return pd.Series(
             [float(ppm.decode(bytes(b))[:, :, 0].mean()) for b in frame]
@@ -5703,8 +5700,15 @@ def curation_funnel(spark, sf_dir):
     # (identity-checked in 843c7da:tools/ab_funnel_overlap.py).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the fit thread inherits this thread's local properties (job group,
+    # description, scheduler pool) and the session's job tags
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fit = pool.submit(fit_char_bigram_lm, docs.where(F.col("lang") == "en"))
+        fit = pool.submit(
+            inheritable_thread_target(spark)(fit_char_bigram_lm),
+            docs.where(F.col("lang") == "en"),
+        )
         clean_m = clean.select("doc_id", "text").localCheckpoint()
         model = fit.result()
     scored = perplexity_pandas(clean_m, model)

@@ -509,6 +509,24 @@ class TestReviewFixes:
         # epoch is absolute: location must NOT shift it
         assert got["parsed"] == dt.datetime(2024, 5, 1, 12, 0, 0)
 
+    def test_date_location_applies_to_quoted_literal_letters(self, spark):
+        """Go's bare `Z` is a literal ('Z' in the Java pattern), so the
+        layout has no zone and the string is wall time in `location`; only
+        the Z07:00 form is an offset."""
+        import datetime as dt
+
+        df = spark.createDataFrame([
+            Row(name="literal", t="2023-01-01T10:00:00Z"),
+            Row(name="offset", t="2023-01-01T10:00:00+00:00"),
+        ])
+        box = FilterBox(Date(
+            "t", ["2006-01-02T15:04:05Z", "2006-01-02T15:04:05Z07:00"],
+            target="parsed", location="Asia/Shanghai",
+        ))
+        got = rows_by_name(box.apply(df))
+        assert got["literal"]["parsed"] == dt.datetime(2023, 1, 1, 2, 0, 0)
+        assert got["offset"]["parsed"] == dt.datetime(2023, 1, 1, 10, 0, 0)
+
     def test_translate_bigdict_honors_guard_and_failtag(self, spark):
         big = {str(k): f"v{k}" for k in range(20_000)}
         df = spark.createDataFrame(

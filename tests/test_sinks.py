@@ -848,6 +848,137 @@ outputs:
         assert back.select("src").distinct().count() == 2
 
 
+class TestMicroBatchDrain:
+    """Which side of ``bulk_send_lines`` a batch takes: a streaming
+    micro-batch with no more rows than ``bulk_actions`` is one request sent
+    from the driver; a larger one, and every batch job, drains
+    partition-wise."""
+
+    @staticmethod
+    def _source(spark, tmp_path, n_rows, n_files):
+        """n_rows ids spread over n_files parquet files (one partition each)."""
+        src = str(tmp_path / "src")
+        spark.range(n_rows).selectExpr(
+            "id", "CAST(id AS STRING) AS body"
+        ).repartition(n_files, "id").write.parquet(src)
+        return src
+
+    @staticmethod
+    def _transport(cap, status=200):
+        """Records each request body as a file (the sender may run on the
+        driver or in a Python worker)."""
+        import os
+
+        os.makedirs(cap, exist_ok=True)
+
+        def transport(url, payload, _cap=cap, _status=status):
+            import os
+            import uuid
+
+            with open(os.path.join(_cap, uuid.uuid4().hex), "w") as f:
+                f.write(payload.decode())
+            if _status != 200:
+                return _status, "unavailable"
+            return 200, '{"errors":false}'
+
+        return transport
+
+    @staticmethod
+    def _requests(cap) -> list[list[int]]:
+        """Document ids per request (each doc is a meta line + a source line)."""
+        import os
+
+        out = []
+        for name in os.listdir(cap):
+            lines = open(os.path.join(cap, name)).read().strip().split("\n")
+            out.append([json.loads(src)["id"] for src in lines[1::2]])
+        return out
+
+    @staticmethod
+    def _pipeline(src, transport, **es_conf):
+        from gohangout_spark.pipeline import Pipeline
+
+        conf = {
+            "inputs": [{"File": {"path": src, "format": "parquet"}}],
+            "filters": [],
+            "timestamp_field": "ts",
+            "outputs": [{"Elasticsearch": {
+                "hosts": ["http://es1:9200"], "index": "x", "compress": False,
+                **es_conf,
+            }}],
+        }
+        return Pipeline.from_config(conf, sink_overrides={
+            "Elasticsearch": lambda c: ElasticsearchSink(c, transport=transport),
+        })
+
+    def _stream(self, spark, pipe, ck):
+        (q,) = pipe.run_streaming(spark, checkpoint=ck)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def test_small_micro_batch_is_one_request(self, spark, tmp_path):
+        src = self._source(spark, tmp_path, 12, 4)
+        assert spark.read.parquet(src).rdd.getNumPartitions() > 1
+        cap = str(tmp_path / "calls")
+        pipe = self._pipeline(src, self._transport(cap))
+        self._stream(spark, pipe, str(tmp_path / "ck"))
+        reqs = self._requests(cap)
+        assert len(reqs) == 1
+        assert sorted(reqs[0]) == list(range(12))
+
+    def test_large_micro_batch_drains_partition_wise(self, spark, tmp_path):
+        src = self._source(spark, tmp_path, 10, 2)
+        per_part = sorted(
+            len(p) for p in spark.read.parquet(src).rdd.glom().collect()
+        )
+        cap = str(tmp_path / "calls")
+        pipe = self._pipeline(src, self._transport(cap), bulk_actions=2)
+        self._stream(spark, pipe, str(tmp_path / "ck"))
+        reqs = self._requests(cap)
+        # each partition flushes every 2 docs, plus its remainder
+        assert len(reqs) == sum((n + 1) // 2 for n in per_part)
+        assert all(len(r) <= 2 for r in reqs)
+        assert sorted(i for r in reqs for i in r) == list(range(10))
+
+        # a batch job never takes the driver drain, however small
+        batch_cap = str(tmp_path / "batch_calls")
+        self._pipeline(src, self._transport(batch_cap)).run_batch(spark)
+        batch_reqs = self._requests(batch_cap)
+        assert len(batch_reqs) == len(per_part)
+        assert sorted(i for r in batch_reqs for i in r) == list(range(10))
+
+    def test_retry_exhaustion_fails_query_and_restart_is_exactly_once(
+        self, spark, tmp_path
+    ):
+        """Every try of the epoch answers 5xx: the query terminates with the
+        sender's error. A restart from the same checkpoint with a healthy
+        receiver replays the epoch, and each document arrives once."""
+        from pyspark.errors import StreamingQueryException
+
+        src = self._source(spark, tmp_path, 12, 4)
+        ck = str(tmp_path / "ck")
+        down = str(tmp_path / "down")
+        pipe = self._pipeline(
+            src, self._transport(down, status=503), retry=1, no_host_wait=0
+        )
+        (q,) = pipe.run_streaming(spark, checkpoint=ck)
+        try:
+            with pytest.raises(StreamingQueryException):
+                q.processAllAvailable()
+            assert not q.isActive
+            assert "bulk failed after 2 tries" in str(q.exception())
+        finally:
+            q.stop()
+        assert len(self._requests(down)) == 2  # one request, retried once
+
+        up = str(tmp_path / "up")
+        self._stream(spark, self._pipeline(src, self._transport(up)), ck)
+        reqs = self._requests(up)
+        assert sorted(i for r in reqs for i in r) == list(range(12))
+
+
 class FakeClickHouseHTTP:
     """In-process HTTP server speaking the ClickHouse HTTP interface's
     wire shape (VERDICT r7 #7): serves ``DESC TABLE <t> FORMAT JSON``

@@ -1,8 +1,9 @@
 """Source hygiene without a Spark session: every package module compiles
 with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
 ``\\s`` escape in a docstring), so the package imports cleanly under
-``python -W error``; the AQE-aware plan walk has one definition; the A/B
-runner's variant specs parse."""
+``python -W error``; the AQE-aware plan walk has one definition; no
+module uses the deprecated ``PandasUDFType``; the A/B runner's variant
+specs parse."""
 
 import importlib.util
 import pathlib
@@ -37,6 +38,17 @@ def test_plan_walk_defined_once():
         for d in ("gohangout_spark", "tests", "tools")
         for path in sorted((ROOT / d).rglob("*.py"))
         if path not in allowed and any(n in path.read_text(encoding="utf-8") for n in names)
+    ]
+    assert not offenders, offenders
+
+
+def test_no_deprecated_pandas_udf_type():
+    """pandas UDFs take their kind from type hints; the deprecated
+    PandasUDFType argument warns on every call."""
+    offenders = [
+        str(path.relative_to(ROOT))
+        for path in sorted(PKG.rglob("*.py"))
+        if "PandasUDFType" in path.read_text(encoding="utf-8")
     ]
     assert not offenders, offenders
 
