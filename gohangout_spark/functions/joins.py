@@ -84,7 +84,7 @@ def asof_join(
     )
     l2 = left.withColumn("__ats", F.col(left_ts)).withColumn("__r", F.lit(0))
     u = l2.unionByName(r2, allowMissingColumns=True)
-    return _asof_select(
+    return asof_select(
         u,
         keys,
         list(left.columns),
@@ -97,7 +97,7 @@ def asof_join(
     )
 
 
-def _asof_select(
+def asof_select(
     u: DataFrame,
     keys: list[str],
     left_columns: list[str],
@@ -119,7 +119,15 @@ def _asof_select(
     still run the exact asof semantics from this single implementation.
     Right rows with a NULL key or NULL ``__ats`` must already be dropped
     (asof_join does this pre-union; single-source callers filter them in
-    place)."""
+    place). ``__pay`` may omit ``right_ts_out`` only when
+    ``tolerance_seconds`` is None; otherwise it raises ValueError."""
+    if tolerance_seconds is not None and right_ts_out not in (
+        u.schema["__pay"].dataType.fieldNames()
+    ):
+        raise ValueError(
+            f"asof_select: tolerance_seconds needs {right_ts_out!r} in the "
+            "__pay struct"
+        )
     ts_order = F.col("__ats").asc() if direction == "backward" else F.col("__ats").desc()
     # at equal __ats the right row must precede the left row so the window
     # sees it (inclusive match) — __r desc does that for both directions

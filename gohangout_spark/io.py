@@ -65,19 +65,32 @@ def _nanos_columns(path: str) -> list[str]:
     return out
 
 
+def read_parquet(spark: SparkSession, path: str, reader=None) -> DataFrame:
+    """Parquet read that tolerates INT64 TIMESTAMP(NANOS) columns: they load
+    as longs and become microsecond timestamps by integer division.
+    ``reader`` is a configured ``DataFrameReader`` (schema, options), by
+    default ``spark.read``. The footer probe is local and best-effort: a
+    path pyarrow cannot open (a glob, a remote store) reads unconverted."""
+    import pyarrow as pa
+
+    try:
+        nanos = _nanos_columns(path)
+    except (OSError, pa.ArrowException):
+        nanos = []
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = (reader or spark.read).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # self-sufficient under a FOREIGN SparkSession (the driver's): timestamps
     # must render/compare in UTC to match the DuckDB oracle regardless of the
     # session's default timezone
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos = _nanos_columns(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def rebalance_for_compute(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -39,15 +39,6 @@ class Sink:
         self.write_batch(df)
 
 
-class _BulkSink(Sink):
-    """A sink that drains through ``bulk_send_lines`` (Elasticsearch,
-    ClickHouse-HTTP, InfluxDB). A streaming micro-batch is flagged as such,
-    so the engine may send a small one from the driver."""
-
-    def write_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
-        self.write_batch(df, micro_batch=True)
-
-
 class StdoutSink(Sink):
     """JSON-line print (stdout_output.go:40-46)."""
 
@@ -160,6 +151,7 @@ class KafkaSink(Sink):
         from gohangout_spark.sources.kafka_wire import (
             ClusterWireClient,
             partition_for_key,
+            pop_sasl,
         )
 
         topic = self.conf["topic"]
@@ -167,18 +159,16 @@ class KafkaSink(Sink):
         rows = payload.collect()  # dev tier: bounded by contract
         # leader-routing client: `brokers` may be a comma list, and a
         # node death mid-write costs a metadata refresh, not the batch
-        producer = self.conf.get("producer_settings") or {}
-        nested_sasl = producer.get("sasl") or {}
+        producer = dict(self.conf.get("producer_settings") or {})
+        _, sasl_user, sasl_pw = pop_sasl(producer)
         with ClusterWireClient(
             self.conf["brokers"],
             message_format=self.conf.get("wire_format", "v0"),
             compression=self.conf.get(
                 "compression.type", producer.get("compression.type")
             ),
-            sasl_user=producer.get("sasl.user", nested_sasl.get("user")),
-            sasl_password=producer.get(
-                "sasl.password", nested_sasl.get("password")
-            ),
+            sasl_user=sasl_user,
+            sasl_password=sasl_pw,
         ) as client:
             parts = client.metadata([topic]).get(topic) or [0]
             by_part: dict[int, list] = {}
@@ -277,6 +267,160 @@ class RRHostSelector:
         self.weight[self.index] = min(self.weight[self.index] + 1, self.init_weight)
 
 
+class _BulkSink(Sink):
+    """The ES, ClickHouse-HTTP and InfluxDB sinks share one bulk engine, as
+    the reference's outputs share one HTTPBulkProcessor. Its settings are
+    read here, once; a subclass supplies ``lines(df)`` (one string column
+    ``line``), ``hosts``, ``endpoint``, the static ``success(status, body)``
+    verdict and, optionally, the static per-item ``retry_lines(body, buf)``
+    verdicts."""
+
+    # gzip on by default like the reference (elasticsearch_output.go:305-309)
+    COMPRESS = True
+    retry_lines = None
+
+    def __init__(self, conf=None, transport=None):
+        super().__init__(conf)
+        self.transport = transport or _urllib_transport
+        conf = self.conf
+        self.bulk_actions = int(conf.get("bulk_actions", 5000))
+        self.bulk_size = int(conf.get("bulk_size", 15 * 1024 * 1024))
+        self.flush_interval = float(conf.get("flush_interval", 30))
+        self.retries = int(conf.get("retry", 3))
+        # the reference waits 30 s when every host's weight is exhausted
+        # (bulk_http.go:158-160); tests shrink this
+        self.no_host_wait = float(conf.get("no_host_wait", 30))
+        self.compress = bool(conf.get("compress", self.COMPRESS))
+
+    def write_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
+        self.write_batch(df, micro_batch=True)
+
+    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
+        self.bulk_send_lines(self.lines(df), micro_batch)
+
+    def bulk_send_lines(self, lines: DataFrame, micro_batch: bool) -> None:
+        """The shared HTTP bulk engine (output/bulk_http.go:73-312) as a
+        partition-wise sender: flush on action count / buffered bytes /
+        elapsed interval; weighted-RR host selection with decay/recovery
+        (RRHostSelector); bounded retries.
+
+        A streaming ``micro_batch`` that fits one bulk request
+        (``_driver_lines``) goes through the same sender on the driver, as
+        one request, instead of one Python worker task per partition;
+        anything larger, and every batch job, drains partition-wise.
+
+        The interval trigger runs on a ticker thread (the reference's ticker
+        goroutine, bulk_http.go:92-101) so a stalled upstream iterator
+        cannot hold buffered docs past ``flush_interval``. HOST health is
+        kept apart from DOCUMENT outcomes: only a transport/HTTP failure (no
+        2xx) decays the host weight (HostSelector.ReduceWeight is called on
+        request failure only); a 2xx that ``success`` rejects, e.g. ES
+        ``"errors":true``, is retried WITHOUT punishing the healthy host,
+        re-bulking only the lines ``retry_lines(body, buf)`` returns when
+        the sink has it."""
+        # the partition sender captures plain values, never the sink
+        hosts, transport, endpoint = self.hosts, self.transport, self.endpoint
+        success, retry_lines = self.success, self.retry_lines
+        bulk_actions, bulk_size, flush_interval = (
+            self.bulk_actions, self.bulk_size, self.flush_interval
+        )
+        retries, no_host_wait, compress = self.retries, self.no_host_wait, self.compress
+
+        def send_partition(it):
+            import threading
+            import time as _time
+
+            selector = RRHostSelector(hosts)
+            buf: list[str] = []
+            state = {"bytes": 0, "first_ts": None}
+            lock = threading.Lock()
+
+            def flush_locked():
+                if not buf:
+                    return
+
+                def encode():
+                    p = ("\n".join(buf) + "\n").encode()
+                    if compress:
+                        import gzip
+
+                        p = gzip.compress(p)
+                    return p
+
+                payload = encode()
+                last = None
+                for _attempt in range(retries + 1):
+                    host = selector.next()
+                    if host is None:
+                        # all hosts exhausted: weights were reset, wait then
+                        # pick again (bulk_http.go:157-161)
+                        _time.sleep(no_host_wait)
+                        host = selector.next()
+                        if host is None:
+                            continue
+                    status, body = transport(host.rstrip("/") + endpoint, payload)
+                    if success(status, body):
+                        selector.add_weight()
+                        buf.clear()
+                        state["bytes"] = 0
+                        state["first_ts"] = None
+                        return
+                    if 200 <= status < 300:
+                        # doc-level failure on a healthy host: no weight decay
+                        selector.add_weight()
+                        if retry_lines is not None:
+                            subset = retry_lines(body, list(buf))
+                            if subset is not None:
+                                # per-item verdicts: re-bulk only the retryable
+                                # docs (429/5xx); the rest were logged+dropped
+                                buf[:] = subset
+                                if not buf:
+                                    state["bytes"] = 0
+                                    state["first_ts"] = None
+                                    return
+                                payload = encode()
+                    else:
+                        selector.reduce_weight()
+                    last = (status, body[:500])
+                raise RuntimeError(f"bulk failed after {retries + 1} tries: {last}")
+
+            stop = threading.Event()
+
+            def ticker():
+                while not stop.wait(min(flush_interval, 1.0)):
+                    with lock:
+                        if (
+                            state["first_ts"] is not None
+                            and _time.monotonic() - state["first_ts"] >= flush_interval
+                        ):
+                            flush_locked()
+
+            t = threading.Thread(target=ticker, daemon=True)
+            t.start()
+            try:
+                for row in it:
+                    if row["line"] is None:
+                        continue
+                    with lock:
+                        buf.append(row["line"])
+                        state["bytes"] += len(row["line"]) + 1
+                        if state["first_ts"] is None:
+                            state["first_ts"] = _time.monotonic()
+                        if len(buf) >= bulk_actions or state["bytes"] >= bulk_size:
+                            flush_locked()
+                with lock:
+                    flush_locked()
+            finally:
+                stop.set()
+                t.join(2.0)
+
+        small = _driver_lines(lines, bulk_actions) if micro_batch else None
+        if small is None:
+            lines.foreachPartition(send_partition)
+        elif small:
+            send_partition(small)
+
+
 class ElasticsearchSink(_BulkSink):
     """Bulk-index via the _bulk API. The action+source NDJSON lines are built
     IN-PLAN (rendered index / id / routing / action — index patterns like
@@ -298,20 +442,12 @@ class ElasticsearchSink(_BulkSink):
     Retry-on-429/5xx per bulk request mirrors :133-203.
     """
 
+    endpoint = "/_bulk"
+
     def __init__(self, conf=None, transport=None):
-        super().__init__(conf)
+        super().__init__(conf, transport)
         self.seed_hosts = list(self.conf.get("hosts") or ["http://localhost:9200"])
         self.hosts = list(self.seed_hosts)
-        self.transport = transport or _urllib_transport
-        self.bulk_actions = int(self.conf.get("bulk_actions", 5000))
-        self.bulk_size = int(self.conf.get("bulk_size", 15 * 1024 * 1024))
-        self.flush_interval = float(self.conf.get("flush_interval", 30))
-        self.retries = int(self.conf.get("retry", 3))
-        # reference waits 30 s when every host's weight is exhausted
-        # (bulk_http.go:158-160); tests shrink this
-        self.no_host_wait = float(self.conf.get("no_host_wait", 30))
-        # gzip on by default like the reference (elasticsearch_output.go:305-309)
-        self.compress = bool(self.conf.get("compress", True))
         # node sniffing (elasticsearch_output.go:356-387,410-498): discover
         # live data nodes from /_nodes/_all/http, optionally filtered by a
         # condition-DSL `match` over each node's info map; refreshed lazily
@@ -425,193 +561,51 @@ class ElasticsearchSink(_BulkSink):
             source = F.coalesce(raw, source)
         return df.select(F.concat(meta, F.lit("\n"), source).alias("line"))
 
+    lines = bulk_lines
+
+    @staticmethod
+    def success(status: int, body: str) -> bool:
+        # fast path: "errors":false substring scan skips the JSON decode
+        # (elasticsearch_output.go:133-139, the "90%+ scenes" note);
+        # partial failures go through the retry_lines per-item verdicts
+        return status < 300 and '"errors":false' in body.replace(" ", "")
+
+    @staticmethod
+    def retry_lines(body: str, buf: list[str]) -> list[str] | None:
+        """Per-item bulk verdicts (elasticsearch_output.go:134-179): item status
+        429 or >= 500 → re-bulk that doc; other failed statuses (mapping errors
+        etc.) are logged and dropped; an unparseable response drops the batch
+        ("will NOT retry", :143-144). items[i] aligns with buf[i] — each buffered
+        line is one action+source pair."""
+        import json
+        import logging
+
+        log = logging.getLogger("gohangout_spark.sinks.es")
+        try:
+            items = json.loads(body)["items"]
+            if len(items) != len(buf):
+                raise ValueError(f"{len(items)} items for {len(buf)} actions")
+            retry: list[str] = []
+            for item, line in zip(items, buf):
+                result = next(iter(item.values()))  # {"index": {...}} etc.
+                status = int(result.get("status", 200))
+                if status < 300:
+                    continue
+                if status == 429 or status >= 500:
+                    retry.append(line)
+                else:
+                    log.warning("dropping failed doc (status %s): %.200s", status, line)
+            return retry
+        except (ValueError, KeyError, TypeError, AttributeError, StopIteration) as e:
+            # any structural surprise (null items, non-dict entries): drop the
+            # batch like the reference, never crash the Spark task into a
+            # partition-level re-send of already-indexed docs
+            log.error("could not parse bulk response (%s); will NOT retry", e)
+            return []
+
     def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
         self.maybe_resniff()
-        bulk_send_lines(
-            self.bulk_lines(df),
-            hosts=self.hosts,
-            transport=self.transport,
-            endpoint="/_bulk",
-            # fast path: "errors":false substring scan skips the JSON decode
-            # (elasticsearch_output.go:133-139, the "90%+ scenes" note);
-            # partial failures go through _es_retry_lines per-item verdicts
-            success=lambda status, body: status < 300
-            and '"errors":false' in body.replace(" ", ""),
-            get_retry_lines=_es_retry_lines,
-            bulk_actions=self.bulk_actions,
-            bulk_size=self.bulk_size,
-            flush_interval=self.flush_interval,
-            retries=self.retries,
-            no_host_wait=self.no_host_wait,
-            compress=self.compress,
-            micro_batch=micro_batch,
-        )
-
-
-def _es_retry_lines(body: str, buf: list[str]) -> list[str] | None:
-    """Per-item bulk verdicts (elasticsearch_output.go:134-179): item status
-    429 or >= 500 → re-bulk that doc; other failed statuses (mapping errors
-    etc.) are logged and dropped; an unparseable response drops the batch
-    ("will NOT retry", :143-144). items[i] aligns with buf[i] — each buffered
-    line is one action+source pair."""
-    import json
-    import logging
-
-    log = logging.getLogger("gohangout_spark.sinks.es")
-    try:
-        items = json.loads(body)["items"]
-        if len(items) != len(buf):
-            raise ValueError(f"{len(items)} items for {len(buf)} actions")
-        retry: list[str] = []
-        for item, line in zip(items, buf):
-            result = next(iter(item.values()))  # {"index": {...}} etc.
-            status = int(result.get("status", 200))
-            if status < 300:
-                continue
-            if status == 429 or status >= 500:
-                retry.append(line)
-            else:
-                log.warning("dropping failed doc (status %s): %.200s", status, line)
-        return retry
-    except (ValueError, KeyError, TypeError, AttributeError, StopIteration) as e:
-        # any structural surprise (null items, non-dict entries): drop the
-        # batch like the reference, never crash the Spark task into a
-        # partition-level re-send of already-indexed docs
-        log.error("could not parse bulk response (%s); will NOT retry", e)
-        return []
-
-
-def bulk_send_lines(
-    lines: DataFrame,
-    hosts: list[str],
-    transport,
-    endpoint: str,
-    success,
-    bulk_actions: int = 5000,
-    bulk_size: int = 15 * 1024 * 1024,
-    flush_interval: float = 30.0,
-    retries: int = 3,
-    no_host_wait: float = 30.0,
-    compress: bool = True,
-    host_ok=None,
-    get_retry_lines=None,
-    micro_batch: bool = False,
-) -> None:
-    """The shared HTTP bulk engine (output/bulk_http.go:73-312) as a
-    partition-wise sender: flush on action count / buffered bytes / elapsed
-    interval; weighted-RR host selection with decay/recovery
-    (RRHostSelector); bounded retries. Used by the ES, ClickHouse-HTTP and
-    InfluxDB sinks — the same code path the reference shares between them.
-
-    A streaming ``micro_batch`` that fits one bulk request
-    (``_driver_lines``) goes through the same sender on the driver, as one
-    request, instead of one Python worker task per partition; anything
-    larger, and every batch job, drains partition-wise.
-
-    The interval trigger runs on a ticker thread (the reference's ticker
-    goroutine, bulk_http.go:92-101) so a stalled upstream iterator cannot
-    hold buffered docs past ``flush_interval``. ``host_ok(status, body)``
-    separates HOST health from DOCUMENT outcomes: only a transport/HTTP
-    failure decays the host weight (HostSelector.ReduceWeight is called on
-    request failure only); a 2xx whose body reports per-doc errors
-    (ES ``"errors":true``) retries WITHOUT punishing the healthy host.
-    Default: any 2xx counts as a healthy host."""
-    if host_ok is None:
-        host_ok = lambda status, body: 200 <= status < 300
-
-    def send_partition(it):
-        import threading
-        import time as _time
-
-        selector = RRHostSelector(hosts)
-        buf: list[str] = []
-        state = {"bytes": 0, "first_ts": None}
-        lock = threading.Lock()
-
-        def flush_locked():
-            if not buf:
-                return
-
-            def encode():
-                p = ("\n".join(buf) + "\n").encode()
-                if compress:
-                    import gzip
-
-                    p = gzip.compress(p)
-                return p
-
-            payload = encode()
-            last = None
-            for _attempt in range(retries + 1):
-                host = selector.next()
-                if host is None:
-                    # all hosts exhausted: weights were reset, wait then
-                    # pick again (bulk_http.go:157-161)
-                    _time.sleep(no_host_wait)
-                    host = selector.next()
-                    if host is None:
-                        continue
-                status, body = transport(host.rstrip("/") + endpoint, payload)
-                if success(status, body):
-                    selector.add_weight()
-                    buf.clear()
-                    state["bytes"] = 0
-                    state["first_ts"] = None
-                    return
-                if host_ok(status, body):
-                    # doc-level failure on a healthy host: no weight decay
-                    selector.add_weight()
-                    if get_retry_lines is not None:
-                        subset = get_retry_lines(body, list(buf))
-                        if subset is not None:
-                            # per-item verdicts: re-bulk only the retryable
-                            # docs (429/5xx); the rest were logged+dropped
-                            buf[:] = subset
-                            if not buf:
-                                state["bytes"] = 0
-                                state["first_ts"] = None
-                                return
-                            payload = encode()
-                else:
-                    selector.reduce_weight()
-                last = (status, body[:500])
-            raise RuntimeError(f"bulk failed after {retries + 1} tries: {last}")
-
-        stop = threading.Event()
-
-        def ticker():
-            while not stop.wait(min(flush_interval, 1.0)):
-                with lock:
-                    if (
-                        state["first_ts"] is not None
-                        and _time.monotonic() - state["first_ts"] >= flush_interval
-                    ):
-                        flush_locked()
-
-        t = threading.Thread(target=ticker, daemon=True)
-        t.start()
-        try:
-            for row in it:
-                if row["line"] is None:
-                    continue
-                with lock:
-                    buf.append(row["line"])
-                    state["bytes"] += len(row["line"]) + 1
-                    if state["first_ts"] is None:
-                        state["first_ts"] = _time.monotonic()
-                    if len(buf) >= bulk_actions or state["bytes"] >= bulk_size:
-                        flush_locked()
-            with lock:
-                flush_locked()
-        finally:
-            stop.set()
-            t.join(2.0)
-
-    small = _driver_lines(lines, bulk_actions) if micro_batch else None
-    if small is None:
-        lines.foreachPartition(send_partition)
-    elif small:
-        send_partition(small)
+        super().write_batch(df, micro_batch)
 
 
 def _driver_lines(lines: DataFrame, bulk_actions: int) -> list | None:
@@ -668,19 +662,18 @@ class ClickHouseSink(_BulkSink):
 
     def __init__(self, conf=None, table_schema: dict[str, str] | None = None,
                  transport=None):
-        super().__init__(conf)
-        self.transport = transport or _urllib_transport
+        super().__init__(conf, transport)
+        self.hosts = self.conf.get("hosts")
         self.column_defaults: dict[str, object] = {}
         self.table_schema = table_schema or self.conf.get("table_schema") or {}
         if not self.table_schema:
-            hosts = self.conf.get("hosts")
             table = self.conf.get("table")
-            if not (hosts and table):
+            if not (self.hosts and table):
                 raise ValueError(
                     "ClickHouseSink needs table_schema ({col: clickhouse_type}) "
                     "or hosts+table for live DESC TABLE introspection"
                 )
-            desc = self.desc_table(hosts, table, self.transport)
+            desc = self.desc_table(self.hosts, table, self.transport)
             self.table_schema = {name: d["type"] for name, d in desc.items()}
             self.column_defaults = self._defaults_from_desc(desc)
 
@@ -812,31 +805,25 @@ class ClickHouseSink(_BulkSink):
             cols.append(c.alias(name))
         return df.select(*cols)
 
-    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
-        out = self.projection(df)
-        hosts = self.conf.get("hosts")
-        if hosts:
-            # HTTP INSERT ... FORMAT JSONEachRow through the shared bulk
-            # engine — the jar-free path (same interface desc_table uses).
-            # best_effort lets the server parse Spark's ISO8601 timestamps.
-            from urllib.parse import quote
+    @property
+    def endpoint(self) -> str:
+        # HTTP INSERT ... FORMAT JSONEachRow — the jar-free path (same
+        # interface desc_table uses); best_effort lets the server parse
+        # Spark's ISO8601 timestamps
+        from urllib.parse import quote
 
-            q = quote(f"INSERT INTO {self.conf['table']} FORMAT JSONEachRow")
-            endpoint = f"/?query={q}&date_time_input_format=best_effort"
-            lines = out.select(F.to_json(F.struct(*out.columns)).alias("line"))
-            bulk_send_lines(
-                lines,
-                hosts,
-                self.transport,
-                endpoint,
-                success=lambda status, body: status == 200,
-                bulk_actions=int(self.conf.get("bulk_actions", 5000)),
-                bulk_size=int(self.conf.get("bulk_size", 15 * 1024 * 1024)),
-                flush_interval=float(self.conf.get("flush_interval", 30.0)),
-                retries=int(self.conf.get("retry", 3)),
-                compress=bool(self.conf.get("compress", True)),
-                micro_batch=micro_batch,
-            )
+        q = quote(f"INSERT INTO {self.conf['table']} FORMAT JSONEachRow")
+        return f"/?query={q}&date_time_input_format=best_effort"
+
+    def lines(self, df: DataFrame) -> DataFrame:
+        out = self.projection(df)
+        return out.select(F.to_json(F.struct(*out.columns)).alias("line"))
+
+    success = staticmethod(lambda status, body: status == 200)
+
+    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
+        if self.hosts:
+            super().write_batch(df, micro_batch)
             return
         url = self.conf.get("jdbc_url")
         if not url:
@@ -846,7 +833,7 @@ class ClickHouseSink(_BulkSink):
                 "path, or jdbc_url with a driver jar"
             )
         (
-            out.write.format("jdbc")
+            self.projection(df).write.format("jdbc")
             .option("url", url)
             .option("dbtable", self.conf["table"])
             .option("driver", "com.clickhouse.jdbc.ClickHouseDriver")
@@ -877,7 +864,13 @@ def _ch_default(spark_type: str):
 
 class InfluxdbSink(_BulkSink):
     """Line-protocol encoding as one Column expression
-    (influxdb_output.go:25-64): measurement,tag=v field=v ns-timestamp."""
+    (influxdb_output.go:25-64): measurement,tag=v field=v ns-timestamp.
+    Batches POST to /write?db=… through the shared bulk engine
+    (influxdb_output.go:180-210 wires the same HTTPBulkProcessor the ES
+    output uses); InfluxDB answers 204 on success. Uncompressed by
+    default."""
+
+    COMPRESS = False
 
     def lines(self, df: DataFrame) -> DataFrame:
         """Null tags/fields are OMITTED from the line (influxdb_output.go:29-47
@@ -926,31 +919,14 @@ class InfluxdbSink(_BulkSink):
         )
 
     def __init__(self, conf=None, transport=None):
-        super().__init__(conf)
-        self.transport = transport or _urllib_transport
-
-    def write_batch(self, df: DataFrame, micro_batch: bool = False) -> None:
-        """POST line-protocol batches to /write?db=… through the shared
-        bulk engine (influxdb_output.go:180-210 wires the same
-        HTTPBulkProcessor the ES output uses); InfluxDB answers 204 on
-        success."""
-        conf = self.conf
-        hosts = list(conf.get("hosts") or [conf.get("addr", "http://localhost:8086")])
-        db = conf.get("db", "")
-        bulk_send_lines(
-            self.lines(df),
-            hosts=hosts,
-            transport=self.transport,
-            endpoint=f"/write?db={db}" if db else "/write",
-            success=lambda status, body: status < 300,
-            bulk_actions=int(conf.get("bulk_actions", 5000)),
-            bulk_size=int(conf.get("bulk_size", 15 * 1024 * 1024)),
-            flush_interval=float(conf.get("flush_interval", 30)),
-            retries=int(conf.get("retry", 3)),
-            no_host_wait=float(conf.get("no_host_wait", 30)),
-            compress=bool(conf.get("compress", False)),
-            micro_batch=micro_batch,
+        super().__init__(conf, transport)
+        self.hosts = list(
+            self.conf.get("hosts") or [self.conf.get("addr", "http://localhost:8086")]
         )
+        db = self.conf.get("db", "")
+        self.endpoint = f"/write?db={db}" if db else "/write"
+
+    success = staticmethod(lambda status, body: status < 300)
 
 
 SINK_REGISTRY = {

@@ -82,6 +82,17 @@ import zlib
 logger = logging.getLogger(__name__)
 
 
+def pop_sasl(settings: dict) -> tuple[str | None, str | None, str | None]:
+    """Remove the SASL keys from a Kafka input's ``consumer_settings`` or an
+    output's ``producer_settings`` and return (mechanism, user, password).
+    The reference accepts both the nested ``sasl:`` map and flat ``sasl.*``
+    keys (gohangout README / gohangout_test.go:36-39); a flat key wins."""
+    nested = settings.pop("sasl", None) or {}
+    return tuple(
+        settings.pop(f"sasl.{k}", nested.get(k)) for k in ("mechanism", "user", "password")
+    )
+
+
 class UnsupportedRequestError(Exception):
     """Request api_key/api_version the dev broker does not speak."""
 

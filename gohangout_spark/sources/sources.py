@@ -109,27 +109,12 @@ class FileSource(Source):
     def batch(self, spark):
         fmt = self.conf.get("format", "parquet")
         if fmt == "parquet":
-            df = self._load_parquet(spark)
-        else:
-            df = self._reader(spark, False).load(self.conf["path"])
+            from gohangout_spark.io import read_parquet
+
+            return read_parquet(spark, self.conf["path"], self._reader(spark, False))
+        df = self._reader(spark, False).load(self.conf["path"])
         if fmt == "text":
             return self._decode(df)
-        return df
-
-    def _load_parquet(self, spark):
-        """Parquet with TIMESTAMP(NANOS) tolerance (see io.load_table)."""
-        from gohangout_spark.io import _nanos_columns
-
-        path = self.conf["path"]
-        try:
-            nanos = _nanos_columns(path)
-        except Exception:
-            nanos = []
-        if nanos:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = self._reader(spark, False).load(path)
-        for c in nanos:
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
         return df
 
     def stream(self, spark):
@@ -188,16 +173,87 @@ class SocketSource(Source):
         return self._decode(df)
 
 
+class _Spool:
+    """The dev-tier spool shared by the UDP and Kafka dev-wire sources:
+    a driver thread calls ``one_pass()`` until ``stop()``; each pass hands
+    its records to ``write``, which makes one JSON-lines file per call in
+    the spool directory, atomically (write ``.tmp``, then rename), so the
+    text file-stream tailing the directory never reads a partial file.
+    ``read`` turns the spooled lines back into columns."""
+
+    def __init__(self, path: str | None, prefix: str):
+        import os
+        import tempfile
+
+        self.dir = path or tempfile.mkdtemp(prefix=prefix)
+        os.makedirs(self.dir, exist_ok=True)
+        self.stopping = None
+        self._thread = None
+
+    @property
+    def running(self) -> bool:
+        return self._thread is not None
+
+    def write(self, records: list[dict]) -> None:
+        import json
+        import os
+        import uuid
+
+        if not records:
+            return
+        path = os.path.join(self.dir, uuid.uuid4().hex + ".jsonl")
+        with open(path + ".tmp", "w") as f:
+            f.write("\n".join(json.dumps(r) for r in records) + "\n")
+        os.rename(path + ".tmp", path)
+
+    def start(self, one_pass, close, wait_s: float = 0.0) -> None:
+        """Run ``one_pass()`` on a daemon thread, ``wait_s`` apart, until
+        ``stop()`` or until a pass sets ``stopping``; ``close()`` runs as
+        the thread ends."""
+        import threading
+
+        stopping = self.stopping = threading.Event()
+
+        def loop():
+            try:
+                while not stopping.is_set():
+                    one_pass()
+                    stopping.wait(wait_s)
+            finally:
+                close()
+
+        self._thread = threading.Thread(target=loop, daemon=True)
+        self._thread.start()
+
+    def stop(self) -> None:
+        if self._thread is None:
+            return
+        self.stopping.set()
+        self._thread.join(10.0)
+        self._thread = None
+
+    def read(self, spark: SparkSession, schema: str, streaming: bool) -> DataFrame:
+        """The spooled records as the columns of ``schema``: a text
+        file-stream tailing the spool, or a batch read of it. One field
+        per ``from_json`` lets the optimizer drop the fields nobody reads."""
+        from pyspark.sql.types import StructType
+
+        r = spark.readStream if streaming else spark.read
+        rec = F.from_json(F.col("value"), schema)
+        return r.format("text").load(self.dir).select(
+            *[rec.getItem(n).alias(n) for n in StructType.fromDDL(schema).fieldNames()]
+        )
+
+
 class UDPSource(Source):
     """UDP datagram input (input/udp_input.go:32-116) — dev tier, like the
     socket source. Spark has no native UDP source (SURVEY §2.1), so a
     driver-side listener thread receives datagrams (``max_length`` cap,
-    :80-84) and spools them as JSON lines into a directory that a text
+    :80-84) and spools them (``_Spool``) into a directory that a text
     file-stream tails (batch mode reads the same spool);
     ``add_remote_addr`` (:45-47,108-110) adds the sender IP as a field.
     Datagrams flush to the spool per ``spool_batch`` messages or on a
-    200 ms idle gap; files appear atomically (write-then-rename) so the
-    file stream never reads partial batches."""
+    200 ms idle gap."""
 
     def __init__(self, conf):
         super().__init__(conf)
@@ -207,16 +263,9 @@ class UDPSource(Source):
         if not isinstance(ml, int) or ml <= 0:
             raise ValueError("max_length must be bigger than zero")
         self.max_length = ml
-        import os
-        import tempfile
-
-        self.spool_dir = self.conf.get("spool_dir") or tempfile.mkdtemp(
-            prefix="gohangout_udp_"
-        )
-        os.makedirs(self.spool_dir, exist_ok=True)
+        self._spool = _Spool(self.conf.get("spool_dir"), "gohangout_udp_")
+        self.spool_dir = self._spool.dir
         self._sock = None
-        self._thread = None
-        self._stop = False
 
     @property
     def port(self) -> int:
@@ -224,82 +273,50 @@ class UDPSource(Source):
         return self._sock.getsockname()[1]
 
     def start_listener(self) -> "UDPSource":
-        import json
-        import os
         import socket
-        import threading
-        import uuid
 
         host, _, port = self.conf["address"].rpartition(":")
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        self._sock.bind((host or "0.0.0.0", int(port)))
-        self._sock.settimeout(0.2)
+        sock = self._sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        sock.bind((host or "0.0.0.0", int(port)))
+        sock.settimeout(0.2)
         flush_every = int(self.conf.get("spool_batch", 100))
 
-        def loop():
-            buf: list[str] = []
-
-            def flush():
-                if not buf:
-                    return
-                p = os.path.join(self.spool_dir, uuid.uuid4().hex + ".jsonl")
-                with open(p + ".tmp", "w") as f:
-                    f.write("\n".join(buf) + "\n")
-                os.rename(p + ".tmp", p)
-                buf.clear()
-
-            while not self._stop:
+        def one_pass():
+            buf = []
+            while len(buf) < flush_every:
                 try:
-                    data, addr = self._sock.recvfrom(self.max_length)
-                    buf.append(
-                        json.dumps(
-                            {"value": data.decode("utf-8", "replace"), "addr": addr[0]}
-                        )
-                    )
-                    if len(buf) >= flush_every:
-                        flush()
+                    data, addr = sock.recvfrom(self.max_length)
                 except socket.timeout:
-                    flush()
-                except OSError:
                     break
-            flush()
+                except OSError:
+                    self._spool.stopping.set()
+                    break
+                buf.append({"value": data.decode("utf-8", "replace"), "addr": addr[0]})
+            self._spool.write(buf)
 
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
+        self._spool.start(one_pass, sock.close)
         return self
 
     def stop_listener(self) -> None:
-        self._stop = True
-        if self._thread is not None:
-            self._thread.join(2.0)
-        if self._sock is not None:
-            self._sock.close()
+        self._spool.stop()
 
-    def _frame(self, df: DataFrame) -> DataFrame:
-        parsed = F.from_json(
-            F.col("value").cast("string"), "value string, addr string"
-        )
-        df = df.select(
-            parsed.getItem("value").alias("value"),
-            parsed.getItem("addr").alias("__udp_addr"),
-        )
-        out = self._decode(df)
+    def _frame(self, spark, streaming: bool) -> DataFrame:
+        # a pipeline-built source must receive without an explicit
+        # start_listener() call — bind lazily, once, here
+        if self._sock is None:
+            self.start_listener()
+        df = self._spool.read(spark, "value string, addr string", streaming)
+        out = self._decode(df.withColumnRenamed("addr", "__udp_addr"))
         target = self.conf.get("add_remote_addr")
         if target:
             out = out.withColumn(target, F.col("__udp_addr"))
         return out.drop("__udp_addr")
 
     def batch(self, spark):
-        # a pipeline-built source must receive without an explicit
-        # start_listener() call — bind lazily and idempotently here
-        if self._thread is None:
-            self.start_listener()
-        return self._frame(spark.read.text(self.spool_dir))
+        return self._frame(spark, streaming=False)
 
     def stream(self, spark):
-        if self._thread is None:
-            self.start_listener()
-        return self._frame(spark.readStream.format("text").load(self.spool_dir))
+        return self._frame(spark, streaming=True)
 
 
 class KafkaSource(Source):
@@ -322,17 +339,12 @@ class KafkaSource(Source):
 
     def __init__(self, conf):
         super().__init__(conf)
-        import os
-        import tempfile
-
-        self.spool_dir = self.conf.get("spool_dir") or tempfile.mkdtemp(
-            prefix="gohangout_kafka_"
-        )
-        os.makedirs(self.spool_dir, exist_ok=True)
-        self._consumer_thread = None
-        self._consumer_stop = False
+        self._spool = _Spool(self.conf.get("spool_dir"), "gohangout_kafka_")
+        self.spool_dir = self._spool.dir
 
     def _options(self) -> dict[str, str]:
+        from gohangout_spark.sources.kafka_wire import pop_sasl
+
         conf = self.conf
         settings = dict(conf.get("consumer_settings") or {})
         opts = {}
@@ -342,14 +354,9 @@ class KafkaSource(Source):
             opts["startingOffsets"] = "earliest"
         if "group.id" in settings:
             opts["kafka.group.id"] = settings.pop("group.id")
-        # SASL: the reference accepts both the nested `sasl:` map and flat
-        # sasl.* keys (gohangout README / gohangout_test.go:36-39); the
-        # connector tier gets the public jaas-config mapping, the dev wire
-        # tier reads the creds via _sasl_creds()
-        nested_sasl = settings.pop("sasl", None) or {}
-        mech = settings.pop("sasl.mechanism", nested_sasl.get("mechanism"))
-        sasl_user = settings.pop("sasl.user", nested_sasl.get("user"))
-        sasl_pw = settings.pop("sasl.password", nested_sasl.get("password"))
+        # SASL: the connector tier gets the public jaas-config mapping,
+        # the dev wire tier reads the creds via _sasl_creds()
+        mech, sasl_user, sasl_pw = pop_sasl(settings)
         if sasl_user is not None and mech not in (None, "PLAIN"):
             raise ValueError(f"sasl.mechanism: only PLAIN is supported, got {mech!r}")
         if mech:
@@ -400,12 +407,9 @@ class KafkaSource(Source):
         return [(t, p) for t, parts in assign.items() for p in parts]
 
     def _sasl_creds(self) -> tuple[str | None, str | None]:
-        settings = self.conf.get("consumer_settings") or {}
-        nested = settings.get("sasl") or {}
-        return (
-            settings.get("sasl.user", nested.get("user")),
-            settings.get("sasl.password", nested.get("password")),
-        )
+        from gohangout_spark.sources.kafka_wire import pop_sasl
+
+        return pop_sasl(dict(self.conf.get("consumer_settings") or {}))[1:]
 
     def _batch_dev_wire(self, spark):
         from gohangout_spark.sources.kafka_wire import ClusterWireClient
@@ -555,19 +559,27 @@ class KafkaSource(Source):
         engine produces (plain/json are utf-8 by construction) but NOT
         for arbitrary binary values — those belong on the batch tier
         or the real connector, which keep bytes end to end."""
-        if self._consumer_thread is not None:
+        if self._spool.running:
             return self
-        import json as _json
-        import os
-        import threading
-        import uuid
-
         from gohangout_spark.sources.kafka_wire import ClusterWireClient, GroupConsumer
 
         opts = self._options()
         sasl_user, sasl_pw = self._sasl_creds()
         fmt = self.conf.get("wire_format", "v0")
         poll_s = float(self.conf.get("poll_interval_s", 0.2))
+
+        def spool(records) -> None:
+            self._spool.write([
+                {
+                    "key": None if k is None else k.decode("utf-8", "replace"),
+                    "value": None if v is None else v.decode("utf-8", "replace"),
+                    "topic": t,
+                    "partition": p,
+                    "offset": o,
+                    "timestamp_ms": ts,
+                }
+                for t, p, o, ts, k, v in records
+            ])
 
         group = opts.get("kafka.group.id")
         if group:
@@ -577,8 +589,17 @@ class KafkaSource(Source):
                 sasl_user=sasl_user, sasl_password=sasl_pw,
             )
             consumer.join()
+
+            def one_pass():
+                recs = consumer.poll()
+                spool(recs)
+                if recs:
+                    # spool first, commit second: a crash between
+                    # re-reads, never loses — at-least-once
+                    consumer.commit()
+
+            close = consumer.close
         else:
-            consumer = None
             client = ClusterWireClient(
                 opts["kafka.bootstrap.servers"], message_format=fmt,
                 sasl_user=sasl_user, sasl_password=sasl_pw,
@@ -586,82 +607,38 @@ class KafkaSource(Source):
             tps = self._topics_and_assignments(opts, client)
             positions = {tp: 0 for tp in tps}
 
-        def spool(records) -> None:
-            if not records:
-                return
-            lines = [
-                _json.dumps(
-                    {
-                        "key": None if k is None else k.decode("utf-8", "replace"),
-                        "value": None if v is None else v.decode("utf-8", "replace"),
-                        "topic": t,
-                        "partition": p,
-                        "offset": o,
-                        "timestamp_ms": ts,
-                    }
-                )
-                for t, p, o, ts, k, v in records
-            ]
-            path = os.path.join(self.spool_dir, uuid.uuid4().hex + ".jsonl")
-            with open(path + ".tmp", "w") as f:
-                f.write("\n".join(lines) + "\n")
-            os.rename(path + ".tmp", path)
+            def one_pass():
+                out = []
+                for t, p in tps:
+                    hw, recs = client.fetch(t, p, positions[(t, p)])
+                    for off, ts, k, v in recs:
+                        out.append((t, p, off, ts, k, v))
+                    if recs:
+                        positions[(t, p)] = recs[-1][0] + 1
+                spool(out)
 
-        def loop():
-            try:
-                while not self._consumer_stop:
-                    if consumer is not None:
-                        recs = consumer.poll()
-                        spool(recs)
-                        if recs:
-                            # spool first, commit second: a crash between
-                            # re-reads, never loses — at-least-once
-                            consumer.commit()
-                    else:
-                        out = []
-                        for t, p in tps:
-                            hw, recs = client.fetch(t, p, positions[(t, p)])
-                            for off, ts, k, v in recs:
-                                out.append((t, p, off, ts, k, v))
-                            if recs:
-                                positions[(t, p)] = recs[-1][0] + 1
-                        spool(out)
-                    self._consumer_stop_ev.wait(poll_s)
-            finally:
-                if consumer is not None:
-                    consumer.close()
-                else:
-                    client.close()
-
-        self._consumer_stop = False
-        self._consumer_stop_ev = threading.Event()
-        self._consumer_thread = threading.Thread(target=loop, daemon=True)
-        self._consumer_thread.start()
+            close = client.close
+        self._spool.start(one_pass, close, poll_s)
         return self
 
     def stop_consumer(self) -> None:
-        if self._consumer_thread is None:
-            return
-        self._consumer_stop = True
-        self._consumer_stop_ev.set()
-        self._consumer_thread.join(10.0)
-        self._consumer_thread = None
+        self._spool.stop()
 
     def _stream_dev_wire(self, spark):
         self.start_consumer()
-        raw = spark.readStream.format("text").load(self.spool_dir)
-        parsed = F.from_json(
-            F.col("value").cast("string"),
+        rec = self._spool.read(
+            spark,
             "key string, value string, topic string, partition int, "
             "offset long, timestamp_ms long",
+            streaming=True,
         )
-        df = raw.select(
-            parsed.getItem("key").cast("binary").alias("key"),
-            parsed.getItem("value").cast("binary").alias("value"),
-            parsed.getItem("topic").alias("topic"),
-            parsed.getItem("partition").alias("partition"),
-            parsed.getItem("offset").alias("offset"),
-            F.timestamp_millis(parsed.getItem("timestamp_ms")).alias("timestamp"),
+        df = rec.select(
+            F.col("key").cast("binary").alias("key"),
+            F.col("value").cast("binary").alias("value"),
+            "topic",
+            "partition",
+            "offset",
+            F.timestamp_millis(F.col("timestamp_ms")).alias("timestamp"),
             F.lit(1).alias("timestampType"),
         )
         return self._finish(df)

@@ -3129,11 +3129,11 @@ def purchase_attribution(spark, sf_dir):
     both asof sides are filtered slices of the SAME events parquet, and
     a union of two filtered scans plans as TWO full scans (scans have no
     reuse mechanism) — so the union frame is built from ONE scan (role
-    flag + per-role CASE payload) and fed to joins._asof_select, the
+    flag + per-role CASE payload) and fed to joins.asof_select, the
     same single implementation of the asof semantics asof_join runs.
     scans 2 → 1 (audit); 1.13× at sf0.1, 1.34× at 100× events, identical
     rows both scales (0b5df52:tools/ab_purchase_attribution.py)."""
-    from gohangout_spark.functions.joins import _asof_select
+    from gohangout_spark.functions.joins import asof_select
 
     ev = _events(spark, sf_dir)
     is_p = F.col("event_type") == "purchase"
@@ -3148,12 +3148,12 @@ def purchase_attribution(spark, sf_dir):
         F.when(~is_p, F.lit(1)).otherwise(F.lit(0)).alias("__r"),
     )
     # right rows with a NULL key or NULL event time match nothing — the
-    # _asof_select contract (asof_join drops them pre-union)
+    # asof_select contract (asof_join drops them pre-union)
     u = u.where(
         (F.col("__r") == 0)
         | (F.col("user_id").isNotNull() & F.col("__ats").isNotNull())
     )
-    out = _asof_select(
+    out = asof_select(
         u,
         ["user_id"],
         ["event_id", "user_id", "ts"],

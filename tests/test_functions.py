@@ -1664,6 +1664,25 @@ class TestAsofJoin:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
+    def test_asof_select_tolerance_needs_payload_ts(self, spark):
+        """A prepared union whose __pay omits the right timestamp serves an
+        untolerant match, and is refused once a tolerance is set."""
+        from gohangout_spark.functions.joins import asof_select
+
+        left, right = self._frames(spark)
+        u = left.select(
+            "k", "ts", "lv", F.col("ts").alias("__ats"),
+            F.lit(None).cast("struct<rv:string>").alias("__pay"), F.lit(0).alias("__r"),
+        ).unionByName(right.where("k IS NOT NULL").select(
+            "k", F.lit(None).cast("timestamp").alias("ts"), F.lit(None).cast("string").alias("lv"),
+            F.col("ts").alias("__ats"), F.struct("rv").alias("__pay"), F.lit(1).alias("__r"),
+        ))
+        args = (["k"], ["k", "ts", "lv"], ["rv"], "ts", "ts_right", "backward")
+        out = {r["lv"]: r["rv"] for r in asof_select(u, *args, None, "left").collect()}
+        assert out["L20"] == "R18"
+        with pytest.raises(ValueError, match="ts_right"):
+            asof_select(u, *args, 5, "left")
+
 
 class TestRangeJoin:
     def _frames(self, spark):

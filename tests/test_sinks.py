@@ -467,6 +467,23 @@ class TestClickHouse:
         sink.write_batch(df.coalesce(1))
         assert len(os.listdir(cap)) == 2  # one failure, one success
 
+    def test_no_host_wait_is_honoured(self, spark):
+        """The one host's weight (3) is spent by the first three tries; the
+        fourth waits no_host_wait for the weights to reset, not 30 s."""
+        import time
+
+        sink = ClickHouseSink(
+            {"table": "t", "hosts": ["http://ch:8123"], "retry": 3,
+             "no_host_wait": 0.01},
+            table_schema={"a": "Int64"},
+            transport=lambda url, payload: (503, "unavailable"),
+        )
+        df = spark.createDataFrame([Row(a="1")]).coalesce(1)
+        t0 = time.monotonic()
+        with pytest.raises(Exception, match="bulk failed after 4 tries"):
+            sink.write_batch(df)
+        assert time.monotonic() - t0 < 10
+
     # recorded DESC TABLE response (ClickHouse HTTP interface, FORMAT JSON) —
     # covers plain types, Nullable, LowCardinality, Enum8, Array, and a
     # server-declared DEFAULT expression

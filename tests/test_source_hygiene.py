@@ -3,10 +3,11 @@ with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
 ``\\s`` escape in a docstring), so the package imports cleanly under
 ``python -W error``; the AQE-aware plan walk has one definition; no
 module uses the deprecated ``PandasUDFType``; the A/B runner's variant
-specs parse."""
+specs parse; each I/O transport setting is read in one place."""
 
 import importlib.util
 import pathlib
+import re
 import warnings
 
 import pytest
@@ -65,3 +66,17 @@ def test_ab_bench_spec_parser():
                 "=gohangout_spark.workload:tpch_q6", "a=:tpch_q6"):
         with pytest.raises(ValueError, match="label=module:fn"):
             parse_spec(bad)
+
+
+def test_io_transport_defined_once():
+    """The bulk engine's settings are read from a sink's conf only by the
+    shared bulk-sink base, and the dev-tier sources share one spool writer."""
+    sinks = (PKG / "sinks" / "sinks.py").read_text(encoding="utf-8")
+    keys = ("bulk_actions", "bulk_size", "flush_interval", "retry", "no_host_wait", "compress")
+    reads = {
+        k: len(re.findall(rf"""(?:\.get\(|\[)\s*["']{k}["']""", sinks)) for k in keys
+    }
+    assert all(n == 1 for n in reads.values()), reads
+    sources = (PKG / "sources" / "sources.py").read_text(encoding="utf-8")
+    writers = re.findall(r"os\.(?:rename|replace)\([^)]*\.tmp", sources)
+    assert len(writers) == 1, writers
