@@ -1,11 +1,23 @@
-"""Condition DSL → PySpark Column compiler.
+"""Conditions → PySpark Columns (and → bool over dicts).
 
 The reference guards filters/outputs with a list of ``if`` conditions that are
 AND-ed together (/root/reference/condition_filter/filter.go:743-754). Each
 condition is either a boolean expression over predicate calls combined with
 ``&& || ! ( )`` (shunting-yard parser,
 /root/reference/condition_filter/parse.go:27-190) or a Go template rendering
-"y" (not supported here; the common cases compile to predicates instead).
+"y" (filter.go:23-41).
+
+The DSL has one tokenizer and one shunting-yard (``_fold``); it folds into a
+Column (``compile_condition``) or, for driver-side uses like the ES sniff
+``match``, into a bool over a dict (``evaluate_condition``). A template
+condition ``{{if X}}y{{end}}`` compiles ``X`` with the value render's action
+compiler (render.py) and takes its Go ``if`` truth:
+
+  {{if .name}}y{{end}}                     field truthy (non-null, non-empty)
+  {{if eq .name "childe"}}y{{end}}         equality (also ne lt le gt ge)
+  {{if and (eq .a 1) (.b)}}y{{end}}        and / or / not combinators
+  {{if before . "-24h"}}y{{end}}           @timestamp vs now()+duration
+                                           (``.`` is the event; optional)
 
 Predicates (/root/reference/condition_filter/filter.go):
   Exist(a,b)            path a.b exists (absent≡null in fixed schema)
@@ -22,16 +34,22 @@ Operator precedence: ! > && > || (parse.go:10-17); ! is right-associative.
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gohangout_spark.expr.paths import field_col, field_exists
+from gohangout_spark.expr.paths import field_col, field_exists, parse_field
+from gohangout_spark.expr.render import compile_action_truth
 
 
 class ConditionSyntaxError(ValueError):
+    pass
+
+
+class TemplateConditionError(ValueError):
     pass
 
 
@@ -226,38 +244,81 @@ def _compile_pred(text: str, df: DataFrame | None, ts_field: str) -> Column:
     raise ConditionSyntaxError(f"unknown predicate {name!r}")
 
 
+# ------------------------------------------------------- dict predicates
+
+def _dict_get(obj, path: str):
+    cur = obj
+    for seg in parse_field(path):
+        if isinstance(seg, int):
+            if not isinstance(cur, (list, tuple)) or seg >= len(cur):
+                return None, False
+        elif not isinstance(cur, dict) or seg not in cur:
+            return None, False
+        cur = cur[seg]
+    return cur, True
+
+
+def _eval_pred(text: str, obj) -> bool:
+    name, argstr = text.split("(", 1)
+    args = _split_args(argstr[:-1])
+
+    if name == "Exist":
+        return _dict_get(obj, _path_of(args))[1]
+    if name in ("EQ", "IN", "HasPrefix", "HasSuffix", "Contains", "ContainsAny", "Match"):
+        if len(args) < 2:
+            raise ConditionSyntaxError(f"{name} needs path and value: {text}")
+        path, val = _path_of(args[:-1]), _literal(args[-1])
+        v, found = _dict_get(obj, path)
+        if name == "EQ":
+            if val is None:
+                return found and v is None
+            if isinstance(val, (int, float)) and isinstance(v, (int, float)):
+                return float(v) == float(val)
+            return v == val
+        if name == "IN":
+            return isinstance(v, (list, tuple)) and val in v
+        if not isinstance(v, str):
+            return False
+        sval = val if isinstance(val, str) else str(val)
+        if name == "HasPrefix":
+            return v.startswith(sval)
+        if name == "HasSuffix":
+            return v.endswith(sval)
+        if name == "Contains":
+            return sval in v
+        if name == "ContainsAny":
+            return any(ch in v for ch in sval)
+        return re.search(sval, v) is not None  # Match
+    raise ConditionSyntaxError(
+        f"predicate {name!r} not supported in dict conditions (sniff match)"
+    )
+
+
 # ------------------------------------------------------------ shunting yard
 
 _PREC = {"!": 3, "&&": 2, "||": 1}
 
 
-def compile_condition(s: str, df: DataFrame | None = None, ts_field: str = "@timestamp") -> Column:
-    """Compile one condition string to a boolean Column.
-
-    Dispatches the two reference syntaxes (filter.go:628-643): Go-template
-    conditions (``{{if ...}}y{{end}}``) and the boolean predicate DSL."""
-    if s.strip().startswith("{{"):
-        from gohangout_spark.expr.template_conditions import compile_template_condition
-
-        return compile_template_condition(s, df, ts_field)
-    toks = _tokenize(s)
-    out: list[Column] = []
+def _fold(s: str, leaf, and_, or_, not_):
+    """Parse the boolean DSL ``s`` and fold it bottom-up: each predicate
+    token through ``leaf``, each ``&& || !`` through ``and_ or_ not_``."""
+    out: list = []
     ops: list[str] = []
 
     def reduce_op(op: str):
         if op == "!":
             if not out:
                 raise ConditionSyntaxError(f"dangling '!' in {s!r}")
-            out.append(~out.pop())
+            out.append(not_(out.pop()))
         else:
             if len(out) < 2:
                 raise ConditionSyntaxError(f"dangling {op!r} in {s!r}")
             b, a = out.pop(), out.pop()
-            out.append((a & b) if op == "&&" else (a | b))
+            out.append(and_(a, b) if op == "&&" else or_(a, b))
 
-    for t in toks:
+    for t in _tokenize(s):
         if t.kind == "pred":
-            out.append(_compile_pred(t.text, df, ts_field))
+            out.append(leaf(t.text))
         elif t.kind == "lparen":
             ops.append("(")
         elif t.kind == "rparen":
@@ -284,6 +345,44 @@ def compile_condition(s: str, df: DataFrame | None = None, ts_field: str = "@tim
     if len(out) != 1:
         raise ConditionSyntaxError(f"bad condition {s!r}")
     return out[0]
+
+
+_TEMPLATE_IF = re.compile(r"^\{\{\s*if\s+(.*?)\s*\}\}\s*y\s*\{\{\s*end\s*\}\}$", re.S)
+
+
+def compile_condition(s: str, df: DataFrame | None = None, ts_field: str = "@timestamp") -> Column:
+    """Compile one condition string to a boolean Column.
+
+    Dispatches the two reference syntaxes (filter.go:628-643): Go-template
+    conditions (``{{if X}}y{{end}}``, ``X`` compiled by the value render's
+    action compiler) and the boolean predicate DSL."""
+    if s.strip().startswith("{{"):
+        m = _TEMPLATE_IF.match(s.strip())
+        if not m:
+            raise TemplateConditionError(
+                f"only '{{{{if <expr>}}}}y{{{{end}}}}' templates supported: {s!r}"
+            )
+        return compile_action_truth(m.group(1), df, ts_field)
+    # a predicate over an absent field is NULL in SQL but false in the
+    # reference, so '!' negates NULL-as-false; && || already agree once the
+    # filter reads a NULL result as false
+    return _fold(
+        s,
+        lambda t: _compile_pred(t, df, ts_field),
+        operator.and_,
+        operator.or_,
+        lambda c: ~F.coalesce(c, F.lit(False)),
+    )
+
+
+def evaluate_condition(s: str, obj) -> bool:
+    """Evaluate one boolean-DSL condition string against a dict — the
+    driver-side twin of ``compile_condition`` for ES sniff ``match``
+    (output/elasticsearch_output.go:479-489 runs a condition_filter over
+    node-info maps)."""
+    return _fold(
+        s, lambda t: _eval_pred(t, obj), lambda a, b: a and b, lambda a, b: a or b, operator.not_
+    )
 
 
 def compile_conditions(

@@ -29,6 +29,12 @@ _JSONPATH_RE = re.compile(r"^\$\.")
 _JSONPATH_TOKEN = re.compile(r"([A-Za-z0-9_@\-]+)|\[(\d+)\]")
 
 
+def is_field_ref(s: str) -> bool:
+    """A bracket path or a JSONPath (a bare word is ambiguous: it may be a
+    literal)."""
+    return bool(_BRACKET_RE.match(s) or _JSONPATH_RE.match(s))
+
+
 def parse_field(path: str) -> list[str | int]:
     """Parse a field reference into access segments (str key / int index)."""
     path = path.strip()

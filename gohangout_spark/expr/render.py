@@ -9,27 +9,24 @@ via several syntaxes (/root/reference/value_render/value_render.go:28-56):
   → concat(lit, col, date_format(@timestamp, fmt))
 - Go template ``{{.first}}.{{.last}}``
   (/root/reference/value_render/template_value_render.go:41-158)
-  → concat of column refs for the dot-field subset (sprig long tail
-  unsupported; would be a pandas-UDF fallback)
+  → concat of the compiled actions; ``_Action`` is the one action
+  compiler, which ``{{if X}}y{{end}}`` conditions (conditions.py) share
 - anything else → literal
 """
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gohangout_spark.expr.dateformat import go_layout_to_java
-from gohangout_spark.expr.paths import _BRACKET_RE, _JSONPATH_RE, field_col
+from gohangout_spark.expr.paths import field_col, is_field_ref
 
 _INDEX_PART = re.compile(r"%\{([^}]+)\}")
-_TEMPLATE_PART = re.compile(r"\{\{\s*\.([A-Za-z0-9_.\-]+)\s*\}\}")
-
-
-def _is_field_ref(s: str) -> bool:
-    return bool(_BRACKET_RE.match(s)) or bool(_JSONPATH_RE.match(s))
 
 
 def compile_render(
@@ -55,7 +52,7 @@ def compile_render(
     if not isinstance(value, str):
         return F.lit(value)
     s = value
-    if _is_field_ref(s):
+    if is_field_ref(s):
         return field_col(s, df)
     if "%{" in s:
         return _compile_index_pattern(s, df, ts_field)
@@ -93,80 +90,158 @@ _ANY_ACTION = re.compile(r"\{\{\s*(.*?)\s*\}\}", re.S)
 def _compile_template(
     s: str, df: DataFrame | None, ts_field: str = "@timestamp", allow_udf: bool = False
 ) -> Column:
-    """``{{.a}}-{{.b.c}}``, the reference's custom template functions, and
-    the commonly-used sprig string/math subset
+    """``{{.a}}-{{.b.c}}``, the Go builtins ``eq ne lt le gt ge and or
+    not``, the reference's custom template functions, and the
+    commonly-used sprig string/math subset
     (template_value_render.go:41-158 registers sprig.FuncMap plus custom
-    funcs) — all compiled to Columns. Pipelines (``{{.msg | upper |
-    trunc 5}}``) append the piped value as the LAST argument, like Go
-    templates. Unknown actions raise at compile time unless ``allow_udf``
-    routes known long-tail sprig functions through a pandas UDF."""
+    funcs) — all compiled to Columns by ``_Action``. Unknown actions raise
+    at compile time unless ``allow_udf`` routes known long-tail sprig
+    functions through a pandas UDF."""
     cols: list[Column] = []
     pos = 0
     for m in _ANY_ACTION.finditer(s):
         if m.start() > pos:
             cols.append(F.lit(s[pos : m.start()]))
-        cols.append(
-            _compile_action(m.group(1), df, ts_field, allow_udf=allow_udf).cast("string")
-        )
+        action, _ = _Action(m.group(1), df, ts_field, allow_udf).compile()
+        cols.append(action.cast("string"))
         pos = m.end()
     if pos < len(s):
         cols.append(F.lit(s[pos:]))
     return cols[0] if len(cols) == 1 else F.concat(*cols)
 
 
-_ACTION_TOK = re.compile(r'"(?:[^"\\]|\\.)*"|\S+')
+_WORD = re.compile(r"[^\s()|]+")
 
 
-def _split_pipeline(expr: str) -> list[str]:
-    """Split a template action on top-level '|' (quote-aware)."""
-    segs, cur, in_str, escaped = [], [], False, False
-    for ch in expr:
-        if in_str:
-            cur.append(ch)
-            if escaped:
-                escaped = False
-            elif ch == "\\":
-                escaped = True
-            elif ch == '"':
-                in_str = False
-        elif ch == '"':
-            cur.append(ch)
-            in_str = True
-        elif ch == "|":
-            segs.append("".join(cur))
-            cur = []
+def _tokenize_action(expr: str) -> list[str]:
+    """Quote-aware split of a template action into ``(``, ``)``, ``|``,
+    string literals (escapes kept) and bare words."""
+    toks, i, n = [], 0, len(expr)
+    while i < n:
+        c = expr[i]
+        if c.isspace():
+            i += 1
+        elif c in "()|":
+            toks.append(c)
+            i += 1
+        elif c == '"':
+            j = i + 1
+            while j < n and expr[j] != '"':
+                j += 2 if expr[j] == "\\" else 1
+            toks.append(expr[i : j + 1])
+            i = j + 1
         else:
-            cur.append(ch)
-    segs.append("".join(cur))
-    return [s.strip() for s in segs]
+            m = _WORD.match(expr, i)
+            toks.append(m.group(0))
+            i = m.end()
+    return toks
 
 
-def _compile_action(
-    expr: str, df: DataFrame | None, ts_field: str = "@timestamp", allow_udf: bool = False
-) -> Column:
-    """One template action (possibly a pipeline) → Column."""
-    piped: Column | None = None
-    for i, seg in enumerate(_split_pipeline(expr)):
-        toks = _ACTION_TOK.findall(seg)
-        if not toks:
-            raise ValueError(f"empty template action in {expr!r}")
-        if toks[0].startswith("."):
-            if len(toks) > 1:
-                raise ValueError(f"bad template action {seg!r} in {expr!r}")
-            piped = _field_ref(toks[0], df)
-            continue
-        args = [_action_arg(a, df) for a in toks[1:]]
-        raw_args = toks[1:]
-        if i > 0:
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+# functions that read the event's @timestamp: Go spells the event ``.``
+_EVENT_FUNCS = ("timestamp", "before", "after")
+# functions whose result is a boolean, which is its own Go ``if`` truth
+_BOOL_FUNCS = frozenset((
+    "eq", "ne", "lt", "le", "gt", "ge", "and", "or", "not", "before", "after",
+    "contains", "containsAny", "hasprefix", "hassuffix", "empty", "has",
+))
+_COMPARE = {
+    "eq": operator.eq, "ne": operator.ne, "lt": operator.lt,
+    "le": operator.le, "gt": operator.gt, "ge": operator.ge,
+}
+
+
+def _truth(col: Column, is_bool: bool) -> Column:
+    """Go ``if`` truth: a boolean result is itself; any other value (a
+    field, a string) is true when non-null and its string form is non-empty."""
+    return col if is_bool else col.isNotNull() & (col.cast("string") != "")
+
+
+class _Action:
+    """Recursive-descent compiler of one template action: a pipeline of
+    commands joined by ``|``, each a function name with operands or a lone
+    operand; a parenthesised pipeline is an operand. Pipelines append the
+    piped value as the LAST argument, like Go templates. Every value
+    compiles to a ``(Column, is_bool)`` pair."""
+
+    def __init__(self, expr: str, df: DataFrame | None, ts_field: str, allow_udf: bool):
+        self.expr, self.df, self.ts_field, self.allow_udf = expr, df, ts_field, allow_udf
+        self.toks = _tokenize_action(expr)
+        self.pos = 0
+
+    def compile(self) -> tuple[Column, bool]:
+        out = self._pipeline()
+        if self.pos != len(self.toks):
+            raise ValueError(f"bad template action {self.expr!r}")
+        return out
+
+    def _peek(self) -> str | None:
+        return self.toks[self.pos] if self.pos < len(self.toks) else None
+
+    def _at_end(self) -> bool:
+        return self._peek() in (None, ")", "|")
+
+    def _pipeline(self) -> tuple[Column, bool]:
+        piped = self._command(None)
+        while self._peek() == "|":
+            self.pos += 1
+            piped = self._command(piped)
+        return piped
+
+    def _command(self, piped: tuple[Column, bool] | None) -> tuple[Column, bool]:
+        if self._at_end():
+            raise ValueError(f"empty template action in {self.expr!r}")
+        head = self.toks[self.pos]
+        if not _IDENT.fullmatch(head):
+            value = self._operand()
+            if not self._at_end():
+                raise ValueError(f"bad template action {self.expr!r}")
+            return value
+        self.pos += 1
+        if head in _EVENT_FUNCS and self._peek() == ".":
+            self.pos += 1
+        args: list[tuple[Column, bool]] = []
+        raw_args: list[str | None] = []
+        while not self._at_end():
+            tok = self._peek()
+            args.append(self._operand())
+            raw_args.append(None if tok == "(" else tok)
+        if piped is not None:
             args.append(piped)
             raw_args.append(None)
+        if head in ("and", "or", "not"):
+            cols = [_truth(c, b) for c, b in args]
+        else:
+            cols = [c for c, _ in args]
         try:
-            piped = _apply_template_func(toks[0], args, raw_args, expr, df, ts_field)
+            col = _apply_template_func(head, cols, raw_args, self.expr, self.df, self.ts_field)
         except UnsupportedTemplateFunc:
-            if not (allow_udf and toks[0] in SPRIG_PY):
+            if not (self.allow_udf and head in SPRIG_PY):
                 raise
-            piped = _sprig_udf_call(toks[0], args)
-    return piped
+            col = _sprig_udf_call(head, cols)
+        return col, head in _BOOL_FUNCS
+
+    def _operand(self) -> tuple[Column, bool]:
+        tok = self.toks[self.pos]
+        self.pos += 1
+        if tok == "(":
+            value = self._pipeline()
+            if self._peek() != ")":
+                raise ValueError(f"unbalanced parens in {self.expr!r}")
+            self.pos += 1
+            return value
+        if tok == ".":
+            raise ValueError(
+                f"'.' is only an argument of {'/'.join(_EVENT_FUNCS)}: {self.expr!r}"
+            )
+        return _action_arg(tok, self.df), False
+
+
+def compile_action_truth(
+    expr: str, df: DataFrame | None = None, ts_field: str = "@timestamp"
+) -> Column:
+    """The Go ``{{if expr}}`` truth of one template action."""
+    return _truth(*_Action(expr, df, ts_field, allow_udf=False).compile())
 
 
 def _field_ref(tok: str, df: DataFrame | None) -> Column:
@@ -184,6 +259,19 @@ def _apply_template_func(
 
     def s(i):
         return args[i].cast("string")
+
+    # ---- Go template builtins; and/or/not get each operand's ``if``
+    # truth and return a boolean (Go returns the deciding operand) ----
+    if head in _COMPARE:
+        need(2)
+        return _COMPARE[head](args[0], args[1])
+    if head == "not":
+        need(1)
+        return ~args[0]
+    if head in ("and", "or"):
+        if not args:
+            raise ValueError(f"{head} needs operands: {expr!r}")
+        return reduce(operator.and_ if head == "and" else operator.or_, args)
 
     # ---- reference custom funcs (template_value_render.go:41-158) ----
     if head == "now":  # Unix MILLISECONDS (:58)

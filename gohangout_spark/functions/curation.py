@@ -557,9 +557,9 @@ def weighted_mixture(
     same mixture on any cluster layout or retry, and the thresholds are
     plain string compares any engine reproduces bit-for-bit.
     """
-    from gohangout_spark.functions.sampling import _hash_key
+    from gohangout_spark.functions.sampling import hash_key
 
-    h = F.substring(_hash_key(id_col, seed), 1, 4)
+    h = F.substring(hash_key(id_col, seed), 1, 4)
     thr = F.lit(_hex_prefix_threshold(default_weight))
     for src, p in sorted(weights.items()):
         thr = F.when(F.col(source_col) == src, F.lit(_hex_prefix_threshold(p))).otherwise(thr)
@@ -729,7 +729,7 @@ def gopher_rules(
     )
 
 
-def _word_ngrams_all(col: Column, n: int) -> Column:
+def word_ngrams_all(col: Column, n: int) -> Column:
     """ALL word n-grams (duplicates preserved — repetition signals need
     occurrence counts; :func:`_word_ngrams` distincts for join keys).
     Token array bound once per row — see the note in :func:`_word_ngrams`."""
@@ -783,7 +783,7 @@ def ngram_repetition_stats(
         grams = base.select(
             "__id",
             "__chars",
-            F.explode(_word_ngrams_all(F.col(text_col), n)).alias("g"),
+            F.explode(word_ngrams_all(F.col(text_col), n)).alias("g"),
         )
         counts = grams.groupBy("__id", "__chars", "g").agg(
             F.count(F.lit(1)).alias("c")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _hash_key(id_col, seed: int):
+def hash_key(id_col, seed: int):
     # md5 exists with identical output in every engine (incl. the DuckDB
     # oracle) — xxhash64 does not; ordering by it is uniform enough for
     # sampling and cross-engine reproducible. NULL ids hash as the empty
@@ -40,7 +40,7 @@ def stratified_sample(
 ) -> DataFrame:
     """Keep the n_per_stratum smallest-hash rows per stratum. Adds a
     ``sample_rank`` column (1-based within the stratum)."""
-    w = Window.partitionBy(strata_col).orderBy(_hash_key(id_col, seed), F.col(id_col))
+    w = Window.partitionBy(strata_col).orderBy(hash_key(id_col, seed), F.col(id_col))
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= n_per_stratum)
@@ -49,7 +49,7 @@ def stratified_sample(
 
 def deterministic_sample(df: DataFrame, id_col: str, n: int, seed: int = 42) -> DataFrame:
     """Global deterministic pseudo-random sample of n rows (smallest-hash)."""
-    return df.orderBy(_hash_key(id_col, seed), F.col(id_col)).limit(n)
+    return df.orderBy(hash_key(id_col, seed), F.col(id_col)).limit(n)
 
 
 def cap_per_group(
@@ -70,7 +70,7 @@ def cap_per_group(
     data. One shuffle (hash-partition by group) + per-partition top-n; the
     rank column is dropped, output schema == input schema.
     """
-    order = [order_by] if order_by is not None else [_hash_key(id_col, seed)]
+    order = [order_by] if order_by is not None else [hash_key(id_col, seed)]
     w = Window.partitionBy(group_col).orderBy(*order, F.col(id_col))
     return (
         df.withColumn("__cap_rank", F.row_number().over(w))
@@ -107,7 +107,7 @@ def token_budget_sample(
     """
     from pyspark.sql.window import Window
 
-    h = _hash_key(id_col, seed)
+    h = hash_key(id_col, seed)
     b = F.lit(int(default_budget))
     for src, budget in sorted(budgets.items()):
         b = F.when(F.col(source_col) == src, F.lit(int(budget))).otherwise(b)
@@ -238,7 +238,7 @@ def deterministic_shuffle(
     Distributed via :func:`global_rank` (range shuffle + local ranks +
     broadcast offsets); change ``seed`` per epoch for fresh orders.
     """
-    keyed = df.withColumn("__shufkey", _hash_key(id_col, seed))
+    keyed = df.withColumn("__shufkey", hash_key(id_col, seed))
     ranked = global_rank(keyed, [F.col("__shufkey").asc(), F.col(id_col).asc()], idx_col)
     return ranked.withColumn(idx_col, F.col(idx_col) - 1).drop("__shufkey")
 
@@ -252,7 +252,7 @@ def _uniform01(id_col, seed: int):
     md5 + instr + pow only, so ANY engine reproduces the identical
     double (the DuckDB oracle evaluates the same nibble sum in the same
     left-to-right order)."""
-    h = _hash_key(id_col, seed)
+    h = hash_key(id_col, seed)
     return F.aggregate(
         F.sequence(F.lit(1), F.lit(15)),
         F.lit(0.0),

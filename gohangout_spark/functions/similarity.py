@@ -91,14 +91,14 @@ def brute_force_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).tolist()
 
 
 def lsh_bucket_key(vec_col, dim: int, n_planes: int = 8, seed: int = 42):
     """Random-hyperplane sign bits packed into one long bucket key."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes, seed)
     key = F.lit(0).cast("long")
     for j, plane in enumerate(planes):
         lit_plane = F.array(*[F.lit(float(v)) for v in plane])

@@ -347,7 +347,7 @@ def logbucket_quantiles(
 KMV_SPAN = 1 << 48  # hash domain: 12 md5 hex chars
 
 
-def _bottom_k(df: DataFrame, gcols: list[str], k: int) -> DataFrame:
+def bottom_k(df: DataFrame, gcols: list[str], k: int) -> DataFrame:
     """The bottom-k re-sketch shared by kmv_table / kmv_union (and the
     streaming store's load): distinct hashes per group, k smallest kept.
     One definition so the synopsis-validity invariant cannot drift
@@ -399,7 +399,7 @@ def kmv_table(
     near or below k, every duplicate of a bottom-k hash passes the
     partial WindowGroupLimit, and ungrouped they all funnel into the
     single partitionBy(lit(1)) window task. The guard pre-reduces to
-    DISTINCT (group, h) via :func:`_bottom_k` — one extra well-spread
+    DISTINCT (group, h) via :func:`bottom_k` — one extra well-spread
     hash exchange with map-side dedup, after which the window input is
     duplicate-free. It is OPT-IN, not the default, because both the
     default's hazard and the guard's cost are data-shaped: measured at
@@ -422,7 +422,7 @@ def kmv_table(
         *gcols, kmv_hash(F.col(col)).alias("h")
     )
     if pre_distinct:
-        return _bottom_k(src, gcols, k)
+        return bottom_k(src, gcols, k)
     w = Window.partitionBy(*(gcols or [F.lit(1)])).orderBy("h")
     return (
         src.withColumn("__dr", F.dense_rank().over(w))
@@ -463,7 +463,7 @@ def kmv_union(
     :func:`kmv_estimate` on the result estimates |A ∪ B|. Bounded: runs on
     ≤ 2k rows per group."""
     gcols = list(group_cols)
-    return _bottom_k(a.unionByName(b), gcols, k)
+    return bottom_k(a.unionByName(b), gcols, k)
 
 
 def kmv_intersect_estimate(

@@ -283,30 +283,6 @@ class FilterBox:
             out = out.drop(tmp)
         return out
 
-    @staticmethod
-    def _cond_assign(
-        out: DataFrame,
-        src: DataFrame,
-        path: str,
-        new_col: Column,
-        eff: Column,
-        otherwise: Column | None = None,
-    ) -> DataFrame:
-        segs = parse_field(path)
-        top = str(segs[0])
-        if len(segs) == 1:
-            if otherwise is not None:
-                value = F.when(eff, new_col).otherwise(otherwise)
-            elif top in out.columns:
-                value = F.when(eff, new_col).otherwise(F.col(f"`{top}`"))
-            else:
-                value = F.when(eff, new_col)
-            return out.withColumn(top, value)
-        old = otherwise
-        if old is None:
-            old = field_col(path, out) if top in out.columns else F.lit(None)
-        return set_field(out, path, F.when(eff, new_col).otherwise(old))
-
 
 class Chain:
     """An ordered list of FilterBoxes compiled over a DataFrame —

@@ -49,12 +49,15 @@ class Filters(Filter):
             finally:
                 child.ifs = saved
 
-        cond = compile_conditions(parent_ifs, df, box.ts_field)
-        for path, spec in (box.add_fields or {}).items():
-            rendered = compile_render(spec, df, box.ts_field, bare_is_field=False)
-            df = FilterBox._cond_assign(df, df, path, rendered, cond)
-        for path in box.remove_fields or []:
-            df = FilterBox._cond_assign(df, df, path, F.lit(None), cond)
+        # the box's own add_fields then remove_fields, in one projection
+        assigns = {
+            path: compile_render(spec, df, box.ts_field, bare_is_field=False)
+            for path, spec in box.add_fields.items()
+        }
+        assigns.update((path, F.lit(None)) for path in box.remove_fields)
+        if assigns:
+            cond = compile_conditions(parent_ifs, df, box.ts_field)
+            df = FilterBox._project(df, assigns, {}, cond)
         if snapshotted:
             df = df.drop(self.GUARD)
         return df

@@ -474,7 +474,7 @@ class ElasticsearchSink(_BulkSink):
         seed host carry over to the discovered hosts (assembleHosts)."""
         import json as _json
 
-        from gohangout_spark.expr.dict_conditions import evaluate_condition
+        from gohangout_spark.expr.conditions import evaluate_condition
 
         match = self.sniff.get("match")
         last = None

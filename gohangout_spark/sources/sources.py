@@ -179,16 +179,24 @@ class _Spool:
     its records to ``write``, which makes one JSON-lines file per call in
     the spool directory, atomically (write ``.tmp``, then rename), so the
     text file-stream tailing the directory never reads a partial file.
-    ``read`` turns the spooled lines back into columns."""
+    ``read`` turns the spooled lines back into columns. The directory is
+    made on first use, so a source that never spools leaves none behind."""
 
     def __init__(self, path: str | None, prefix: str):
+        self._path = path
+        self._prefix = prefix
+        self.stopping = None
+        self._thread = None
+
+    @property
+    def dir(self) -> str:
         import os
         import tempfile
 
-        self.dir = path or tempfile.mkdtemp(prefix=prefix)
-        os.makedirs(self.dir, exist_ok=True)
-        self.stopping = None
-        self._thread = None
+        if self._path is None:
+            self._path = tempfile.mkdtemp(prefix=self._prefix)
+        os.makedirs(self._path, exist_ok=True)
+        return self._path
 
     @property
     def running(self) -> bool:
@@ -264,8 +272,11 @@ class UDPSource(Source):
             raise ValueError("max_length must be bigger than zero")
         self.max_length = ml
         self._spool = _Spool(self.conf.get("spool_dir"), "gohangout_udp_")
-        self.spool_dir = self._spool.dir
         self._sock = None
+
+    @property
+    def spool_dir(self) -> str:
+        return self._spool.dir
 
     @property
     def port(self) -> int:
@@ -340,7 +351,10 @@ class KafkaSource(Source):
     def __init__(self, conf):
         super().__init__(conf)
         self._spool = _Spool(self.conf.get("spool_dir"), "gohangout_kafka_")
-        self.spool_dir = self._spool.dir
+
+    @property
+    def spool_dir(self) -> str:
+        return self._spool.dir
 
     def _options(self) -> dict[str, str]:
         from gohangout_spark.sources.kafka_wire import pop_sasl

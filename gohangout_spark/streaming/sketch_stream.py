@@ -157,12 +157,12 @@ def load_kmv_sketch(
     synopsis of the union (each globally-smallest hash is smallest in
     its own epoch), so a drained stream's estimates EQUAL the one-shot
     batch sketch's."""
-    from gohangout_spark.functions.sketch import _bottom_k
+    from gohangout_spark.functions.sketch import bottom_k
 
-    # _bottom_k selects (group..., h) only — dropping the nondeterministic
+    # bottom_k selects (group..., h) only — dropping the nondeterministic
     # `epoch` partition column the parquet read adds, so the loaded
     # synopsis really has kmv_table's schema and composes with kmv_union
-    return _bottom_k(spark.read.parquet(sketch_path), group_cols, k)
+    return bottom_k(spark.read.parquet(sketch_path), group_cols, k)
 
 
 def _start_epoch_store(stream: DataFrame, sketch_path: str, make_partial,

@@ -750,9 +750,9 @@ def _lsh_topk_oracle_sql(dim: int = 64, n_planes: int = 6, k: int = 5) -> str:
     vector's bucket key (sign-bit arithmetic identical to the plan
     literals), joins on bucket equality, and re-ranks with exact cosine —
     the whole approximate pipeline is replayed, not bounded."""
-    from gohangout_spark.functions.similarity import _hyperplanes
+    from gohangout_spark.functions.similarity import hyperplanes
 
-    planes = _hyperplanes(dim, n_planes, seed=42)
+    planes = hyperplanes(dim, n_planes, seed=42)
     return f"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 b AS (SELECT vec_id, v, {_bucket_sql('v', planes)} AS bucket FROM e),
 q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 10),
@@ -1085,11 +1085,11 @@ def _neardup_lsh_oracle_sql(
     literals; a pair is a candidate iff it shares the bucket key in ANY
     band, then the exact unit-dot similarity gates at the threshold —
     identical pipeline, identical pair space, no recall bound involved."""
-    from gohangout_spark.functions.similarity import _hyperplanes
+    from gohangout_spark.functions.similarity import hyperplanes
 
     bands = "\nUNION ALL ".join(
         f"SELECT vec_id, {b} AS band, "
-        f"{_bucket_sql('uv', _hyperplanes(dim, n_planes, seed=42 + b))} AS bkey FROM u"
+        f"{_bucket_sql('uv', hyperplanes(dim, n_planes, seed=42 + b))} AS bkey FROM u"
         for b in range(n_bands)
     )
     return f"""WITH u AS (
@@ -2815,7 +2815,7 @@ _CC_LABELS_CTE = f"""WITH RECURSIVE t AS (
          SELECT node, min(r) AS cluster_id FROM reach GROUP BY node)"""
 
 
-def _adjacent_jaccard_pairs(docs):
+def adjacent_jaccard_pairs(docs):
     """Engine-side twin of the oracle's `pairs` CTE: adjacent-id
     token-jaccard >= 0.5 (SQL-expressible so recursive CTEs can verify
     everything built on top)."""
@@ -2847,7 +2847,7 @@ def dedup_clusters(spark, sf_dir):
     from gohangout_spark.functions.dedup import cluster_duplicates
 
     docs = _docs(spark, sf_dir)
-    pairs = _adjacent_jaccard_pairs(docs)
+    pairs = adjacent_jaccard_pairs(docs)
     return cluster_duplicates(pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
@@ -2890,7 +2890,7 @@ def cluster_aware_split_q(spark, sf_dir):
     from gohangout_spark.functions.dedup import cluster_aware_split
 
     docs = _docs(spark, sf_dir)
-    pairs = _adjacent_jaccard_pairs(docs)
+    pairs = adjacent_jaccard_pairs(docs)
     return cluster_aware_split(
         docs.select("doc_id"), pairs, id_col="doc_id", seed=42
     ).select(
@@ -2927,7 +2927,7 @@ def dedup_best_per_cluster(spark, sf_dir):
     from gohangout_spark.functions.dedup import keep_best_per_cluster
 
     docs = _docs(spark, sf_dir)
-    pairs = _adjacent_jaccard_pairs(docs)
+    pairs = adjacent_jaccard_pairs(docs)
     scored = docs.select(
         "doc_id", F.length("text").cast("long").alias("score")
     )
@@ -6137,11 +6137,11 @@ def top_phrases(spark, sf_dir):
     rank assigned over the 25 survivors only."""
     from pyspark.sql.window import Window
 
-    from gohangout_spark.functions.curation import _word_ngrams_all
+    from gohangout_spark.functions.curation import word_ngrams_all
 
     docs = _docs(spark, sf_dir)
     grams = docs.select(
-        F.explode(_word_ngrams_all(F.col("text"), 2)).alias("phrase")
+        F.explode(word_ngrams_all(F.col("text"), 2)).alias("phrase")
     )
     top = (
         grams.groupBy("phrase")

@@ -359,6 +359,37 @@ class TestRender:
         ]
         assert sorted(vals) == ["0", "1704067200000"]
 
+    def test_template_event_dot_argument(self, df):
+        # Go passes the event as `.`: `before . "24h"` is the same render as
+        # the shorthand `before "24h"`; `timestamp .` is `timestamp`
+        got = {
+            r["name"]: r
+            for r in df.select(
+                "name",
+                compile_render('{{before . "24h"}}', df, ts_field="ts").alias("dot"),
+                compile_render('{{before "24h"}}', df, ts_field="ts").alias("short"),
+                compile_render("{{timestamp .}}", df, ts_field="ts").alias("ts_ms"),
+            ).collect()
+        }
+        assert got["childe"]["dot"] == got["childe"]["short"] == "true"
+        assert got["other"]["dot"] == got["other"]["short"] == "false"
+        assert got["childe"]["ts_ms"] == "1704067200000"
+
+    def test_template_builtins_and_parens(self, df):
+        out = df.select(
+            compile_render('{{eq .name "childe"}}', df).alias("eq"),
+            compile_render('{{and (eq .name "childe") (gt .age 10)}}', df).alias("and"),
+            compile_render("{{not .missing}}", df).alias("not"),
+            compile_render("{{upper (.name | trunc 3)}}", df).alias("paren"),
+            compile_render("{{.name|upper}}", df).alias("nospace"),
+        ).first()
+        assert out["eq"] == "true" and out["and"] == "true" and out["not"] == "true"
+        assert out["paren"] == "CHI" and out["nospace"] == "CHILDE"
+        with pytest.raises(ValueError):
+            compile_render("{{upper .}}", df)
+        with pytest.raises(ValueError):
+            compile_render("{{upper (.name}}", df)
+
 
 class TestTemplateConditions:
     """Go-template condition syntax ({{if ...}}y{{end}}) — the reference's
@@ -387,7 +418,7 @@ class TestTemplateConditions:
         assert names_matching(df, compile_condition('{{if after . "24h"}}y{{end}}', df, ts_field="ts")) == ["other"]
 
     def test_unsupported_raises(self, df):
-        from gohangout_spark.expr.template_conditions import TemplateConditionError
+        from gohangout_spark.expr.conditions import TemplateConditionError
 
         for bad in ["{{now}}", "{{if printf .x}}y{{end}}", "{{if .a}}n{{end}}"]:
             with pytest.raises((TemplateConditionError, ValueError)):

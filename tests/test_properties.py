@@ -645,3 +645,50 @@ class TestClusterSplitProperties:
             for comp in self._components(n_nodes, edges).values()
         )
         assert got == want, (edges, scores)
+
+
+# ------------------------------------------- dict evaluator vs Column compiler
+
+KEYS = ("a", "b", "c")
+TEXT = st.text(alphabet="ab", max_size=3)
+
+
+@st.composite
+def dsl(draw, depth=0):
+    """A random DSL string over Exist/EQ/HasPrefix/Contains and && || !."""
+    if depth > 2 or draw(st.booleans()):
+        key = draw(st.sampled_from(KEYS))
+        name = draw(st.sampled_from(["Exist", "EQ", "HasPrefix", "Contains"]))
+        return f"Exist({key})" if name == "Exist" else f'{name}({key},"{draw(TEXT)}")'
+    op = draw(st.sampled_from(["&&", "||", "!"]))
+    if op == "!":
+        inner = draw(dsl(depth + 1))
+        return f"!{inner}" if "&" not in inner and "|" not in inner else f"!({inner})"
+    left, right = draw(dsl(depth + 1)), draw(dsl(depth + 1))
+    if draw(st.booleans()):
+        left, right = f"({left})", f"({right})"
+    return f"{left} {op} {right}"
+
+
+flat_dicts = st.dictionaries(st.sampled_from(KEYS), TEXT)
+
+
+class TestDictEvaluatorMatchesColumns:
+    """One parser, two folds: ``evaluate_condition`` over a dict and the
+    compiled Column over the same event as a one-row frame agree."""
+
+    @settings(max_examples=25, deadline=None)
+    @given(conds=st.lists(dsl(), min_size=1, max_size=4),
+           dicts=st.lists(flat_dicts, min_size=1, max_size=5))
+    def test_differential(self, spark, conds, dicts):
+        from gohangout_spark.expr.conditions import evaluate_condition
+
+        df = spark.createDataFrame(
+            [(i, *(d.get(k) for k in KEYS)) for i, d in enumerate(dicts)],
+            "rid int, " + ", ".join(f"{k} string" for k in KEYS),
+        )
+        cols = [compile_condition(s, df).alias(f"c{j}") for j, s in enumerate(conds)]
+        got = {r["rid"]: r for r in df.select("rid", *cols).collect()}
+        for j, s in enumerate(conds):
+            for i, d in enumerate(dicts):
+                assert bool(got[i][f"c{j}"]) == evaluate_condition(s, d), (s, d)

@@ -357,7 +357,7 @@ class TestSniff:
             )
 
     def test_dict_condition_dsl(self):
-        from gohangout_spark.expr.dict_conditions import evaluate_condition
+        from gohangout_spark.expr.conditions import evaluate_condition
 
         node = {
             "name": "data-1",

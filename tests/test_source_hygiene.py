@@ -3,7 +3,9 @@ with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
 ``\\s`` escape in a docstring), so the package imports cleanly under
 ``python -W error``; the AQE-aware plan walk has one definition; no
 module uses the deprecated ``PandasUDFType``; the A/B runner's variant
-specs parse; each I/O transport setting is read in one place."""
+specs parse; each I/O transport setting is read in one place; no module
+imports another's private names; the condition grammars are parsed in one
+place each."""
 
 import importlib.util
 import pathlib
@@ -80,3 +82,73 @@ def test_io_transport_defined_once():
     sources = (PKG / "sources" / "sources.py").read_text(encoding="utf-8")
     writers = re.findall(r"os\.(?:rename|replace)\([^)]*\.tmp", sources)
     assert len(writers) == 1, writers
+
+
+def _imports_private(path: pathlib.Path):
+    """(line, name) for each ``_name`` imported from a package module, or
+    read as ``module._name`` off an imported package module."""
+    import ast
+
+    def is_module(dotted: str) -> bool:
+        rel = ROOT.joinpath(*dotted.split("."))
+        return rel.with_suffix(".py").exists() or (rel / "__init__.py").exists()
+
+    def private(name: str) -> bool:
+        return name.startswith("_") and not name.startswith("__")
+
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    modules: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("gohangout_spark"):
+            for a in node.names:
+                if private(a.name):
+                    yield node.lineno, a.name
+                elif is_module(f"{node.module}.{a.name}"):
+                    modules.add(a.asname or a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("gohangout_spark") and a.asname:
+                    modules.add(a.asname)
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+            and private(node.attr)
+        ):
+            yield node.lineno, f"{node.value.id}.{node.attr}"
+
+
+def test_no_private_cross_module_imports():
+    """A helper another module needs has a public name; no module reaches
+    into a package module's private names."""
+    offenders = [
+        f"{path.relative_to(ROOT)}:{line}: {name}"
+        for d in ("gohangout_spark", "tools")
+        for path in sorted((ROOT / d).rglob("*.py"))
+        for line, name in _imports_private(path)
+    ]
+    assert not offenders, offenders
+
+
+def test_condition_grammar_defined_once():
+    """The predicate DSL (its ``&& || !`` precedence table) and the
+    ``{{if X}}y{{end}}`` template shape are parsed only in
+    expr/conditions.py; template actions compile only in expr/render.py."""
+    expr = PKG / "expr"
+    assert not (expr / "dict_conditions.py").exists()
+    assert not (expr / "template_conditions.py").exists()
+    grammar = re.compile(r"""["']&&["']\s*:|\\\{\\\{\\s\*if""")
+    owners = [
+        str(path.relative_to(PKG))
+        for path in sorted(PKG.rglob("*.py"))
+        if grammar.search(path.read_text(encoding="utf-8"))
+    ]
+    assert owners == ["expr/conditions.py"], owners
+    action = re.compile(r"""elif c in ["']\(\)""")
+    compilers = [
+        str(path.relative_to(PKG))
+        for path in sorted(PKG.rglob("*.py"))
+        if action.search(path.read_text(encoding="utf-8"))
+    ]
+    assert compilers == ["expr/render.py"], compilers

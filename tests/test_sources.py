@@ -75,6 +75,19 @@ class TestKafkaOptions:
         with pytest.raises(ValueError, match="need topic or assign"):
             KafkaSource({"consumer_settings": {}})._options()
 
+    def test_connector_tier_makes_no_spool_dir(self, tmp_path, monkeypatch):
+        """Only the dev-wire stream spools; a connector-tier source must not
+        leave a temp directory behind, yet ``spool_dir`` stays usable."""
+        import os
+        import tempfile
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        src = KafkaSource({"topic": {"web": 1}, "consumer_settings": {}})
+        src._options()
+        assert list(tmp_path.glob("gohangout_kafka_*")) == []
+        assert os.path.isdir(src.spool_dir)
+        assert os.path.dirname(src.spool_dir) == str(tmp_path)
+
 
 class TestRandom:
     def test_range_and_count(self, spark):

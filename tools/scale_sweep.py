@@ -347,9 +347,9 @@ def _psl_scan(d):
 
 def _cluster_split(d):
     from gohangout_spark.functions.dedup import cluster_aware_split
-    from gohangout_spark.workload import _adjacent_jaccard_pairs
+    from gohangout_spark.workload import adjacent_jaccard_pairs
 
-    pairs = _adjacent_jaccard_pairs(d)
+    pairs = adjacent_jaccard_pairs(d)
     return cluster_aware_split(d.select("doc_id"), pairs, id_col="doc_id")
 
 
