@@ -22,6 +22,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gohangout_spark.expr.dateformat import go_layout_to_java
 from gohangout_spark.expr.paths import field_col, is_field_ref
@@ -151,10 +152,29 @@ _COMPARE = {
 }
 
 
-def _truth(col: Column, is_bool: bool) -> Column:
-    """Go ``if`` truth: a boolean result is itself; any other value (a
-    field, a string) is true when non-null and its string form is non-empty."""
-    return col if is_bool else col.isNotNull() & (col.cast("string") != "")
+def _truth(col: Column, is_bool: bool, df: DataFrame | None) -> Column:
+    """Go ``if`` truth. A boolean function result is itself. Any other
+    value follows Go's rule for its type, resolved on ``df`` at plan time:
+    a boolean is itself, a string, binary, array or map is true when
+    non-empty, and null is false. A number is true when non-null: the
+    reference's JSON decoder yields ``json.Number`` (a string), so ``0``
+    is true there; a struct or timestamp is true when non-null too."""
+    if is_bool:
+        return col
+    if df is None:
+        raise ValueError("Go `if` truth needs the event frame to resolve the value's type")
+    dtype = df.select(col).schema[0].dataType
+    if isinstance(dtype, T.NullType):
+        return F.lit(False)
+    if isinstance(dtype, T.BooleanType):
+        test = col
+    elif isinstance(dtype, (T.StringType, T.BinaryType)):
+        test = F.length(col) > 0
+    elif isinstance(dtype, (T.ArrayType, T.MapType)):
+        test = F.size(col) > 0
+    else:
+        test = col.isNotNull()
+    return F.coalesce(test, F.lit(False))
 
 
 class _Action:
@@ -210,7 +230,7 @@ class _Action:
             args.append(piped)
             raw_args.append(None)
         if head in ("and", "or", "not"):
-            cols = [_truth(c, b) for c, b in args]
+            cols = [_truth(c, b, self.df) for c, b in args]
         else:
             cols = [c for c, _ in args]
         try:
@@ -241,7 +261,7 @@ def compile_action_truth(
     expr: str, df: DataFrame | None = None, ts_field: str = "@timestamp"
 ) -> Column:
     """The Go ``{{if expr}}`` truth of one template action."""
-    return _truth(*_Action(expr, df, ts_field, allow_udf=False).compile())
+    return _truth(*_Action(expr, df, ts_field, allow_udf=False).compile(), df)
 
 
 def _field_ref(tok: str, df: DataFrame | None) -> Column:

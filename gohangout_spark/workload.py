@@ -10,6 +10,13 @@ timezone representation differences.
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+import shutil
+import tempfile
+import uuid
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -3930,38 +3937,73 @@ def dedup_incremental(spark, sf_dir):
     ).filter(F.col("est_jaccard") >= 0.2)
 
 
-def _write_epoch_files(
-    df, id_col: str, base: str, in_dir: str, n: int = 4, assign: str = "range"
-):
-    """Shared scaffold of the stream-replay gates (dedup / countmin /
-    logbucket / watermark): split ``df`` into ``n`` single-file parquet
-    batches under ``in_dir``, mtime-ordered so a maxFilesPerTrigger=1
-    file source delivers them as ``n`` foreachBatch epochs in ingest
-    order. ``assign="range"`` cuts contiguous ``id_col`` ranges (batches
-    arrive roughly in id order); ``assign="mod"`` assigns ``id % n``
-    (every batch spans the full id/time range — the late-data scenario).
-    The driver pulls only the scalar id bounds, never rows."""
-    import glob
-    import os
-    import shutil
+# The event slice the Kafka and file-stream gates replay: its columns and
+# the schema a stream (or the Kafka source's JSON codec) reads it with.
+_EVENT_COLS = ("event_id", "user_id", "event_type")
+_EVENT_DDL = "event_id bigint, user_id bigint, event_type string"
 
-    if assign != "mod":
-        # id bounds (one scan) are only needed for the range cuts
-        lo, hi = df.agg(F.min(id_col), F.max(id_col)).first()
-        cuts = [lo + (hi - lo + 1) * k // n for k in range(n + 1)]
-    for k in range(n):
-        tmp = f"{base}/tmp_{k}"
-        batch = (
-            df.filter(F.pmod(F.col(id_col), F.lit(n)) == k)
-            if assign == "mod"
-            else df.filter(
-                (F.col(id_col) >= cuts[k]) & (F.col(id_col) < cuts[k + 1])
-            )
+
+def _write_epoch_file(frame, in_dir: str, k: int) -> None:
+    """Write ``frame`` as the single parquet file ``in_dir/batch_<k>.parquet``
+    with mtime 1_000_000 + k, so a maxFilesPerTrigger=1 file source
+    delivers it as the k-th epoch."""
+    tmp = f"{in_dir}_tmp_{k}"
+    frame.coalesce(1).write.parquet(tmp)
+    (part,) = glob.glob(f"{tmp}/part-*.parquet")
+    dst = f"{in_dir}/batch_{k}.parquet"
+    shutil.move(part, dst)
+    os.utime(dst, (1_000_000 + k, 1_000_000 + k))
+
+
+@contextlib.contextmanager
+def epoch_stream(
+    spark, df, key, schema_ddl: str, *, n: int = 4, assign: str = "range",
+    flush_row: dict | None = None,
+):
+    """The replay gates' file stream: ``df`` split into ``n`` epoch files
+    (_write_epoch_file) in a fresh temp directory and read back as a
+    maxFilesPerTrigger=1 parquet stream of ``schema_ddl``, one epoch per
+    file. Yields ``(stream, base)``; ``base`` is the temp directory, which
+    holds the gate's checkpoints and stores and is removed on exit.
+
+    ``key`` is a column name or a Column. ``assign="range"`` cuts ``n``
+    contiguous key ranges (batches arrive roughly in key order);
+    ``assign="mod"`` assigns ``pmod(key, n)`` (every batch spans the full
+    id/time range — the late-data scenario). The driver pulls only the
+    scalar key bounds, never rows.
+
+    ``flush_row`` appends one far-future marker file after the epochs: it
+    gives the marker's value for every column but ``ts``, which is set 90
+    days past the data's last ``ts``, so the marker closes every real
+    window and never emits its own."""
+    key = F.col(key) if isinstance(key, str) else key
+    base = tempfile.mkdtemp(prefix="epoch_stream_")
+    in_dir = f"{base}/in"
+    try:
+        os.makedirs(in_dir)
+        if assign == "mod":
+            parts = [F.pmod(key, F.lit(n)) == k for k in range(n)]
+        else:
+            lo, hi = df.agg(F.min(key), F.max(key)).first()
+            cuts = [lo + (hi - lo + 1) * k // n for k in range(n + 1)]
+            parts = [(key >= cuts[k]) & (key < cuts[k + 1]) for k in range(n)]
+        for k, part in enumerate(parts):
+            _write_epoch_file(df.filter(part), in_dir, k)
+        if flush_row is not None:
+            far = F.max("ts") + F.expr("INTERVAL 90 DAYS")
+            marker = df.agg(*[
+                (far if c == "ts" else F.lit(flush_row[c]).cast(t)).alias(c)
+                for c, t in df.dtypes
+            ])
+            _write_epoch_file(marker, in_dir, n)
+        stream = (
+            spark.readStream.schema(schema_ddl)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
         )
-        batch.coalesce(1).write.parquet(tmp)
-        (part,) = glob.glob(f"{tmp}/part-*.parquet")
-        shutil.move(part, f"{in_dir}/batch_{k}.parquet")
-        os.utime(f"{in_dir}/batch_{k}.parquet", (1_000_000 + k, 1_000_000 + k))
+        yield stream, base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _drain_stream(query) -> None:
@@ -3970,6 +4012,24 @@ def _drain_stream(query) -> None:
     query.processAllAvailable()
     query.stop()
     query.awaitTermination()
+
+
+def drain_to_memory(df, mode: str = "append"):
+    """Run the streaming frame ``df`` to exhaustion into a uniquely named
+    memory sink in output ``mode``; return the sink's rows detached from
+    the stream (localCheckpoint), so they outlive its temp input."""
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    _drain_stream(
+        df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    )
+    return df.sparkSession.table(name).localCheckpoint(eager=True)
+
+
+def _assert_epoch_partitions(store: str) -> None:
+    """A sketch store written by four foreachBatch epochs holds four
+    partitions."""
+    epochs = [p for p in os.listdir(store) if p.startswith("epoch=")]
+    assert len(epochs) == 4, f"expected 4 epoch partitions, got {epochs}"
 
 
 @q("dedup_stream_replay", _INCR_RECALL_SQL)
@@ -3993,10 +4053,6 @@ def dedup_stream_replay(spark, sf_dir):
     _index_exists probe surfaces as missing/extra pairs against the SAME
     DuckDB all-pairs oracle dedup_incremental_recall uses. Python-side
     asserts additionally pin epoch count == 4 and survivors == all docs."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.functions.dedup import (
         minhash_index,
         minhash_lsh_candidates_incremental,
@@ -4009,19 +4065,11 @@ def dedup_stream_replay(spark, sf_dir):
     new = docs.filter(F.col("doc_id") >= 400).select("doc_id", "text")
     kw = dict(num_hashes=64, bands=32)
 
-    base = tempfile.mkdtemp(prefix="dedup_stream_gate_")
-    in_dir, index_path = f"{base}/in", f"{base}/index"
-    os.makedirs(in_dir)
-    try:
+    ddl = "doc_id bigint, text string"
+    with epoch_stream(spark, new, "doc_id", ddl) as (stream, base):
+        index_path = f"{base}/index"
         minhash_index(old, "text", "doc_id", **kw).write.parquet(index_path)
-        _write_epoch_files(new, "doc_id", base, in_dir)
-
         seen: list[tuple[int, int]] = []
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         query = start_dedup_stream(
             stream,
             index_path,
@@ -4061,8 +4109,6 @@ def dedup_stream_replay(spark, sf_dir):
         ).where(F.col("jaccard") >= 0.5)
         # detach from the temp parquet before it is removed (small result)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @q(
@@ -4114,34 +4160,13 @@ def link_metric_stream_replay(spark, sf_dir):
     Sum/mean ride integer cents (values have exactly 2 decimals; the
     float state sum is within 1e-6 of the true cent total, so the round
     trip is exact) to stay summation-order-independent across engines."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.streaming.stateful import cumulative_link_metric_stream
 
     ev = _events(spark, sf_dir).select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="link_metric_stream_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        for k in range(4):
-            tmp = f"{base}/tmp_{k}"
-            ev.filter(F.col("event_id") % 4 == k).coalesce(1).write.parquet(tmp)
-            (part,) = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{in_dir}/batch_{k}.parquet")
-            os.utime(f"{in_dir}/batch_{k}.parquet", (1_000_000 + k, 1_000_000 + k))
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, ts timestamp, event_type string, value double"
+    with epoch_stream(spark, ev, "event_id", ddl, assign="mod") as (stream, base):
         out = cumulative_link_metric_stream(
             stream,
             "event_type",
@@ -4182,17 +4207,13 @@ def link_metric_stream_replay(spark, sf_dir):
             .queryName("link_metric_stream_gate")
             .start()
         )
-        query.processAllAvailable()
-        query.stop()
-        query.awaitTermination()
-        assert rows, "stream emitted nothing"
-        return spark.createDataFrame(
-            rows,
-            "batch_id int, window_start string, event_type string, "
-            "count bigint, min double, max double, sum double, mean double",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        _drain_stream(query)
+    assert rows, "stream emitted nothing"
+    return spark.createDataFrame(
+        rows,
+        "batch_id int, window_start string, event_type string, "
+        "count bigint, min double, max double, sum double, mean double",
+    )
 
 
 @q(
@@ -4231,11 +4252,6 @@ def link_metric_tick_replay(spark, sf_dir):
     <= tick, cumulative counts). Expiry/offset/separate semantics are
     pinned by tests/test_refresher.py's randomized parity against an
     independent model of the Go ticker."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.streaming.refresher import (
         LinkMetricTickRefresher,
         refreshing_foreach_batch,
@@ -4245,24 +4261,8 @@ def link_metric_tick_replay(spark, sf_dir):
     ev = _events(spark, sf_dir).select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type"
     )
-    base = tempfile.mkdtemp(prefix="link_metric_tick_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        for k in range(4):
-            tmp = f"{base}/tmp_{k}"
-            ev.filter(F.col("event_id") % 4 == k).coalesce(1).write.parquet(tmp)
-            (part,) = glob.glob(f"{tmp}/part-*.parquet")
-            shutil.move(part, f"{in_dir}/batch_{k}.parquet")
-            os.utime(f"{in_dir}/batch_{k}.parquet", (1_000_000 + k, 1_000_000 + k))
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, ts timestamp, event_type string"
+    with epoch_stream(spark, ev, "event_id", ddl, assign="mod") as (stream, base):
         out = cumulative_link_metric_stream(
             stream,
             "event_type",
@@ -4310,16 +4310,12 @@ def link_metric_tick_replay(spark, sf_dir):
             .queryName("link_metric_tick_gate")
             .start()
         )
-        query.processAllAvailable()
-        query.stop()
-        query.awaitTermination()
-        assert rows, "ticker emitted nothing"
-        return spark.createDataFrame(
-            rows,
-            "tick_id int, window_start string, event_type string, count bigint",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        _drain_stream(query)
+    assert rows, "ticker emitted nothing"
+    return spark.createDataFrame(
+        rows,
+        "tick_id int, window_start string, event_type string, count bigint",
+    )
 
 
 @q(
@@ -5878,8 +5874,6 @@ def webdataset_export(spark, sf_dir):
     and archive framing are all hash-verified. Byte-for-byte shard
     reproducibility is additionally pytest-asserted
     (tests/test_functions.py::TestWebdatasetExport)."""
-    import tempfile
-
     from gohangout_spark.functions.export import write_webdataset_shards
 
     docs = _docs(spark, sf_dir)
@@ -6501,10 +6495,6 @@ def countmin_stream_replay(spark, sf_dir):
     epoch, a partial that reduced with different hash parameters, or a
     load that mis-sums the partition partials all hash-mismatch.
     Python-side asserts additionally pin epoch-partition count == 4."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.functions.sketch import countmin_estimate
     from gohangout_spark.streaming.sketch_stream import (
         load_countmin_sketch,
@@ -6516,17 +6506,9 @@ def countmin_stream_replay(spark, sf_dir):
         .where(F.col("user_id").isNotNull())
         .select("event_id", "user_id")
     )
-    base = tempfile.mkdtemp(prefix="countmin_stream_gate_")
-    in_dir, sk_path = f"{base}/in", f"{base}/sketch"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir)
-
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, user_id bigint"
+    with epoch_stream(spark, ev, "event_id", ddl) as (stream, base):
+        sk_path = f"{base}/sketch"
         query = start_countmin_stream(
             stream,
             sk_path,
@@ -6537,9 +6519,7 @@ def countmin_stream_replay(spark, sf_dir):
             query_name="countmin_stream_gate",
         )
         _drain_stream(query)
-
-        epochs = [p for p in os.listdir(sk_path) if p.startswith("epoch=")]
-        assert len(epochs) == 4, f"expected 4 epoch partials, got {epochs}"
+        _assert_epoch_partitions(sk_path)
 
         sk = load_countmin_sketch(spark, sk_path)
         exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
@@ -6549,8 +6529,6 @@ def countmin_stream_replay(spark, sf_dir):
         )
         # detach from the temp parquet before it is removed (small result)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # Shared by logbucket_value_quantiles (one-shot) and
@@ -6635,10 +6613,6 @@ def logbucket_stream_replay(spark, sf_dir):
     a lost/duplicated epoch, a partial built at a different scale, or a
     load that mis-sums partitions all hash-mismatch. Python-side assert
     pins epoch-partition count == 4."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.functions.sketch import logbucket_quantiles
     from gohangout_spark.streaming.sketch_stream import (
         load_logbucket_hist,
@@ -6646,19 +6620,9 @@ def logbucket_stream_replay(spark, sf_dir):
     )
 
     ev = _events(spark, sf_dir).select("event_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="logbucket_stream_gate_")
-    in_dir, hist_path = f"{base}/in", f"{base}/hist"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, event_type string, value double"
+    with epoch_stream(spark, ev, "event_id", ddl) as (stream, base):
+        hist_path = f"{base}/hist"
         query = start_logbucket_stream(
             stream,
             hist_path,
@@ -6669,9 +6633,7 @@ def logbucket_stream_replay(spark, sf_dir):
             query_name="logbucket_stream_gate",
         )
         _drain_stream(query)
-
-        epochs = [p for p in os.listdir(hist_path) if p.startswith("epoch=")]
-        assert len(epochs) == 4, f"expected 4 epoch partials, got {epochs}"
+        _assert_epoch_partitions(hist_path)
 
         hist = load_logbucket_hist(spark, hist_path, ["event_type"])
         out = logbucket_quantiles(hist, ["event_type"]).select(
@@ -6683,8 +6645,6 @@ def logbucket_stream_replay(spark, sf_dir):
         )
         # detach from the temp parquet before it is removed (small result)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # Append-mode watermark semantics, pinned end-to-end. Empirical model
@@ -6733,41 +6693,18 @@ def watermark_late_drop_replay(spark, sf_dir):
     (lagged filter / current-batch eviction) — any drift in Spark's late
     semantics, the file-order epoch protocol, or the flush discipline
     surfaces as missing/extra windows or counts."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from gohangout_spark.io import ensure_event_time
 
     ev = ensure_event_time(_events(spark, sf_dir), "ts").select(
         "event_id", "ts", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="wm_late_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        # flush batch: one far-future marker closes every real window (its
-        # own window stays > the final watermark, so it never emits)
-        flush_ts = ev.agg(
-            (F.max("ts") + F.expr("INTERVAL 90 DAYS")).alias("t")
-        ).first()["t"]
-        flush = spark.createDataFrame(
-            [(10**12, flush_ts, "zz_flush")], "event_id long, ts timestamp, event_type string"
-        )
-        flush.coalesce(1).write.parquet(f"{base}/tmp_flush")
-        import glob
-
-        (part,) = glob.glob(f"{base}/tmp_flush/part-*.parquet")
-        shutil.move(part, f"{in_dir}/batch_4.parquet")
-        os.utime(f"{in_dir}/batch_4.parquet", (1_000_004, 1_000_004))
-
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, ts timestamp, event_type string"
+    # flush batch: one far-future marker closes every real window (its
+    # own window stays > the final watermark, so it never emits)
+    flush = {"event_id": 10**12, "event_type": "zz_flush"}
+    with epoch_stream(
+        spark, ev, "event_id", ddl, assign="mod", flush_row=flush
+    ) as (stream, _):
         agg = (
             stream.withWatermark("ts", f"{_WM_DELAY_H} hours")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -6778,18 +6715,7 @@ def watermark_late_drop_replay(spark, sf_dir):
                 "n",
             )
         )
-        name = f"wm_late_{uuid.uuid4().hex[:8]}"
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        _drain_stream(query)
-        # detach from the memory sink (small result: windows x event types)
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(agg)
 
 
 @q(
@@ -6817,37 +6743,19 @@ def stream_stream_join_replay(spark, sf_dir):
     trade is the documented semantics
     (test_stream_stream_interval_join covers the condition-window
     behavior row by row)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from gohangout_spark.io import ensure_event_time
 
     ev = ensure_event_time(_events(spark, sf_dir), "ts")
-    base = tempfile.mkdtemp(prefix="ss_join_gate_")
-    dirs = {}
-    try:
-        for kind in ("purchase", "click"):
-            d = f"{base}/in_{kind}"
-            os.makedirs(d)
-            _write_epoch_files(
-                ev.where(F.col("event_type") == kind).select("event_id", "user_id", "ts"),
-                "event_id", f"{base}/tmp_{kind}", d, n=2, assign="mod",
-            )
-            dirs[kind] = d
-        schema = "event_id bigint, user_id bigint, ts timestamp"
-        purch = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(dirs["purchase"])
-            .withWatermark("ts", "90 days")
-        )
+
+    def side(kind):
+        rows = ev.where(F.col("event_type") == kind).select("event_id", "user_id", "ts")
+        ddl = "event_id bigint, user_id bigint, ts timestamp"
+        return epoch_stream(spark, rows, "event_id", ddl, n=2, assign="mod")
+
+    with side("purchase") as (purch, _), side("click") as (clicks, _):
+        purch = purch.withWatermark("ts", "90 days")
         clicks = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(dirs["click"])
-            .withColumnRenamed("ts", "cts")
+            clicks.withColumnRenamed("ts", "cts")
             .withColumnRenamed("event_id", "click_id")
             .withColumnRenamed("user_id", "cuser")
             .withWatermark("cts", "90 days")
@@ -6861,18 +6769,7 @@ def stream_stream_join_replay(spark, sf_dir):
             F.col("event_id").alias("purchase_id"),
             "click_id",
         )
-        name = f"ss_join_{uuid.uuid4().hex[:8]}"
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        _drain_stream(query)
-        # detach from the memory sink (pairs only: two long columns)
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(joined)
 
 
 @q(
@@ -6907,38 +6804,16 @@ def session_window_stream_replay(spark, sf_dir):
     session) with the session's exact first-event start and size — must
     hash-equal the batch islands replay (the same lag + running-sum
     technique sessionize_events uses)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from gohangout_spark.io import ensure_event_time
 
     ev = ensure_event_time(_events(spark, sf_dir), "ts").select(
         "event_id", "user_id", "ts"
     )
-    base = tempfile.mkdtemp(prefix="sess_stream_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        flush_ts = ev.agg(
-            (F.max("ts") + F.expr("INTERVAL 90 DAYS")).alias("t")
-        ).first()["t"]
-        spark.createDataFrame(
-            [(10**12, 10**9, flush_ts)], "event_id long, user_id long, ts timestamp"
-        ).coalesce(1).write.parquet(f"{base}/tmp_flush")
-        import glob
-
-        (part,) = glob.glob(f"{base}/tmp_flush/part-*.parquet")
-        shutil.move(part, f"{in_dir}/batch_4.parquet")
-        os.utime(f"{in_dir}/batch_4.parquet", (1_000_004, 1_000_004))
-
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, user_id bigint, ts timestamp"
+    flush = {"event_id": 10**12, "user_id": 10**9}
+    with epoch_stream(
+        spark, ev, "event_id", ddl, assign="mod", flush_row=flush
+    ) as (stream, _):
         agg = (
             stream.withWatermark("ts", "40 days")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -6951,18 +6826,7 @@ def session_window_stream_replay(spark, sf_dir):
                 "n",
             )
         )
-        name = f"sess_stream_{uuid.uuid4().hex[:8]}"
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        _drain_stream(query)
-        # detach from the memory sink (one row per session)
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(agg)
 
 
 @q(
@@ -6982,26 +6846,11 @@ def dedup_filter_stream_replay(spark, sf_dir):
     Keys only (the survivor's other columns are whichever copy arrived
     first within its batch — Spark keeps an arbitrary same-batch copy,
     so non-key columns are not layout-deterministic)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from gohangout_spark.operators import Dedup, FilterBox
 
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type", "ts")
-    base = tempfile.mkdtemp(prefix="dedup_filter_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, user_id bigint, event_type string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, user_id bigint, event_type string, ts timestamp"
+    with epoch_stream(spark, ev, "event_id", ddl, assign="mod") as (stream, _):
         out = FilterBox(
             Dedup(
                 fields=["user_id", "event_type"],
@@ -7010,19 +6859,7 @@ def dedup_filter_stream_replay(spark, sf_dir):
             ),
             ts_field="ts",
         ).apply(stream)
-        name = f"dedup_filter_{uuid.uuid4().hex[:8]}"
-        query = (
-            out.select("user_id", "event_type")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        _drain_stream(query)
-        # detach from the memory sink (one row per identity key)
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(out.select("user_id", "event_type"))
 
 
 @q(
@@ -7051,35 +6888,24 @@ def hll_stream_replay(spark, sf_dir):
     compared across engines. The epoch-count assert guards the store
     protocol itself — max-merge over overlapping mod-id epochs would
     otherwise mask a silently lost epoch."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.streaming.sketch_stream import (
         load_hll_estimates,
         start_hll_stream,
     )
 
     lg_k = 12
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    base = tempfile.mkdtemp(prefix="hll_stream_gate_")
-    in_dir, store = f"{base}/in", f"{base}/store"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ev = _events(spark, sf_dir).select(*_EVENT_COLS)
+    with epoch_stream(
+        spark, ev, "event_id", _EVENT_DDL, assign="mod"
+    ) as (stream, base):
+        store = f"{base}/store"
         query = start_hll_stream(
             stream, store, "user_id", ["event_type"],
             lg_k=lg_k, checkpoint=f"{base}/ckpt",
             query_name="hll_stream_gate",
         )
         _drain_stream(query)
-        epochs = [p for p in os.listdir(store) if p.startswith("epoch=")]
-        assert len(epochs) == 4, f"expected 4 epoch partitions, got {epochs}"
+        _assert_epoch_partitions(store)
         est = load_hll_estimates(spark, store, ["event_type"])
         # union-built reference over an id-mod-2 split (see docstring)
         halves = ev.groupBy(
@@ -7110,8 +6936,72 @@ def hll_stream_replay(spark, sf_dir):
         )
         # detach from the temp store before it is removed (5 rows)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+
+def _kafka_sink_conf(topic: str, brokers: str, **extra) -> dict:
+    """A dev-wire KafkaSink conf that keys each record by its user_id."""
+    return {
+        "topic": topic, "brokers": brokers, "key": "%{user_id}", "dev_wire": True,
+        **extra,
+    }
+
+
+def _kafka_source_conf(
+    topic: str, brokers: str, *, threads: int = 1, consumer: dict | None = None, **extra
+) -> dict:
+    """A dev-wire KafkaSource conf that decodes the JSON event slice with
+    ``threads`` group consumers; ``consumer`` holds the consumer settings
+    besides the bootstrap list (default: read from the beginning)."""
+    return {
+        "topic": {topic: threads},
+        "consumer_settings": {
+            "bootstrap.servers": brokers,
+            **(consumer or {"from.beginning": "true"}),
+        },
+        "decorate_events": True,
+        "dev_wire": True,
+        "codec": "json",
+        "schema": _EVENT_DDL,
+        **extra,
+    }
+
+
+def kafka_roundtrip(
+    spark, ev, topic: str, *, broker_kw: dict | None = None,
+    sink_kw: dict | None = None, source_kw: dict | None = None,
+):
+    """Produce ``ev`` through a dev-wire KafkaSink to the in-repo broker
+    fake and drain it back through a dev-wire KafkaSource: the Kafka
+    gates' round trip. ``broker_kw`` goes to FakeKafkaBroker (4 partitions
+    unless it says otherwise), ``sink_kw`` into the sink conf and
+    ``source_kw`` to _kafka_source_conf. The source drains the topic into
+    a driver-side list while the broker is up, and the frame it builds
+    (createDataFrame) has no dependency on the socket, so no checkpoint is
+    needed."""
+    from gohangout_spark.sinks.sinks import KafkaSink
+    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
+    from gohangout_spark.sources.sources import KafkaSource
+
+    with FakeKafkaBroker(**{"num_partitions": 4, **(broker_kw or {})}) as broker:
+        bootstrap = broker.bootstrap
+        KafkaSink(_kafka_sink_conf(topic, bootstrap, **(sink_kw or {}))).write_batch(ev)
+        src = KafkaSource(_kafka_source_conf(topic, bootstrap, **(source_kw or {})))
+        return src.batch(spark).select(*_EVENT_COLS)
+
+
+def _compressed_wire(codec: str) -> dict:
+    """kafka_roundtrip keywords for a compressed wire: the sink produces
+    with compression.type=codec (v2 RecordBatches whose records block is
+    compressed, CRC32C over the COMPRESSED payload), the broker stores
+    plain tuples and re-compresses every fetch page (fetch_codec), so
+    KafkaSource's client must decompress and CRC-validate on the way
+    back in. Wrong attribute bits, a CRC over the wrong span, or a codec
+    bug in either direction all hash-mismatch."""
+    return dict(
+        broker_kw={"fetch_codec": codec},
+        sink_kw={"wire_format": "v2", "compression.type": codec},
+        source_kw={"wire_format": "v2"},
+    )
 
 
 @q(
@@ -7131,39 +7021,8 @@ def kafka_wire_roundtrip_replay(spark, sf_dir):
     an encode/decode drift, or a key-render change that drops rows all
     mismatch; partitioner math itself is pinned bit-for-bit in
     test_kafka_wire."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
-    ev = _events(spark, sf_dir).where(F.col("event_id") < 500).select(
-        "event_id", "user_id", "event_type"
-    )
-    with FakeKafkaBroker(num_partitions=4) as broker:
-        KafkaSink(
-            {
-                "topic": "gate",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {"gate": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "from.beginning": "true",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        # _batch_dev_wire drains the topic into a driver-side list while
-        # the broker is up; the frame it builds (createDataFrame) has no
-        # dependency on the socket, so no checkpoint is needed here
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+    ev = _events(spark, sf_dir).where(F.col("event_id") < 500).select(*_EVENT_COLS)
+    return kafka_roundtrip(spark, ev, "gate")
 
 
 @q(
@@ -7183,40 +7042,13 @@ def kafka_wire_v2_roundtrip_replay(spark, sf_dir):
     a CRC miscompute, a batch-header layout error, or an offset-delta
     bug all mismatch. Batch/varint math is pinned bit-level in
     test_kafka_wire (RFC 3720 CRC-32C check values)."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
     ev = (
         _events(spark, sf_dir)
         .where((F.col("event_id") % 2 == 0) & (F.col("event_id") < 1000))
-        .select("event_id", "user_id", "event_type")
+        .select(*_EVENT_COLS)
     )
-    with FakeKafkaBroker(num_partitions=4) as broker:
-        KafkaSink(
-            {
-                "topic": "gate2",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-                "wire_format": "v2",
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {"gate2": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "from.beginning": "true",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "wire_format": "v2",
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+    v2 = {"wire_format": "v2"}
+    return kafka_roundtrip(spark, ev, "gate2", sink_kw=v2, source_kw=v2)
 
 
 @q(
@@ -7235,41 +7067,12 @@ def kafka_wire_gzip_replay(spark, sf_dir):
     client must gunzip and CRC-validate on the way back in. A bad
     attributes bit, a CRC computed over the wrong (un)compressed span,
     or the magic-1 relative-offset rule misapplied all mismatch."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
     ev = (
         _events(spark, sf_dir)
         .where((F.col("event_id") % 3 == 0) & (F.col("event_id") < 900))
-        .select("event_id", "user_id", "event_type")
+        .select(*_EVENT_COLS)
     )
-    with FakeKafkaBroker(num_partitions=4, fetch_codec="gzip") as broker:
-        KafkaSink(
-            {
-                "topic": "gz",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-                "wire_format": "v2",
-                "compression.type": "gzip",
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {"gz": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "from.beginning": "true",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "wire_format": "v2",
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+    return kafka_roundtrip(spark, ev, "gz", **_compressed_wire("gzip"))
 
 
 @q(
@@ -7289,38 +7092,16 @@ def kafka_group_threads_replay(spark, sf_dir):
     exactly-once check: an overlapping assignment duplicates rows, a
     partition no member owns loses them, and a consumer that drained
     before the generation settled double-reads — all mismatch."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
     ev = (
         _events(spark, sf_dir)
         .where((F.col("event_id") % 2 == 1) & (F.col("event_id") < 1200))
-        .select("event_id", "user_id", "event_type")
+        .select(*_EVENT_COLS)
     )
-    with FakeKafkaBroker(num_partitions=8) as broker:
-        KafkaSink(
-            {
-                "topic": "gth",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {"gth": 3},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "group.id": "gate-threads",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+    return kafka_roundtrip(
+        spark, ev, "gth",
+        broker_kw={"num_partitions": 8},
+        source_kw={"threads": 3, "consumer": {"group.id": "gate-threads"}},
+    )
 
 
 @q(
@@ -7348,33 +7129,16 @@ def kafka_stream_dev_replay(spark, sf_dir):
     ev = (
         _events(spark, sf_dir)
         .where((F.col("event_id") % 7 == 0) & (F.col("event_id") < 1400))
-        .select("event_id", "user_id", "event_type")
+        .select(*_EVENT_COLS)
     )
-    import tempfile
-
     view = "kafka_stream_dev_mem"
     with FakeKafkaBroker(num_partitions=4) as broker:
-        sink = KafkaSink(
-            {
-                "topic": "ksd",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
-        )
+        sink = KafkaSink(_kafka_sink_conf("ksd", broker.bootstrap))
         src = KafkaSource(
-            {
-                "topic": {"ksd": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "group.id": "stream-gate",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-                "poll_interval_s": 0.05,
-            }
+            _kafka_source_conf(
+                "ksd", broker.bootstrap,
+                consumer={"group.id": "stream-gate"}, poll_interval_s=0.05,
+            )
         )
         q_ = (
             src.stream(spark)
@@ -7409,54 +7173,9 @@ def kafka_stream_dev_replay(spark, sf_dir):
         finally:
             q_.stop()
             src.stop_consumer()
-        out = spark.table(view).select("event_id", "user_id", "event_type")
+        out = spark.table(view).select(*_EVENT_COLS)
         # detach from the stopped memory sink before the broker dies
         return spark.createDataFrame(out.collect(), out.schema)
-
-
-def _kafka_codec_replay(spark, sf_dir, codec, topic, mod):
-    """Shared body for the compressed-wire gates: sink produces with
-    compression.type=codec (v2 RecordBatches whose records block is
-    compressed, CRC32C over the COMPRESSED payload), the broker stores
-    plain tuples and re-compresses every fetch page (fetch_codec), so
-    KafkaSource's client must decompress and CRC-validate on the way
-    back in. Wrong attribute bits, a CRC over the wrong span, or a
-    codec bug in either direction all hash-mismatch."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
-    ev = (
-        _events(spark, sf_dir)
-        .where((F.col("event_id") % mod == 1) & (F.col("event_id") < 900))
-        .select("event_id", "user_id", "event_type")
-    )
-    with FakeKafkaBroker(num_partitions=4, fetch_codec=codec) as broker:
-        KafkaSink(
-            {
-                "topic": topic,
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-                "wire_format": "v2",
-                "compression.type": codec,
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {topic: 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "from.beginning": "true",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "wire_format": "v2",
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
 
 
 @q(
@@ -7471,8 +7190,13 @@ def kafka_wire_snappy_replay(spark, sf_dir):
     stream framing Kafka's magic-1 snappy messages carry and raw
     blocks for v2 records. Both directions run over real TCP bytes
     (produce compressed, broker re-compresses fetch pages); see
-    _kafka_codec_replay for the failure modes the hash pins."""
-    return _kafka_codec_replay(spark, sf_dir, "snappy", "sn", 3)
+    _compressed_wire for the failure modes the hash pins."""
+    ev = (
+        _events(spark, sf_dir)
+        .where((F.col("event_id") % 3 == 1) & (F.col("event_id") < 900))
+        .select(*_EVENT_COLS)
+    )
+    return kafka_roundtrip(spark, ev, "sn", **_compressed_wire("snappy"))
 
 
 @q(
@@ -7487,8 +7211,13 @@ def kafka_wire_lz4_replay(spark, sf_dir):
     wheels in-container; XXH32 pinned to published check values in
     tests). Both directions run over real TCP bytes; a frame-header
     drift, a bad sequence token, or an XXH32 miscompute fails the
-    decode and the hash. See _kafka_codec_replay."""
-    return _kafka_codec_replay(spark, sf_dir, "lz4", "l4", 4)
+    decode and the hash. See _compressed_wire."""
+    ev = (
+        _events(spark, sf_dir)
+        .where((F.col("event_id") % 4 == 1) & (F.col("event_id") < 900))
+        .select(*_EVENT_COLS)
+    )
+    return kafka_roundtrip(spark, ev, "l4", **_compressed_wire("lz4"))
 
 
 @q(
@@ -7507,42 +7236,18 @@ def kafka_sasl_roundtrip_replay(spark, sf_dir):
     answers — an unauthenticated or mis-credentialed connection is
     dropped, so a single client that skips the flow loses its
     partition's records and mismatches the oracle."""
-    from gohangout_spark.sinks.sinks import KafkaSink
-    from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
-    from gohangout_spark.sources.sources import KafkaSource
-
     ev = (
         _events(spark, sf_dir)
         .where((F.col("event_id") % 5 == 0) & (F.col("event_id") < 1000))
-        .select("event_id", "user_id", "event_type")
+        .select(*_EVENT_COLS)
     )
     creds = {"mechanism": "PLAIN", "user": "admin", "password": "admin-secret"}
-    with FakeKafkaBroker(
-        num_partitions=4, sasl_users={"admin": "admin-secret"}
-    ) as broker:
-        KafkaSink(
-            {
-                "topic": "auth",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-                "producer_settings": {"sasl": dict(creds)},
-            }
-        ).write_batch(ev)
-        src = KafkaSource(
-            {
-                "topic": {"auth": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": broker.bootstrap,
-                    "sasl": dict(creds),
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+    return kafka_roundtrip(
+        spark, ev, "auth",
+        broker_kw={"sasl_users": {"admin": "admin-secret"}},
+        sink_kw={"producer_settings": {"sasl": dict(creds)}},
+        source_kw={"consumer": {"sasl": dict(creds)}},
+    )
 
 
 @q(
@@ -7567,37 +7272,18 @@ def kafka_group_resume_replay(spark, sf_dir):
     from gohangout_spark.sources.kafka_wire import FakeKafkaBroker
     from gohangout_spark.sources.sources import KafkaSource
 
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
+    ev = _events(spark, sf_dir).select(*_EVENT_COLS)
     with FakeKafkaBroker(num_partitions=4) as broker:
-        sink = KafkaSink(
-            {
-                "topic": "grp",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
+        sink = KafkaSink(_kafka_sink_conf("grp", broker.bootstrap))
+        conf = _kafka_source_conf(
+            "grp", broker.bootstrap, consumer={"group.id": "gate-group"}
         )
-        conf = {
-            "topic": {"grp": 1},
-            "consumer_settings": {
-                "bootstrap.servers": broker.bootstrap,
-                "group.id": "gate-group",
-            },
-            "decorate_events": True,
-            "dev_wire": True,
-            "codec": "json",
-            "schema": "event_id bigint, user_id bigint, event_type string",
-        }
         sink.write_batch(ev.where(F.col("event_id") < 600))
         KafkaSource(conf).batch(spark).count()  # drain + commit slice one
         sink.write_batch(
             ev.where((F.col("event_id") >= 600) & (F.col("event_id") < 1000))
         )
-        return (
-            KafkaSource(conf)
-            .batch(spark)
-            .select("event_id", "user_id", "event_type")
-        )
+        return KafkaSource(conf).batch(spark).select(*_EVENT_COLS)
 
 
 @q(
@@ -7623,35 +7309,16 @@ def kafka_cluster_failover_replay(spark, sf_dir):
     from gohangout_spark.sources.kafka_wire import FakeKafkaCluster
     from gohangout_spark.sources.sources import KafkaSource
 
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
+    ev = _events(spark, sf_dir).select(*_EVENT_COLS)
     with FakeKafkaCluster(num_brokers=2, num_partitions=4) as cluster:
-        sink = KafkaSink(
-            {
-                "topic": "fo",
-                "brokers": cluster.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
-        )
+        sink = KafkaSink(_kafka_sink_conf("fo", cluster.bootstrap))
         sink.write_batch(ev.where(F.col("event_id") < 400))
         cluster.kill(0)
         sink.write_batch(
             ev.where((F.col("event_id") >= 400) & (F.col("event_id") < 800))
         )
-        src = KafkaSource(
-            {
-                "topic": {"fo": 1},
-                "consumer_settings": {
-                    "bootstrap.servers": cluster.bootstrap,
-                    "from.beginning": "true",
-                },
-                "decorate_events": True,
-                "dev_wire": True,
-                "codec": "json",
-                "schema": "event_id bigint, user_id bigint, event_type string",
-            }
-        )
-        return src.batch(spark).select("event_id", "user_id", "event_type")
+        src = KafkaSource(_kafka_source_conf("fo", cluster.bootstrap))
+        return src.batch(spark).select(*_EVENT_COLS)
 
 
 @q(
@@ -7683,16 +7350,9 @@ def kafka_group_rebalance_replay(spark, sf_dir):
         GroupConsumer,
     )
 
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
+    ev = _events(spark, sf_dir).select(*_EVENT_COLS)
     with FakeKafkaBroker(num_partitions=4) as broker:
-        sink = KafkaSink(
-            {
-                "topic": "reb",
-                "brokers": broker.bootstrap,
-                "key": "%{user_id}",
-                "dev_wire": True,
-            }
-        )
+        sink = KafkaSink(_kafka_sink_conf("reb", broker.bootstrap))
         sink.write_batch(ev.where(F.col("event_id") < 400))
         a = GroupConsumer(broker.bootstrap, "reb-group", ["reb"])
         a.join()
@@ -7726,13 +7386,8 @@ def kafka_group_rebalance_replay(spark, sf_dir):
     values = [(bytes(v),) for _, _, _, _, _, v in records]
     return (
         spark.createDataFrame(values, "value binary")
-        .select(
-            F.from_json(
-                F.col("value").cast("string"),
-                "event_id bigint, user_id bigint, event_type string",
-            ).alias("e")
-        )
-        .select("e.event_id", "e.user_id", "e.event_type")
+        .select(F.from_json(F.col("value").cast("string"), _EVENT_DDL).alias("e"))
+        .select("e.*")
     )
 
 
@@ -7750,23 +7405,13 @@ def file_sink_stream_replay(spark, sf_dir):
     duplicated files would surface — must hash-equal the source rows.
     A lost epoch, a double-committed micro-batch, or partition-column
     corruption through the directory encoding all mismatch."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.sinks.sinks import FileSink
 
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    base = tempfile.mkdtemp(prefix="file_sink_gate_")
-    in_dir, out_dir = f"{base}/in", f"{base}/out"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ev = _events(spark, sf_dir).select(*_EVENT_COLS)
+    with epoch_stream(
+        spark, ev, "event_id", _EVENT_DDL, assign="mod"
+    ) as (stream, base):
+        out_dir = f"{base}/out"
         sink = FileSink({"path": out_dir, "partition_by": "event_type"})
         query = (
             sink.stream_writer(stream)
@@ -7774,13 +7419,9 @@ def file_sink_stream_replay(spark, sf_dir):
             .start()
         )
         _drain_stream(query)
-        back = spark.read.parquet(out_dir).select(
-            "event_id", "user_id", "event_type"
-        )
+        back = spark.read.parquet(out_dir).select(*_EVENT_COLS)
         # detach from the temp parquet before it is removed
         return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @q(
@@ -7812,26 +7453,13 @@ def update_mode_stream_replay(spark, sf_dir):
     batch order — a swallowed update, an emission for an untouched
     group, or a cumulative total computed from the wrong batch prefix
     all hash-mismatch."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from gohangout_spark.io import ensure_event_time
 
     ev = ensure_event_time(_events(spark, sf_dir), "ts").select(
         "event_id", "event_type", "ts"
     )
-    base = tempfile.mkdtemp(prefix="update_mode_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        stream = (
-            spark.readStream.schema("event_id bigint, event_type string, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, event_type string, ts timestamp"
+    with epoch_stream(spark, ev, "event_id", ddl, assign="mod") as (stream, _):
         agg = (
             stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -7843,18 +7471,8 @@ def update_mode_stream_replay(spark, sf_dir):
                 "n",
             )
         )
-        name = f"update_mode_{uuid.uuid4().hex[:8]}"
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .start()
-        )
-        _drain_stream(query)
         # the memory table accumulates every per-batch update row
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(agg, "update")
 
 
 @q(
@@ -7872,40 +7490,16 @@ def stream_static_join_replay(spark, sf_dir):
     join — a dropped batch, a partial dim scan, or duplicate emission
     all hash-mismatch. Completes the streaming-join family next to
     stream_stream_join_replay's buffered-state leg."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     ev = _events(spark, sf_dir).select("event_id", "user_id")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
     )
-    base = tempfile.mkdtemp(prefix="ss_static_gate_")
-    in_dir = f"{base}/in"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir, assign="mod")
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, user_id bigint"
+    with epoch_stream(spark, ev, "event_id", ddl, assign="mod") as (stream, _):
         joined = stream.join(
             F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
         ).select("event_id", "user_id", "c_nationkey", "c_mktsegment")
-        name = f"ss_static_{uuid.uuid4().hex[:8]}"
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        _drain_stream(query)
-        # detach from the memory sink before the temp dir is removed
-        return spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return drain_to_memory(joined)
 
 
 # Shared oracle fragments (the _KMV_ORACLE pattern, applied to the two
@@ -8640,10 +8234,6 @@ def kmv_stream_replay(spark, sf_dir):
     hashes inflate h_k), a partial built at different k, or a load that
     forgets to re-truncate to k all hash-mismatch. Python-side assert
     pins epoch-partition count == 4."""
-    import os
-    import shutil
-    import tempfile
-
     from gohangout_spark.functions.sketch import kmv_estimate
     from gohangout_spark.streaming.sketch_stream import (
         load_kmv_sketch,
@@ -8655,19 +8245,9 @@ def kmv_stream_replay(spark, sf_dir):
         .where(F.col("user_id").isNotNull())
         .select("event_id", "event_type", "user_id")
     )
-    base = tempfile.mkdtemp(prefix="kmv_stream_gate_")
-    in_dir, sk_path = f"{base}/in", f"{base}/sketch"
-    os.makedirs(in_dir)
-    try:
-        _write_epoch_files(ev, "event_id", base, in_dir)
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, user_id bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+    ddl = "event_id bigint, event_type string, user_id bigint"
+    with epoch_stream(spark, ev, "event_id", ddl) as (stream, base):
+        sk_path = f"{base}/sketch"
         query = start_kmv_stream(
             stream,
             sk_path,
@@ -8678,9 +8258,7 @@ def kmv_stream_replay(spark, sf_dir):
             query_name="kmv_stream_gate",
         )
         _drain_stream(query)
-
-        epochs = [p for p in os.listdir(sk_path) if p.startswith("epoch=")]
-        assert len(epochs) == 4, f"expected 4 epoch partials, got {epochs}"
+        _assert_epoch_partitions(sk_path)
 
         sk = load_kmv_sketch(spark, sk_path, ["event_type"], k=64)
         est = kmv_estimate(sk, ["event_type"], k=64)
@@ -8696,8 +8274,6 @@ def kmv_stream_replay(spark, sf_dir):
         )
         # detach from the temp parquet before it is removed (small result)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @q(
@@ -9255,17 +8831,19 @@ def multimodal_flac_features(spark, sf_dir):
 # driver rows predate the rewrite, so driver-grade evidence for the NEW
 # shapes is the weakest link (this also pins the dup_span_stats n_windows
 # int32→int64 widening).  rfm_segments joins the head for its r10
-# range-pass restructure.  Slots 26-50 take the stalest oracle-backed
+# range-pass restructure, and tpch_q21 for its one-pass rewrite (its
+# driver row predates that shape).  Slots 27-50 take the stalest oracle-backed
 # rows with driver history: the 13 remaining r5-cohort rows, then the r6
 # cohort alphabetically.  Every row displaced below slot 50 is green in
 # CORRECTNESS_r06..r09 and re-confirmed in the FULLREG sweeps; nothing
 # below the line is staler than the freshest fill row (TestDriverWindow
 # recomputes the staleness table from the raw CORRECTNESS artifacts).
 _GATE_PRIORITY = [
-    # --- 25 slots: r9/r10-rewritten queries (driver rows predate the
+    # --- 26 slots: r9/r10-rewritten queries (driver rows predate the
     # rewrite; CORRECTNESS_r10 completes their evidence chain).
     # tpch_q18 / tpch_q20 / purchase_attribution joined in the final r10
-    # session (single-pass q18, window-total q20, one-scan asof union) ---
+    # session (single-pass q18, window-total q20, one-scan asof union);
+    # tpch_q21's one-pass shape followed ---
     "kneser_ney_perplexity",
     "dsir_importance_weights",
     "dup_span_stats",
@@ -9291,6 +8869,7 @@ _GATE_PRIORITY = [
     "tpch_q18",
     "tpch_q20",
     "purchase_attribution",
+    "tpch_q21",
     # --- 13 slots: the r5-cohort remainder (last driver row r5) ---
     "multimodal_flac_features",
     "multimodal_gif_features",
@@ -9305,7 +8884,7 @@ _GATE_PRIORITY = [
     "simhash_md5_neardup",
     "udaf_geomean",
     "webdataset_export",
-    # --- slots 36-50: r6 cohort alphabetically (last driver row r6);
+    # --- slots 40-50: r6 cohort alphabetically (last driver row r6);
     # the remainder of the cohort continues below the line ---
     "bloom_md5_decontaminate",
     "bpe_encode_fixed",
@@ -9385,7 +8964,6 @@ _GATE_PRIORITY = [
     "tpch_q14",
     "tpch_q15",
     "tpch_q16",
-    "tpch_q21",
     "tpch_q4",
     "tpch_q6",
     "tpch_q7",

@@ -413,6 +413,56 @@ class TestTemplateConditions:
     def test_truth_table(self, df, cond, expected):
         assert names_matching(df, compile_condition(cond, df, ts_field="ts")) == expected
 
+    # Go's ``if`` by the field's type: false, nil and empty strings,
+    # arrays and maps are empty; a struct is empty only when nil. A number
+    # is empty only when nil: the reference decodes JSON numbers as
+    # json.Number strings, so its ``{{if .n}}`` keeps n=0
+    TRUTH_BY_TYPE = [
+        ("t_bool", "boolean", True, True),
+        ("f_bool", "boolean", False, False),
+        ("n_bool", "boolean", None, False),
+        ("t_long", "bigint", 7, True),
+        ("z_long", "bigint", 0, True),
+        ("n_long", "bigint", None, False),
+        ("z_double", "double", 0.0, True),
+        ("t_str", "string", "false", True),
+        ("f_str", "string", "", False),
+        ("n_str", "string", None, False),
+        ("t_arr", "array<int>", [0], True),
+        ("f_arr", "array<int>", [], False),
+        ("t_map", "map<string,int>", {"a": 0}, True),
+        ("f_map", "map<string,int>", {}, False),
+        ("t_struct", "struct<a:int>", (None,), True),
+        ("n_struct", "struct<a:int>", None, False),
+    ]
+
+    def test_if_truth_by_type(self, spark):
+        ddl = ", ".join(f"{c} {t}" for c, t, _, _ in self.TRUTH_BY_TYPE)
+        one = spark.createDataFrame([tuple(v for _, _, v, _ in self.TRUTH_BY_TYPE)], ddl)
+        conds = {c: "{{if .%s}}y{{end}}" % c for c, *_ in self.TRUTH_BY_TYPE}
+        conds["absent"] = "{{if .absent}}y{{end}}"
+        conds["not_f_bool"] = "{{if not .f_bool}}y{{end}}"
+        got = one.select(
+            *[compile_condition(c, one).alias(n) for n, c in conds.items()]
+        ).first().asDict()
+        want = {c: e for c, _, _, e in self.TRUTH_BY_TYPE}
+        assert got == {**want, "absent": False, "not_f_bool": True}
+
+    def test_if_truth_of_json_decoded_zero(self, spark):
+        from gohangout_spark.sources.sources import apply_codec
+
+        raw = spark.createDataFrame([('{"n": 0, "x": 0.0}',)], "value string")
+        ev = apply_codec(raw, "json", "n bigint, x double")
+        got = ev.select(
+            compile_condition("{{if .n}}y{{end}}", ev).alias("n"),
+            compile_condition("{{if .x}}y{{end}}", ev).alias("x"),
+        ).first()
+        assert (got.n, got.x) == (True, True)
+
+    def test_if_truth_needs_a_frame(self):
+        with pytest.raises(ValueError, match="frame"):
+            compile_condition("{{if .flag}}y{{end}}")
+
     def test_before_after_dot(self, df):
         assert names_matching(df, compile_condition('{{if before . "24h"}}y{{end}}', df, ts_field="ts")) == ["childe"]
         assert names_matching(df, compile_condition('{{if after . "24h"}}y{{end}}', df, ts_field="ts")) == ["other"]

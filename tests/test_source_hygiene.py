@@ -5,7 +5,7 @@ with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
 module uses the deprecated ``PandasUDFType``; the A/B runner's variant
 specs parse; each I/O transport setting is read in one place; no module
 imports another's private names; the condition grammars are parsed in one
-place each."""
+place each; the replay gates' scaffolding is written once."""
 
 import importlib.util
 import pathlib
@@ -152,3 +152,19 @@ def test_condition_grammar_defined_once():
         if action.search(path.read_text(encoding="utf-8"))
     ]
     assert compilers == ["expr/render.py"], compilers
+
+
+def test_replay_scaffold_defined_once():
+    """The registry's replay gates share one epoch-file stream (one
+    maxFilesPerTrigger read, one mtime stamp) and one Kafka event schema;
+    the tools reuse the epoch writer instead of copying it."""
+    workload = (PKG / "workload.py").read_text(encoding="utf-8")
+    assert workload.count('"maxFilesPerTrigger"') == 1
+    assert workload.count("os.utime(") == 1
+    assert workload.count('"event_id bigint, user_id bigint, event_type string"') == 1
+    stampers = [
+        str(path.relative_to(ROOT))
+        for path in sorted((ROOT / "tools").rglob("*.py"))
+        if "os.utime(" in path.read_text(encoding="utf-8")
+    ]
+    assert not stampers, stampers

@@ -1,7 +1,7 @@
 """Dump .explain("formatted") for every headline query to plans/<round>/.
 
 Usage: python tools/dump_round_plans.py <round_dir> <suffix> [sf_dir] [query ...]
-e.g.   python tools/dump_round_plans.py plans/r09 before /root/testdata/sf0.1
+e.g.   python tools/dump_round_plans.py plans/r10 before <testdata>/sf0.1
 
 Planning only (no execution): the files record Exchange counts, join
 strategies, PushedFilters/ReadSchema and Python-eval nodes for the

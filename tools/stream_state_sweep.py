@@ -30,11 +30,8 @@ limiting case; this sweep is the capacity limiting case).
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, "/root/repo")
@@ -43,26 +40,21 @@ from pyspark.sql import functions as F
 
 from gohangout_spark import get_spark
 from gohangout_spark.io import ensure_event_time, load_table
+from gohangout_spark.workload import epoch_stream
 from tools.scale_sweep import build_derived
 
 N_EPOCHS = 8
 WATERMARK = "2 days"
 
 
-def write_time_epochs(df, ts_col: str, base: str, in_dir: str, n: int = N_EPOCHS):
-    """n single-file parquet batches cut by contiguous event-time ranges,
-    mtime-ordered for maxFilesPerTrigger=1 delivery (the time-ordered
-    twin of workload._write_epoch_files)."""
-    os.makedirs(in_dir, exist_ok=True)
-    sec = F.col(ts_col).cast("timestamp").cast("long")
-    lo, hi = df.agg(F.min(sec), F.max(sec)).first()
-    cuts = [lo + (hi - lo + 1) * k // n for k in range(n + 1)]
-    for k in range(n):
-        tmp = f"{base}/tmp_{k}"
-        df.filter((sec >= cuts[k]) & (sec < cuts[k + 1])).coalesce(1).write.parquet(tmp)
-        (part,) = glob.glob(f"{tmp}/part-*.parquet")
-        shutil.move(part, f"{in_dir}/batch_{k}.parquet")
-        os.utime(f"{in_dir}/batch_{k}.parquet", (1_000_000 + k, 1_000_000 + k))
+def time_epochs(spark, df):
+    """``df`` as a stream of N_EPOCHS files cut by contiguous event-time
+    ranges (epoch_stream keyed on the event's epoch seconds)."""
+    sec = F.col("ts").cast("timestamp").cast("long")
+    ddl = "event_id bigint, user_id bigint, ts timestamp"
+    return epoch_stream(
+        spark, df.select("event_id", "user_id", "ts"), sec, ddl, n=N_EPOCHS
+    )
 
 
 def state_metrics(query):
@@ -79,64 +71,45 @@ def state_metrics(query):
     return peak, final, removed, updated
 
 
-def run_session_windows(spark, ev, label):
-    base = tempfile.mkdtemp(prefix=f"state_sweep_sess_{label}_")
-    in_dir = f"{base}/in"
-    try:
-        n_in = ev.count()
-        write_time_epochs(ev.select("event_id", "user_id", "ts"), "ts", base, in_dir)
-        stream = (
-            spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+def run(query, base):
+    """Start ``query`` into a noop sink, drain it, and return
+    (wall, peak, final, removed, updated)."""
+    t0 = time.time()
+    q = (
+        query.writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", f"{base}/ckpt")
+        .start()
+    )
+    q.processAllAvailable()
+    wall = time.time() - t0
+    metrics = state_metrics(q)
+    q.stop()
+    q.awaitTermination()
+    return (wall, *metrics)
+
+
+def run_session_windows(spark, ev):
+    with time_epochs(spark, ev) as (stream, base):
         agg = (
             stream.withWatermark("ts", WATERMARK)
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        t0 = time.time()
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        wall = time.time() - t0
-        peak, final, removed, updated = state_metrics(q)
-        q.stop()
-        q.awaitTermination()
-        return n_in, wall, peak, final, removed, updated
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return (ev.count(), *run(agg, base))
 
 
-def run_interval_join(spark, ev, label):
-    base = tempfile.mkdtemp(prefix=f"state_sweep_join_{label}_")
-    try:
-        sides = {}
-        n_in = 0
-        for kind in ("purchase", "click"):
-            d = f"{base}/in_{kind}"
-            side = ev.where(F.col("event_type") == kind).select(
-                "event_id", "user_id", "ts"
-            )
-            n_in += side.count()
-            write_time_epochs(side, "ts", f"{base}/tmp_{kind}", d)
-            sides[kind] = d
-        schema = "event_id bigint, user_id bigint, ts timestamp"
-        purch = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(sides["purchase"])
-            .withWatermark("ts", WATERMARK)
-        )
+def run_interval_join(spark, ev):
+    purch_ev = ev.where(F.col("event_type") == "purchase")
+    click_ev = ev.where(F.col("event_type") == "click")
+    n_in = purch_ev.count() + click_ev.count()
+    with (
+        time_epochs(spark, purch_ev) as (purch, base),
+        time_epochs(spark, click_ev) as (clicks, _),
+    ):
+        purch = purch.withWatermark("ts", WATERMARK)
         clicks = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(sides["click"])
-            .withColumnRenamed("ts", "cts")
+            clicks.withColumnRenamed("ts", "cts")
             .withColumnRenamed("event_id", "click_id")
             .withColumnRenamed("user_id", "cuser")
             .withWatermark("cts", WATERMARK)
@@ -147,21 +120,7 @@ def run_interval_join(spark, ev, label):
             & (clicks["cts"] >= purch["ts"] - F.expr("INTERVAL 6 HOURS"))
             & (clicks["cts"] <= purch["ts"]),
         )
-        t0 = time.time()
-        q = (
-            joined.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        wall = time.time() - t0
-        peak, final, removed, updated = state_metrics(q)
-        q.stop()
-        q.awaitTermination()
-        return n_in, wall, peak, final, removed, updated
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return (n_in, *run(joined, base))
 
 
 def main():
@@ -184,7 +143,7 @@ def main():
         ("interval_join_6h", run_interval_join),
     ):
         for label, ev in (("sf0.1", small), ("100x", big)):
-            n_in, wall, peak, final, removed, updated = runner(spark, ev, label)
+            n_in, wall, peak, final, removed, updated = runner(spark, ev)
             print(
                 f"| {name} | {label} | {n_in} | {wall:.1f} | {peak} "
                 f"| {final} | {removed} | {updated} |"
