@@ -139,7 +139,8 @@ class KafkaSink(Sink):
 
     Tiers: production writes through Spark's `format("kafka")`. With
     ``dev_wire: true`` the encoded payload is produced through the
-    in-repo v0 wire-protocol client (sources/kafka_wire.py) instead —
+    in-repo wire-protocol client (sources/kafka_wire.py; ``wire_format``
+    "v0" MessageSets by default, or "v2" RecordBatches) instead —
     keyed rows partitioned by Kafka's public murmur2 default-partitioner
     hash, keyless rows round-robin, matching the classic producer.
     Driver-side and bounded by contract: dev tier only (same doctrine as

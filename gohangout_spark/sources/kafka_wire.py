@@ -4,17 +4,32 @@ that have neither the Spark Kafka connector jar nor a live broker
 (VERDICT r7 "what's missing" #1: the reference's primary input,
 input/kafka_input.go:54-146, had only option-wiring tests).
 
-What this is: a from-scratch implementation of the v0/v1-era slice of
-the PUBLIC Kafka protocol (the layout documented in the Apache Kafka
-protocol guide) —
+What this is: a from-scratch implementation of a slice of the PUBLIC
+Kafka protocol (the layout documented in the Apache Kafka protocol
+guide) —
 
 - request framing  : INT32 size | api_key INT16 | api_version INT16 |
                      correlation_id INT32 | client_id STRING | body
 - response framing : INT32 size | correlation_id INT32 | body
 - primitives       : big-endian ints, STRING (INT16 len, -1 null),
                      BYTES (INT32 len, -1 null), ARRAY (INT32 count)
-- Metadata    v0 (api 3), Produce v0 (api 0), Fetch v0 (api 1),
-  ListOffsets v0 (api 2)
+- Metadata v0 (api 3) and ListOffsets v0 (api 2), whose payload does
+  not depend on the message format
+- ONE Produce (api 0) and ONE Fetch (api 1) handler per side, with the
+  message format as a framing parameter (``FRAMINGS``): the format
+  picks the API version (Produce v0 / Fetch v0, or Produce v3 / Fetch
+  v4), that version's extra header fields, the encoder/decoder pair
+  and the fetch page-cut rule; everything else is one code path.
+  - ``"v0"``: MessageSets of magic-1 messages (CRC32 | magic |
+    attributes | timestamp INT64 ms | key BYTES | value BYTES), CRC
+    computed from the magic byte to the end.
+  - ``"v2"``: magic-2 RecordBatches (KIP-98) — zigzag-varint records,
+    optional headers, CRC32C (Castagnoli, implemented from scratch)
+    over attributes..end.
+  Clients select the format with ``message_format=`` and validate the
+  checksum on every fetch. The broker stores plain (key, value, ts)
+  tuples and re-frames on fetch, so v0 producers interoperate with v2
+  consumers and vice versa, like a real broker's up/down conversion.
 - the classic GROUP MEMBERSHIP protocol (the surface the reference's
   healer GroupConsumer rides, input/kafka_input.go:87-95): OffsetCommit
   v0 (api 8), OffsetFetch v0 (api 9), FindCoordinator v0 (api 10),
@@ -25,17 +40,6 @@ protocol guide) —
   ConsumerProtocol subscription/assignment blobs and the classic
   RangeAssignor, so eager rebalances and committed-offset handoffs run
   over real wire bytes (`GroupConsumer` below is the matching client).
-- MessageSet with magic-1 messages (CRC32 | magic | attributes |
-  timestamp INT64 ms | key BYTES | value BYTES), CRC computed from the
-  magic byte to the end — the client VALIDATES it on every fetch.
-- the MODERN framing (VERDICT r8 #5): Produce v3 / Fetch v4 carrying
-  magic-2 RecordBatches (KIP-98) — zigzag-varint records, optional
-  headers, CRC32C (Castagnoli, implemented from scratch) over
-  attributes..end, validated on every fetch. Select it per client with
-  ``message_format="v2"``; the broker stores plain (key, value, ts)
-  tuples and re-frames on fetch, so v0 producers interoperate with v2
-  consumers and vice versa, exactly like a real broker's up/down
-  conversion.
 - SASL/PLAIN (the reference's one supported mechanism): SaslHandshake
   v0 (mechanism negotiation) + SaslAuthenticate v0 (RFC 4616 token);
   a broker constructed with ``sasl_users`` requires the flow on every
@@ -56,8 +60,9 @@ protocol guide) —
   raises (its spec is out of dev-tier scope).
 
 `FakeKafkaBroker` is a real TCP server speaking these bytes; a
-conformant v0 client could talk to it. `KafkaWireClient` is the
-matching consumer/producer. KafkaSource/KafkaSink use them as a
+conformant client of these API versions could talk to it.
+`KafkaWireClient` is the matching consumer/producer.
+KafkaSource/KafkaSink use them as a
 documented dev tier (driver-side, bounded — same doctrine as the
 Stdin/TCP dev tiers); the production tier remains Spark's own
 `format("kafka")`, whose options KafkaSource wires identically for
@@ -71,6 +76,7 @@ round-robin, matching the classic producer behavior.
 
 from __future__ import annotations
 
+import functools
 import logging
 import socket
 import socketserver
@@ -78,6 +84,7 @@ import struct
 import threading
 import time
 import zlib
+from typing import Callable, NamedTuple
 
 logger = logging.getLogger(__name__)
 
@@ -205,11 +212,11 @@ def encode_message_set(
     """entries: (offset, key, value, timestamp_ms) -> concatenated
     [offset INT64 | size INT32 | message] frames (a MessageSet is not
     itself length-prefixed)."""
-    out = b""
+    out = []
     for offset, key, value, ts in entries:
         msg = encode_message(key, value, ts)
-        out += struct.pack(">qi", offset, len(msg)) + msg
-    return out
+        out.append(struct.pack(">qi", offset, len(msg)) + msg)
+    return b"".join(out)
 
 
 _XERIAL_MAGIC = b"\x82SNAPPY\x00"
@@ -522,6 +529,40 @@ def decode_record_batches(data: bytes, *, validate_crc: bool = True):
     return out
 
 
+class Framing(NamedTuple):
+    """One message format: the Produce/Fetch API versions that carry it,
+    its encoder ``(entries, codec) -> bytes`` and decoder ``bytes ->
+    [(offset, timestamp_ms, key, value)]``, and the bytes one record
+    adds to a fetch page (``(offset_delta, key, value) -> int``), so a
+    page exceeds max_bytes by at most one record."""
+
+    magic: int
+    produce_version: int
+    fetch_version: int
+    encode: Callable
+    decode: Callable
+    record_size: Callable
+
+
+def _encode_magic1(entries, codec: str | None) -> bytes:
+    if codec:
+        return compressed_wrap_message_set(entries, codec=codec)
+    return encode_message_set(entries)
+
+
+FRAMINGS = {
+    # MessageSet entry: 8B offset + 4B size + message (4 crc + 1 magic +
+    # 1 attrs + 8 ts + 4 key-len + 4 value-len = 22) + key/value bytes
+    "v0": Framing(1, 0, 0, _encode_magic1, decode_message_set,
+                  lambda delta, key, value: 34 + len(key or b"") + len(value or b"")),
+    # varint record size varies: bound with the exact encoded size
+    "v2": Framing(2, 3, 4,
+                  lambda entries, codec: encode_record_batch(entries, codec=codec),
+                  decode_record_batches,
+                  lambda delta, key, value: len(_enc_record(delta, 0, key, value))),
+}
+
+
 def murmur2(data: bytes) -> int:
     """32-bit MurmurHash2 with the Kafka producer's seed — the public
     default-partitioner hash (`0x9747b28c ^ len`)."""
@@ -666,7 +707,8 @@ class _TopicLog:
 
 
 class FakeKafkaBroker:
-    """In-process single-node broker speaking the v0 wire protocol.
+    """In-process single-node broker speaking the wire slice above, both
+    message formats included.
 
     Storage is partition-ordered lists; offsets are list indices (a real
     single-segment log). Topics auto-create on first Metadata/Produce
@@ -712,6 +754,24 @@ class FakeKafkaBroker:
             self.group_cond = threading.Condition(self.group_lock)
             self.groups = {}
         self.rebalance_timeout_s = rebalance_timeout_s
+        # (api_key, api_version) -> handler. Produce and Fetch register
+        # once per message format, with its framing bound in.
+        self._handlers = {
+            (API_METADATA, 0): self._metadata,
+            (API_LIST_OFFSETS, 0): self._list_offsets,
+            (API_FIND_COORDINATOR, 0): self._find_coordinator,
+            (API_JOIN_GROUP, 0): self._join_group,
+            (API_SYNC_GROUP, 0): self._sync_group,
+            (API_HEARTBEAT, 0): self._heartbeat,
+            (API_LEAVE_GROUP, 0): self._leave_group,
+            (API_OFFSET_COMMIT, 0): self._offset_commit,
+            (API_OFFSET_FETCH, 0): self._offset_fetch,
+        }
+        for fr in FRAMINGS.values():
+            self._handlers[(API_PRODUCE, fr.produce_version)] = functools.partial(
+                self._produce, fr)
+            self._handlers[(API_FETCH, fr.fetch_version)] = functools.partial(
+                self._fetch, fr)
         broker = self
 
         class Handler(socketserver.BaseRequestHandler):
@@ -802,39 +862,26 @@ class FakeKafkaBroker:
             raise UnsupportedRequestError(
                 f"api_key {api_key} before SASL authentication (corr {corr_id})"
             )
-        # (api_key, api_version) -> handler: the v0 slice plus the two
-        # modern-framing entry points (Produce v3 / Fetch v4 are the first
-        # versions that carry magic-2 record batches).
-        handlers = {
-            (API_METADATA, 0): self._metadata,
-            (API_PRODUCE, 0): self._produce,
-            (API_FETCH, 0): self._fetch,
-            (API_LIST_OFFSETS, 0): self._list_offsets,
-            (API_PRODUCE, 3): self._produce_v3,
-            (API_FETCH, 4): self._fetch_v4,
-            (API_FIND_COORDINATOR, 0): self._find_coordinator,
-            (API_JOIN_GROUP, 0): self._join_group,
-            (API_SYNC_GROUP, 0): self._sync_group,
-            (API_HEARTBEAT, 0): self._heartbeat,
-            (API_LEAVE_GROUP, 0): self._leave_group,
-            (API_OFFSET_COMMIT, 0): self._offset_commit,
-            (API_OFFSET_FETCH, 0): self._offset_fetch,
-        }
-        if not any(k == api_key for k, _ in handlers):
+        if not any(k == api_key for k, _ in self._handlers):
             raise UnsupportedRequestError(f"unknown api_key {api_key} (corr {corr_id})")
-        if (api_key, api_version) not in handlers:
+        if (api_key, api_version) not in self._handlers:
             raise UnsupportedRequestError(
                 f"unsupported version: api_key {api_key} v{api_version}"
                 f" (corr {corr_id})"
             )
-        body = handlers[(api_key, api_version)](r)
+        body = self._handlers[(api_key, api_version)](r)
         return struct.pack(">i", corr_id) + body
 
     def _leader(self, topic: str, part: int) -> int:
         return self.cluster.leader(topic, part) if self.cluster else 0
 
-    def _not_leader(self, topic: str, part: int) -> bool:
-        return self.cluster is not None and self.cluster.leader(topic, part) != self.node_id
+    def _partition_error(self, log: _TopicLog | None, topic: str, part: int) -> int:
+        """The per-partition check every data-plane API runs first."""
+        if log is None or part not in log.partitions:
+            return ERR_UNKNOWN_TOPIC_OR_PARTITION
+        if self.cluster is not None and self.cluster.leader(topic, part) != self.node_id:
+            return ERR_NOT_LEADER_FOR_PARTITION
+        return ERR_NONE
 
     def _metadata(self, r: _Reader) -> bytes:
         n = r.i32()
@@ -864,172 +911,89 @@ class FakeKafkaBroker:
                     out += struct.pack(">i", 1) + struct.pack(">i", leader)  # isr
         return out
 
-    def _produce(self, r: _Reader) -> bytes:
+    def _produce(self, fr: Framing, r: _Reader) -> bytes:
+        """Produce v0 (MessageSet) or v3 (RecordBatch): v3 puts a
+        transactional_id before acks, adds log_append_time to each
+        partition reply and a trailing throttle_time_ms."""
+        v3 = fr.magic == 2
+        if v3:
+            r.string()  # transactional_id (nullable; dev broker ignores)
         r.i16()  # required_acks (dev broker always acks)
         r.i32()  # timeout
         n_topics = r.i32()
-        out = struct.pack(">i", n_topics)
+        out = [struct.pack(">i", n_topics)]
         with self.lock:
             for _ in range(n_topics):
                 topic = r.string()
                 n_parts = r.i32()
-                out += _enc_str(topic) + struct.pack(">i", n_parts)
+                out.append(_enc_str(topic) + struct.pack(">i", n_parts))
                 log = self._log(topic)
                 for _ in range(n_parts):
                     part = r.i32()
-                    mset = r._take(r.i32())
-                    if part not in log.partitions:
-                        out += struct.pack(">ihq", part, ERR_UNKNOWN_TOPIC_OR_PARTITION, -1)
-                        continue
-                    if self._not_leader(topic, part):
-                        out += struct.pack(">ihq", part, ERR_NOT_LEADER_FOR_PARTITION, -1)
-                        continue
-                    plog = log.partitions[part]
-                    base = len(plog)
-                    for _, ts, key, value in decode_message_set(mset):
-                        plog.append((key, value, ts))
-                    out += struct.pack(">ihq", part, ERR_NONE, base)
-        return out
+                    records = r._take(r.i32())
+                    err = self._partition_error(log, topic, part)
+                    base = -1
+                    if err == ERR_NONE:
+                        plog = log.partitions[part]
+                        base = len(plog)
+                        plog.extend((key, value, ts) for _, ts, key, value in fr.decode(records))
+                    out.append(struct.pack(">ihq", part, err, base))
+                    if v3:
+                        out.append(struct.pack(">q", -1))  # log_append_time
+        if v3:
+            out.append(struct.pack(">i", 0))  # throttle_time_ms
+        return b"".join(out)
 
-    def _fetch(self, r: _Reader) -> bytes:
+    def _fetch(self, fr: Framing, r: _Reader) -> bytes:
+        """Fetch v0 (MessageSet pages) or v4 (RecordBatch pages): v4 adds
+        a top-level max_bytes and isolation_level to the request, a
+        leading throttle_time_ms to the response, and last_stable_offset
+        plus an (empty) aborted-transactions array to each partition."""
+        v4 = fr.magic == 2
         r.i32()  # replica_id
         r.i32()  # max_wait_ms (dev broker answers immediately)
         r.i32()  # min_bytes
+        out = []
+        if v4:
+            r.i32()  # top-level max_bytes (dev broker bounds per-partition)
+            r.i8()  # isolation_level
+            out.append(struct.pack(">i", 0))  # throttle_time_ms
         n_topics = r.i32()
-        out = struct.pack(">i", n_topics)
+        out.append(struct.pack(">i", n_topics))
         with self.lock:
             for _ in range(n_topics):
                 topic = r.string()
                 n_parts = r.i32()
-                out += _enc_str(topic) + struct.pack(">i", n_parts)
+                out.append(_enc_str(topic) + struct.pack(">i", n_parts))
                 log = self.topics.get(topic)
                 for _ in range(n_parts):
-                    part, fetch_offset = r.i32(), r.i64()
-                    max_bytes = r.i32()
-                    if log is None or part not in log.partitions:
-                        out += struct.pack(">ihq", part, ERR_UNKNOWN_TOPIC_OR_PARTITION, -1)
-                        out += struct.pack(">i", 0)
-                        continue
-                    if self._not_leader(topic, part):
-                        out += struct.pack(">ihq", part, ERR_NOT_LEADER_FOR_PARTITION, -1)
-                        out += struct.pack(">i", 0)
-                        continue
-                    plog = log.partitions[part]
-                    hw = len(plog)
-                    if fetch_offset > hw:
-                        out += struct.pack(">ihq", part, ERR_OFFSET_OUT_OF_RANGE, hw)
-                        out += struct.pack(">i", 0)
-                        continue
-                    entries, size = [], 0
-                    for off in range(fetch_offset, hw):
-                        key, value, ts = plog[off]
-                        entries.append((off, key, value, ts))
-                        # MessageSet entry: 8B offset + 4B size + message
-                        # (4 crc + 1 magic + 1 attrs + 8 ts + 4 key-len +
-                        # 4 value-len = 22) + key/value bytes → 34 fixed.
-                        size += 34 + len(key or b"") + len(value or b"")
-                        if size >= max_bytes:
-                            break
-                    if self.fetch_codec and entries:
-                        mset = compressed_wrap_message_set(entries, codec=self.fetch_codec)
-                    else:
-                        mset = encode_message_set(entries)
-                    out += struct.pack(">ihq", part, ERR_NONE, hw)
-                    out += struct.pack(">i", len(mset)) + mset
-        return out
+                    part, fetch_offset, max_bytes = r.i32(), r.i64(), r.i32()
+                    err = self._partition_error(log, topic, part)
+                    hw, page = -1, b""
+                    if err == ERR_NONE:
+                        plog = log.partitions[part]
+                        hw = len(plog)
+                        if fetch_offset > hw:
+                            err = ERR_OFFSET_OUT_OF_RANGE
+                        else:
+                            page = self._page(fr, plog, fetch_offset, max_bytes)
+                    out.append(struct.pack(">ihq", part, err, hw))
+                    if v4:
+                        out.append(struct.pack(">qi", hw, 0))
+                    out.append(struct.pack(">i", len(page)) + page)
+        return b"".join(out)
 
-    def _produce_v3(self, r: _Reader) -> bytes:
-        """Produce v3 — the first version whose record_set is a magic-2
-        RecordBatch (transactional_id precedes acks; response adds
-        log_append_time and a trailing throttle_time_ms)."""
-        r.string()  # transactional_id (nullable; dev broker ignores)
-        r.i16()  # acks
-        r.i32()  # timeout
-        n_topics = r.i32()
-        out = struct.pack(">i", n_topics)
-        with self.lock:
-            for _ in range(n_topics):
-                topic = r.string()
-                n_parts = r.i32()
-                out += _enc_str(topic) + struct.pack(">i", n_parts)
-                log = self._log(topic)
-                for _ in range(n_parts):
-                    part = r.i32()
-                    batch = r._take(r.i32())
-                    if part not in log.partitions:
-                        out += struct.pack(
-                            ">ihqq", part, ERR_UNKNOWN_TOPIC_OR_PARTITION, -1, -1
-                        )
-                        continue
-                    if self._not_leader(topic, part):
-                        out += struct.pack(
-                            ">ihqq", part, ERR_NOT_LEADER_FOR_PARTITION, -1, -1
-                        )
-                        continue
-                    plog = log.partitions[part]
-                    base = len(plog)
-                    for _, ts, key, value in decode_record_batches(batch):
-                        plog.append((key, value, ts))
-                    out += struct.pack(">ihqq", part, ERR_NONE, base, -1)
-        return out + struct.pack(">i", 0)  # throttle_time_ms
-
-    def _fetch_v4(self, r: _Reader) -> bytes:
-        """Fetch v4 — responses carry magic-2 RecordBatches (request adds
-        top-level max_bytes + isolation_level; partition header adds
-        last_stable_offset and the aborted-transactions array)."""
-        r.i32()  # replica_id
-        r.i32()  # max_wait_ms
-        r.i32()  # min_bytes
-        r.i32()  # top-level max_bytes (dev broker bounds per-partition)
-        r.i8()  # isolation_level
-        n_topics = r.i32()
-        out = struct.pack(">i", 0)  # throttle_time_ms
-        out += struct.pack(">i", n_topics)
-        with self.lock:
-            for _ in range(n_topics):
-                topic = r.string()
-                n_parts = r.i32()
-                out += _enc_str(topic) + struct.pack(">i", n_parts)
-                log = self.topics.get(topic)
-                for _ in range(n_parts):
-                    part, fetch_offset = r.i32(), r.i64()
-                    max_bytes = r.i32()
-
-                    def phdr(err: int, hw: int) -> bytes:
-                        # partition | error | high_watermark |
-                        # last_stable_offset | aborted_transactions (empty)
-                        return struct.pack(">ihqq", part, err, hw, hw) + struct.pack(
-                            ">i", 0
-                        )
-
-                    if log is None or part not in log.partitions:
-                        out += phdr(ERR_UNKNOWN_TOPIC_OR_PARTITION, -1)
-                        out += struct.pack(">i", 0)
-                        continue
-                    if self._not_leader(topic, part):
-                        out += phdr(ERR_NOT_LEADER_FOR_PARTITION, -1)
-                        out += struct.pack(">i", 0)
-                        continue
-                    plog = log.partitions[part]
-                    hw = len(plog)
-                    if fetch_offset > hw:
-                        out += phdr(ERR_OFFSET_OUT_OF_RANGE, hw)
-                        out += struct.pack(">i", 0)
-                        continue
-                    entries, size = [], 0
-                    for off in range(fetch_offset, hw):
-                        key, value, ts = plog[off]
-                        entries.append((off, key, value, ts))
-                        # varint record size varies; bound with the exact
-                        # encoded size so a page exceeds max_bytes by at
-                        # most one record (same contract as the v0 page)
-                        size += len(_enc_record(off - fetch_offset, 0, key, value))
-                        if size >= max_bytes:
-                            break
-                    batch = encode_record_batch(entries, codec=self.fetch_codec)
-                    out += phdr(ERR_NONE, hw)
-                    out += struct.pack(">i", len(batch)) + batch
-        return out
+    def _page(self, fr: Framing, plog: list, start: int, max_bytes: int) -> bytes:
+        """Records from ``start`` until max_bytes is reached (the record
+        that crosses it included, so every fetch makes progress)."""
+        entries, size = [], 0
+        for off in range(start, len(plog)):
+            key, value, ts = plog[off]
+            entries.append((off, key, value, ts))
+            size += fr.record_size(off - start, key, value)
+            if size >= max_bytes:
+                break
+        return fr.encode(entries, self.fetch_codec)
 
     def _list_offsets(self, r: _Reader) -> bytes:
         r.i32()  # replica_id
@@ -1044,18 +1008,14 @@ class FakeKafkaBroker:
                 for _ in range(n_parts):
                     part, ts = r.i32(), r.i64()
                     r.i32()  # max_num_offsets
-                    if log is None or part not in log.partitions:
-                        out += struct.pack(">ih", part, ERR_UNKNOWN_TOPIC_OR_PARTITION)
-                        out += struct.pack(">i", 0)
-                        continue
-                    if self._not_leader(topic, part):
-                        out += struct.pack(">ih", part, ERR_NOT_LEADER_FOR_PARTITION)
+                    err = self._partition_error(log, topic, part)
+                    out += struct.pack(">ih", part, err)
+                    if err != ERR_NONE:
                         out += struct.pack(">i", 0)
                         continue
                     hw = len(log.partitions[part])
                     # -1 latest, -2 earliest (the v0 timestamp sentinels)
                     offset = hw if ts == -1 else 0
-                    out += struct.pack(">ih", part, ERR_NONE)
                     out += struct.pack(">i", 1) + struct.pack(">q", offset)
         return out
 
@@ -1428,7 +1388,22 @@ class FakeKafkaCluster:
 # ------------------------------------------------------------ the client
 
 
-class KafkaWireClient:
+class _Pager:
+    """The page-drain loop both clients share (over their ``fetch``)."""
+
+    def fetch_all(self, topic: str, partition: int, start: int = 0):
+        """Drain [start, high-watermark) in max_bytes-bounded pages."""
+        out = []
+        offset = start
+        while True:
+            hw, records = self.fetch(topic, partition, offset)
+            out.extend(records)
+            if not records or records[-1][0] + 1 >= hw:
+                return out
+            offset = records[-1][0] + 1
+
+
+class KafkaWireClient(_Pager):
     """Blocking producer/consumer over one broker connection.
 
     ``message_format="v0"`` (default) speaks the classic slice: Produce
@@ -1443,7 +1418,7 @@ class KafkaWireClient:
                  compression: str | None = None,
                  sasl_user: str | None = None,
                  sasl_password: str | None = None):
-        if message_format not in ("v0", "v2"):
+        if message_format not in FRAMINGS:
             raise ValueError(f"message_format must be v0 or v2, got {message_format!r}")
         if compression not in WIRE_CODECS:
             raise ValueError(
@@ -1455,6 +1430,7 @@ class KafkaWireClient:
         self.sock = socket.create_connection((host, int(port)), timeout=timeout_s)
         self.client_id = client_id
         self.message_format = message_format
+        self.framing = FRAMINGS[message_format]
         self.compression = compression
         self._corr = 0
         if sasl_user is not None:
@@ -1496,33 +1472,9 @@ class KafkaWireClient:
 
     # -- APIs -----------------------------------------------------------
 
-    def metadata(self, topics: list[str] | None = None) -> dict[str, list[int]]:
-        body = struct.pack(">i", len(topics or []))
-        for t in topics or []:
-            body += _enc_str(t)
-        r = self._request(API_METADATA, body)
-        for _ in range(r.i32()):  # brokers
-            r.i32(), r.string(), r.i32()
-        out: dict[str, list[int]] = {}
-        for _ in range(r.i32()):
-            err, name = r.i16(), r.string()
-            parts = []
-            for _ in range(r.i32()):
-                perr, pid = r.i16(), r.i32()
-                r.i32()  # leader
-                for _ in range(r.i32()):
-                    r.i32()  # replicas
-                for _ in range(r.i32()):
-                    r.i32()  # isr
-                if perr == ERR_NONE:
-                    parts.append(pid)
-            if err == ERR_NONE:
-                out[name] = sorted(parts)
-        return out
-
-    def metadata_full(self, topics: list[str] | None = None):
-        """-> ({node_id: (host, port)}, {(topic, partition): node_id}) —
-        the broker list + per-partition leaders a routing client needs."""
+    def _metadata(self, topics: list[str] | None):
+        """-> ({node_id: (host, port)}, {topic: {partition: leader}});
+        topics and partitions with an error are left out."""
         body = struct.pack(">i", len(topics or []))
         for t in topics or []:
             body += _enc_str(t)
@@ -1531,65 +1483,55 @@ class KafkaWireClient:
         for _ in range(r.i32()):
             nid = r.i32()
             brokers[nid] = (r.string(), r.i32())
-        leaders: dict[tuple[str, int], int] = {}
+        leaders: dict[str, dict[int, int]] = {}
         for _ in range(r.i32()):
             err, name = r.i16(), r.string()
+            parts = {}
             for _ in range(r.i32()):
-                perr, pid = r.i16(), r.i32()
-                leader = r.i32()
+                perr, pid, leader = r.i16(), r.i32(), r.i32()
                 for _ in range(r.i32()):
                     r.i32()  # replicas
                 for _ in range(r.i32()):
                     r.i32()  # isr
-                if err == ERR_NONE and perr == ERR_NONE:
-                    leaders[(name, pid)] = leader
+                if perr == ERR_NONE:
+                    parts[pid] = leader
+            if err == ERR_NONE:
+                leaders[name] = parts
         return brokers, leaders
+
+    def metadata(self, topics: list[str] | None = None) -> dict[str, list[int]]:
+        """-> {topic: sorted partitions}."""
+        return {t: sorted(parts) for t, parts in self._metadata(topics)[1].items()}
+
+    def metadata_full(self, topics: list[str] | None = None):
+        """-> ({node_id: (host, port)}, {(topic, partition): node_id}) —
+        the broker list + per-partition leaders a routing client needs."""
+        brokers, leaders = self._metadata(topics)
+        return brokers, {
+            (t, p): leader for t, parts in leaders.items() for p, leader in parts.items()
+        }
 
     def produce(self, topic: str, partition: int,
                 messages: list[tuple[bytes | None, bytes | None, int]]) -> int:
         """messages: (key, value, timestamp_ms); returns base offset."""
-        if self.message_format == "v2":
-            return self._produce_v2(topic, partition, messages)
-        if self.compression:
-            # relative inner offsets, wrapper offset = last relative —
-            # the broker re-derives 0..n-1 and assigns real offsets
-            mset = compressed_wrap_message_set(
-                [(i, k, v, ts) for i, (k, v, ts) in enumerate(messages)],
-                codec=self.compression,
-            )
-        else:
-            mset = encode_message_set(
-                [(0, k, v, ts) for (k, v, ts) in messages]  # broker assigns offsets
-            )
-        body = struct.pack(">hi", 1, 5000)  # acks=1, timeout
-        body += struct.pack(">i", 1) + _enc_str(topic) + struct.pack(">i", 1)
-        body += struct.pack(">i", partition) + struct.pack(">i", len(mset)) + mset
-        r = self._request(API_PRODUCE, body)
-        r.i32()  # topic count (1)
-        r.string()
-        r.i32()  # partition count (1)
-        part, err, base = r.i32(), r.i16(), r.i64()
-        if err != ERR_NONE:
-            raise KafkaProtocolError(err, f"produce error {err} on {topic}/{part}")
-        return base
-
-    def _produce_v2(self, topic: str, partition: int,
-                    messages: list[tuple[bytes | None, bytes | None, int]]) -> int:
-        batch = encode_record_batch(
-            [(i, k, v, ts) for i, (k, v, ts) in enumerate(messages)],
-            codec=self.compression,
+        fr = self.framing
+        # the broker assigns offsets: a plain MessageSet carries zeros, a
+        # compressed wrapper or a RecordBatch relative offsets 0..n-1
+        relative = fr.magic == 2 or self.compression
+        records = fr.encode(
+            [(i if relative else 0, k, v, ts) for i, (k, v, ts) in enumerate(messages)],
+            self.compression,
         )
-        body = _enc_str(None)  # transactional_id
+        body = _enc_str(None) if fr.magic == 2 else b""  # transactional_id
         body += struct.pack(">hi", 1, 5000)  # acks=1, timeout
         body += struct.pack(">i", 1) + _enc_str(topic) + struct.pack(">i", 1)
-        body += struct.pack(">i", partition) + struct.pack(">i", len(batch)) + batch
-        r = self._request(API_PRODUCE, body, api_version=3)
+        body += struct.pack(">i", partition) + struct.pack(">i", len(records)) + records
+        r = self._request(API_PRODUCE, body, api_version=fr.produce_version)
         r.i32()  # topic count (1)
         r.string()
         r.i32()  # partition count (1)
         part, err, base = r.i32(), r.i16(), r.i64()
-        r.i64()  # log_append_time
-        r.i32()  # throttle_time_ms
+        # v3's trailing log_append_time and throttle_time_ms go unread
         if err != ERR_NONE:
             raise KafkaProtocolError(err, f"produce error {err} on {topic}/{part}")
         return base
@@ -1612,15 +1554,22 @@ class KafkaWireClient:
         """-> (high_watermark, [(offset, timestamp_ms, key, value)]),
         CRC-validated (CRC32 for v0 MessageSets, CRC32C for v2
         RecordBatches)."""
-        if self.message_format == "v2":
-            return self._fetch_v2(topic, partition, offset, max_bytes)
+        fr = self.framing
         body = struct.pack(">iii", -1, 100, 1)
+        if fr.magic == 2:
+            body += struct.pack(">ib", max_bytes, 0)  # top-level max_bytes, READ_UNCOMMITTED
         body += struct.pack(">i", 1) + _enc_str(topic) + struct.pack(">i", 1)
         body += struct.pack(">iqi", partition, offset, max_bytes)
-        r = self._request(API_FETCH, body)
+        r = self._request(API_FETCH, body, api_version=fr.fetch_version)
+        if fr.magic == 2:
+            r.i32()  # throttle_time_ms
         r.i32(), r.string(), r.i32()
         part, err, hw = r.i32(), r.i16(), r.i64()
-        mset = r._take(r.i32())
+        if fr.magic == 2:
+            r.i64()  # last_stable_offset
+            for _ in range(r.i32()):  # aborted_transactions
+                r.i64(), r.i64()
+        records = r._take(r.i32())
         if err == ERR_OFFSET_OUT_OF_RANGE:
             raise KafkaProtocolError(
                 ERR_OFFSET_OUT_OF_RANGE,
@@ -1628,41 +1577,7 @@ class KafkaWireClient:
             )
         if err != ERR_NONE:
             raise KafkaProtocolError(err, f"fetch error {err} on {topic}/{part}")
-        return hw, decode_message_set(mset)
-
-    def _fetch_v2(self, topic: str, partition: int, offset: int,
-                  max_bytes: int):
-        body = struct.pack(">iii", -1, 100, 1)
-        body += struct.pack(">ib", max_bytes, 0)  # top-level max_bytes, READ_UNCOMMITTED
-        body += struct.pack(">i", 1) + _enc_str(topic) + struct.pack(">i", 1)
-        body += struct.pack(">iqi", partition, offset, max_bytes)
-        r = self._request(API_FETCH, body, api_version=4)
-        r.i32()  # throttle_time_ms
-        r.i32(), r.string(), r.i32()
-        part, err, hw = r.i32(), r.i16(), r.i64()
-        r.i64()  # last_stable_offset
-        for _ in range(r.i32()):  # aborted_transactions
-            r.i64(), r.i64()
-        batch = r._take(r.i32())
-        if err == ERR_OFFSET_OUT_OF_RANGE:
-            raise KafkaProtocolError(
-                ERR_OFFSET_OUT_OF_RANGE,
-                f"offset {offset} out of range on {topic}/{part} (hw {hw})",
-            )
-        if err != ERR_NONE:
-            raise KafkaProtocolError(err, f"fetch error {err} on {topic}/{part}")
-        return hw, decode_record_batches(batch)
-
-    def fetch_all(self, topic: str, partition: int, start: int = 0):
-        """Drain [start, high-watermark) in max_bytes-bounded pages."""
-        out = []
-        offset = start
-        while True:
-            hw, records = self.fetch(topic, partition, offset)
-            out.extend(records)
-            if not records or records[-1][0] + 1 >= hw:
-                return out
-            offset = records[-1][0] + 1
+        return hw, fr.decode(records)
 
     # -- SASL -------------------------------------------------------------
 
@@ -1783,7 +1698,7 @@ class KafkaWireClient:
         return out
 
 
-class ClusterWireClient:
+class ClusterWireClient(_Pager):
     """Leader-routing, failover-retrying client over a bootstrap LIST —
     the loop every real Kafka client runs and the reference inherits
     from its client library: cache per-partition leaders from Metadata,
@@ -1850,36 +1765,30 @@ class ClusterWireClient:
 
     # -- metadata -------------------------------------------------------
 
-    def refresh_metadata(self, topics: list[str] | None = None) -> None:
+    def _any_broker(self, call):
+        """``call(conn)`` on the first reachable broker; a broker that
+        fails is dropped and the next one tried."""
         last_err: Exception | None = None
         for addr in self._candidates():
             try:
-                brokers, leaders = self._conn(addr).metadata_full(topics)
+                return call(self._conn(addr))
             except (OSError, ConnectionError, EOFError) as exc:
                 self._drop(addr)
                 last_err = exc
-                continue
-            self._brokers = [f"{h}:{p}" for _, (h, p) in sorted(brokers.items())]
-            for (t, p), nid in leaders.items():
-                if nid in brokers:
-                    h, prt = brokers[nid]
-                    self._leaders[(t, p)] = f"{h}:{prt}"
-            return
         raise ConnectionError(
             f"no reachable broker among {self._candidates()}"
         ) from last_err
 
+    def refresh_metadata(self, topics: list[str] | None = None) -> None:
+        brokers, leaders = self._any_broker(lambda c: c.metadata_full(topics))
+        self._brokers = [f"{h}:{p}" for _, (h, p) in sorted(brokers.items())]
+        for (t, p), nid in leaders.items():
+            if nid in brokers:
+                h, prt = brokers[nid]
+                self._leaders[(t, p)] = f"{h}:{prt}"
+
     def metadata(self, topics: list[str] | None = None) -> dict[str, list[int]]:
-        last_err: Exception | None = None
-        for addr in self._candidates():
-            try:
-                return self._conn(addr).metadata(topics)
-            except (OSError, ConnectionError, EOFError) as exc:
-                self._drop(addr)
-                last_err = exc
-        raise ConnectionError(
-            f"no reachable broker among {self._candidates()}"
-        ) from last_err
+        return self._any_broker(lambda c: c.metadata(topics))
 
     # -- leader routing ---------------------------------------------------
 
@@ -1938,15 +1847,17 @@ class ClusterWireClient:
             topic, partition, lambda c: c.list_offset(topic, partition, timestamp)
         )
 
-    def fetch_all(self, topic: str, partition: int, start: int = 0):
+    def drain(self, positions: dict[tuple[str, int], int]):
+        """Fetch each (topic, partition) from its position up to the high
+        watermark and advance ``positions`` past what was read ->
+        [(topic, partition, offset, timestamp_ms, key, value)]."""
         out = []
-        offset = start
-        while True:
-            hw, records = self.fetch(topic, partition, offset)
-            out.extend(records)
-            if not records or records[-1][0] + 1 >= hw:
-                return out
-            offset = records[-1][0] + 1
+        for (t, p), pos in positions.items():
+            records = self.fetch_all(t, p, pos)
+            out.extend((t, p, off, ts, k, v) for off, ts, k, v in records)
+            if records:
+                positions[(t, p)] = records[-1][0] + 1
+        return out
 
 
 class GroupConsumer:
@@ -2000,24 +1911,17 @@ class GroupConsumer:
             except OSError:
                 pass
             self.client = None
-        last_err: Exception | None = None
-        for addr in self.data._candidates():
-            try:
-                probe = self.data._conn(addr)
-                host, port = probe.find_coordinator(self.group_id)
-                self.client = KafkaWireClient(
-                    f"{host}:{port}", self.client_id,
-                    self.timeout_s, self.data.message_format,
-                    sasl_user=self.sasl_user,
-                    sasl_password=self.sasl_password,
-                )
-                return
-            except (OSError, ConnectionError, EOFError) as exc:
-                self.data._drop(addr)
-                last_err = exc
-        raise ConnectionError(
-            f"no coordinator reachable for group {self.group_id}"
-        ) from last_err
+
+        def connect(probe: KafkaWireClient) -> KafkaWireClient:
+            host, port = probe.find_coordinator(self.group_id)
+            return KafkaWireClient(
+                f"{host}:{port}", self.client_id,
+                self.timeout_s, self.data.message_format,
+                sasl_user=self.sasl_user,
+                sasl_password=self.sasl_password,
+            )
+
+        self.client = self.data._any_broker(connect)
 
     # -- membership -------------------------------------------------------
 
@@ -2067,7 +1971,7 @@ class GroupConsumer:
             self.assignment = decode_assignment(blob)
             committed = self.client.offset_fetch(self.group_id, self.assignment)
             self.positions = {
-                tp: (off if off >= 0 else 0) for tp, off in committed.items()
+                tp: max(committed.get(tp, 0), 0) for tp in self.assignment
             }
             return self.assignment
         raise TimeoutError(
@@ -2097,18 +2001,7 @@ class GroupConsumer:
             self.join()
         elif err != ERR_NONE:
             raise ValueError(f"heartbeat error {err}")
-        out = []
-        for t, p in self.assignment:
-            pos = self.positions.get((t, p), 0)
-            hw, records = self.data.fetch(t, p, pos)
-            while records:
-                out.extend((t, p, off, ts, k, v) for off, ts, k, v in records)
-                pos = records[-1][0] + 1
-                if pos >= hw:
-                    break
-                hw, records = self.data.fetch(t, p, pos)
-            self.positions[(t, p)] = pos
-        return out
+        return self.data.drain(self.positions)
 
     def commit(self) -> None:
         if not self.positions:

@@ -338,15 +338,16 @@ class KafkaSource(Source):
 
     Tiers: production is Spark's `format("kafka")` (connector jar + real
     broker). With ``dev_wire: true`` the batch path instead drains the
-    topic through the in-repo v0 wire-protocol client
-    (sources/kafka_wire.py) and builds a DataFrame with the SAME
-    key/value/topic/partition/offset/timestamp columns the connector
-    emits, so `_finish` (codec + decorate_events) is byte-identical
-    across tiers. The dev BATCH path is driver-side and bounded (it
-    drains to the high watermark once); the dev STREAMING path
-    (``stream()`` with dev_wire) runs a continuous driver-side poll
-    loop spooling to a tailed file stream — see start_consumer() —
-    the same doctrine as the Stdin/TCP/UDP dev tiers."""
+    topic through the in-repo wire-protocol client (sources/kafka_wire.py;
+    ``wire_format`` "v0" MessageSets by default, or "v2" RecordBatches)
+    and builds a DataFrame with the SAME key/value/topic/partition/
+    offset/timestamp columns the connector emits, so `_finish` (codec +
+    decorate_events) is byte-identical across tiers. The dev BATCH path
+    is driver-side and bounded (it drains to the high watermark once);
+    the dev STREAMING path (``stream()`` with dev_wire) runs a
+    continuous driver-side poll loop spooling to a tailed file stream —
+    see start_consumer() — the same doctrine as the Stdin/TCP/UDP dev
+    tiers."""
 
     def __init__(self, conf):
         super().__init__(conf)
@@ -369,7 +370,7 @@ class KafkaSource(Source):
         if "group.id" in settings:
             opts["kafka.group.id"] = settings.pop("group.id")
         # SASL: the connector tier gets the public jaas-config mapping,
-        # the dev wire tier reads the creds via _sasl_creds()
+        # the dev wire tier reads the creds in _dev_wire()
         mech, sasl_user, sasl_pw = pop_sasl(settings)
         if sasl_user is not None and mech not in (None, "PLAIN"):
             raise ValueError(f"sasl.mechanism: only PLAIN is supported, got {mech!r}")
@@ -408,69 +409,68 @@ class KafkaSource(Source):
             )
         return out.drop("key", "topic", "partition", "offset", "timestamp", "timestampType")
 
-    def _topics_and_assignments(self, opts: dict[str, str], client):
-        """-> list of (topic, partition) to drain, from subscribe (all
-        partitions via Metadata) or assign (explicit map)."""
+    def _dev_wire(self):
+        """The dev wire tier's one reading of the conf, shared by batch and
+        stream -> (opts, group, connect). ``group`` is the group.id to
+        join, set only together with subscribe; with assign (or without
+        group.id) the partitions are read statically, the reference's
+        assign mode. ``connect(cls, *args)`` opens a ClusterWireClient or
+        GroupConsumer on the configured brokers, message format and SASL
+        credentials."""
+        from gohangout_spark.sources.kafka_wire import pop_sasl
+
+        opts = self._options()
+        _, sasl_user, sasl_pw = pop_sasl(dict(self.conf.get("consumer_settings") or {}))
+        fmt = self.conf.get("wire_format", "v0")
+
+        def connect(cls, *args):
+            return cls(opts["kafka.bootstrap.servers"], *args, message_format=fmt,
+                       sasl_user=sasl_user, sasl_password=sasl_pw)
+
+        group = opts.get("kafka.group.id") if "subscribe" in opts else None
+        return opts, group, connect
+
+    @staticmethod
+    def _static_positions(opts: dict[str, str], client) -> dict[tuple[str, int], int]:
+        """(topic, partition) -> 0 (earliest) for every partition to read:
+        all of a subscribed topic's (via Metadata), or the assign map's."""
         if "subscribe" in opts:
             topics = opts["subscribe"].split(",")
             meta = client.metadata(topics)
-            return [(t, p) for t in topics for p in meta.get(t, [])]
+            return {(t, p): 0 for t in topics for p in meta.get(t, [])}
         import json as _json
 
         assign = _json.loads(opts["assign"])
-        return [(t, p) for t, parts in assign.items() for p in parts]
+        return {(t, p): 0 for t, parts in assign.items() for p in parts}
 
-    def _sasl_creds(self) -> tuple[str | None, str | None]:
-        from gohangout_spark.sources.kafka_wire import pop_sasl
-
-        return pop_sasl(dict(self.conf.get("consumer_settings") or {}))[1:]
+    @staticmethod
+    def _connector_rows(records):
+        """(topic, partition, offset, timestamp_ms, key, value) records ->
+        rows in the connector's column order; timestampType 1 is
+        CreateTime, what both message formats carry."""
+        return [(k, v, t, p, o, ts, 1) for t, p, o, ts, k, v in records]
 
     def _batch_dev_wire(self, spark):
-        from gohangout_spark.sources.kafka_wire import ClusterWireClient
+        """Without a group: one pass over the partitions from earliest to
+        the high watermark (the connector's default startingOffsets for
+        batch reads, regardless of from.beginning, which only moves the
+        STREAMING start point), every batch() alike. The leader-routing
+        client takes a bootstrap list and survives a node death via
+        metadata refresh + retry.
 
-        opts = self._options()
-        if "kafka.group.id" in opts and "subscribe" in opts:
-            return self._batch_dev_wire_group(spark, opts)
-        rows = []
-        sasl_user, sasl_pw = self._sasl_creds()
-        # leader-routing client: bootstrap may list several brokers and
-        # fetches survive a node death via metadata refresh + retry
-        with ClusterWireClient(
-            opts["kafka.bootstrap.servers"],
-            message_format=self.conf.get("wire_format", "v0"),
-            sasl_user=sasl_user, sasl_password=sasl_pw,
-        ) as client:
-            for topic, part in self._topics_and_assignments(opts, client):
-                # batch semantics = earliest -> high watermark (the
-                # connector's default startingOffsets for batch reads,
-                # regardless of from.beginning, which only moves the
-                # STREAMING start point)
-                for offset, ts, key, value in client.fetch_all(topic, part, 0):
-                    rows.append(
-                        (
-                            key,
-                            value,
-                            topic,
-                            part,
-                            offset,
-                            ts,
-                            1,  # CreateTime, what magic-1 carries
-                        )
-                    )
-        return self._dev_wire_frame(spark, rows)
+        With a group: join it, drain the OWNED partitions from the
+        group's COMMITTED offsets to the high watermark, commit, leave —
+        the at-least-once resume contract the reference gets from
+        healer's GroupConsumer (input/kafka_input.go:87-95,150-156), so a
+        second batch() sees only records appended since the previous
+        drain."""
+        from gohangout_spark.sources.kafka_wire import ClusterWireClient, GroupConsumer
 
-    def _batch_dev_wire_group(self, spark, opts):
-        """group.id tier: join the consumer group, drain the OWNED
-        partitions from the group's COMMITTED offsets to the high
-        watermark, commit, leave — the at-least-once resume contract the
-        reference gets from healer's GroupConsumer
-        (input/kafka_input.go:87-95,150-156). A second batch() against
-        the same group therefore sees only records appended since the
-        previous drain, unlike the group-less dev tier's
-        earliest->hw-every-time semantics."""
-        from gohangout_spark.sources.kafka_wire import GroupConsumer
-
-        sasl_user, sasl_pw = self._sasl_creds()
+        opts, group, connect = self._dev_wire()
+        if group is None:
+            with connect(ClusterWireClient) as client:
+                records = client.drain(self._static_positions(opts, client))
+            return self._dev_wire_frame(spark, self._connector_rows(records))
         # the reference's thread model: the topic map's VALUE is the
         # number of GroupConsumers spawned for that topic, all sharing
         # group.id (input/kafka_input.go:89-91 — one NewGroupConsumer
@@ -480,14 +480,7 @@ class KafkaSource(Source):
             specs = [t for t, n in topic_conf.items() for _ in range(max(1, int(n)))]
         else:
             specs = opts["subscribe"].split(",")
-        mk = lambda topic: GroupConsumer(  # noqa: E731
-            opts["kafka.bootstrap.servers"],
-            opts["kafka.group.id"],
-            [topic],
-            message_format=self.conf.get("wire_format", "v0"),
-            sasl_user=sasl_user, sasl_password=sasl_pw,
-        )
-        rows = self._drain_group_threads([mk(t) for t in specs])
+        rows = self._drain_group_threads([connect(GroupConsumer, group, [t]) for t in specs])
         return self._dev_wire_frame(spark, rows)
 
     def _dev_wire_frame(self, spark, rows):
@@ -535,8 +528,7 @@ class KafkaSource(Source):
                     return out
 
                 for recs in ex.map(drain, consumers):
-                    for topic, part, offset, ts, key, value in recs:
-                        rows.append((key, value, topic, part, offset, ts, 1))
+                    rows.extend(KafkaSource._connector_rows(recs))
         finally:
             for c in consumers:
                 # LeaveGroup like the reference's Close() — nobody polls
@@ -564,9 +556,11 @@ class KafkaSource(Source):
         at-least-once, spool-then-commit ordering) and spools records
         as JSON lines that a text file-stream tails, the same pattern
         as UDPSource; `_finish` then applies the IDENTICAL
-        codec/decorate_events path as the connector tier. Without
-        group.id, positions start at earliest and live only in-process
-        (the connector's own default for an unmanaged stream).
+        codec/decorate_events path as the connector tier. Without a
+        group (no group.id, or assign), each pass drains the partitions
+        from positions that start at earliest and live only in-process
+        (the connector's own default for an unmanaged stream) — the
+        same pass the batch tier runs once.
 
         The spool hop is JSON text: keys/values are utf-8 decoded with
         replacement, which is lossless for every codec payload this
@@ -577,9 +571,6 @@ class KafkaSource(Source):
             return self
         from gohangout_spark.sources.kafka_wire import ClusterWireClient, GroupConsumer
 
-        opts = self._options()
-        sasl_user, sasl_pw = self._sasl_creds()
-        fmt = self.conf.get("wire_format", "v0")
         poll_s = float(self.conf.get("poll_interval_s", 0.2))
 
         def spool(records) -> None:
@@ -595,13 +586,17 @@ class KafkaSource(Source):
                 for t, p, o, ts, k, v in records
             ])
 
-        group = opts.get("kafka.group.id")
-        if group:
-            consumer = GroupConsumer(
-                opts["kafka.bootstrap.servers"], group,
-                opts["subscribe"].split(","), message_format=fmt,
-                sasl_user=sasl_user, sasl_password=sasl_pw,
-            )
+        opts, group, connect = self._dev_wire()
+        if group is None:
+            client = connect(ClusterWireClient)
+            positions = self._static_positions(opts, client)
+
+            def one_pass():
+                spool(client.drain(positions))
+
+            close = client.close
+        else:
+            consumer = connect(GroupConsumer, group, opts["subscribe"].split(","))
             consumer.join()
 
             def one_pass():
@@ -613,25 +608,6 @@ class KafkaSource(Source):
                     consumer.commit()
 
             close = consumer.close
-        else:
-            client = ClusterWireClient(
-                opts["kafka.bootstrap.servers"], message_format=fmt,
-                sasl_user=sasl_user, sasl_password=sasl_pw,
-            )
-            tps = self._topics_and_assignments(opts, client)
-            positions = {tp: 0 for tp in tps}
-
-            def one_pass():
-                out = []
-                for t, p in tps:
-                    hw, recs = client.fetch(t, p, positions[(t, p)])
-                    for off, ts, k, v in recs:
-                        out.append((t, p, off, ts, k, v))
-                    if recs:
-                        positions[(t, p)] = recs[-1][0] + 1
-                spool(out)
-
-            close = client.close
         self._spool.start(one_pass, close, poll_s)
         return self
 

@@ -1133,6 +1133,49 @@ class TestStreamingDevTier:
                 q.stop()
                 src.stop_consumer()
 
+    def test_assign_with_group_id_streams_assigned_partition(self, spark, tmp_path):
+        """assign is the reference's static mode whether or not group.id
+        is set: the stream reads the assigned partitions, as the batch
+        tier does, instead of joining a group it has no topics for."""
+        import time
+
+        from gohangout_spark.sources.sources import KafkaSource
+
+        with FakeKafkaBroker(num_partitions=2) as b:
+            with KafkaWireClient(b.bootstrap) as p:
+                for i in range(10):
+                    p.produce("as", i % 2, [(None, b'{"n": %d}' % i, i)])
+            src = KafkaSource(
+                {
+                    "assign": {"as": [0]},
+                    "consumer_settings": {
+                        "bootstrap.servers": b.bootstrap, "group.id": "ag",
+                    },
+                    "dev_wire": True, "codec": "json", "schema": "n bigint",
+                    "decorate_events": True, "poll_interval_s": 0.05,
+                }
+            )
+            q = (
+                src.stream(spark).writeStream.format("memory")
+                .queryName("ks_assign_mem")
+                .option("checkpointLocation", str(tmp_path / "ckpt3"))
+                .start()
+            )
+            try:
+                deadline = time.time() + 30
+                while time.time() < deadline:
+                    q.processAllAvailable()
+                    if spark.sql("select count(*) c from ks_assign_mem").first()["c"] >= 5:
+                        break
+                    time.sleep(0.2)
+                rows = spark.sql("select * from ks_assign_mem").collect()
+                assert sorted(r["n"] for r in rows) == [0, 2, 4, 6, 8]
+                assert {r["@metadata"]["kafka"]["partition"] for r in rows} == {0}
+                assert "ag" not in b.groups  # no group was joined
+            finally:
+                q.stop()
+                src.stop_consumer()
+
 
 class TestStableSessionExpiry:
     def test_dead_member_in_stable_group_is_expired_on_heartbeat(self):

@@ -5,7 +5,9 @@ with SyntaxWarning and DeprecationWarning raised as errors (e.g. an invalid
 module uses the deprecated ``PandasUDFType``; the A/B runner's variant
 specs parse; each I/O transport setting is read in one place; no module
 imports another's private names; the condition grammars are parsed in one
-place each; the replay gates' scaffolding is written once."""
+place each; the replay gates' scaffolding is written once; the Kafka dev
+wire has one Produce, one Fetch and one page-drain path for both message
+formats."""
 
 import importlib.util
 import pathlib
@@ -168,3 +170,46 @@ def test_replay_scaffold_defined_once():
         if "os.utime(" in path.read_text(encoding="utf-8")
     ]
     assert not stampers, stampers
+
+
+def test_kafka_wire_one_path_per_api():
+    """Both message formats share one Produce and one Fetch handler (the
+    framing is a parameter, not a fork), one page-drain loop, and
+    KafkaSource reads its wire format in one place."""
+    import ast
+
+    from gohangout_spark.sources.kafka_wire import API_FETCH, API_PRODUCE, FakeKafkaBroker
+
+    def functions(path):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        return [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+
+    def fetch_callers(path):
+        return {
+            fn.name
+            for fn in functions(path)
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "fetch"
+        }
+
+    wire = PKG / "sources" / "kafka_wire.py"
+    sources = PKG / "sources" / "sources.py"
+    names = [fn.name for fn in functions(wire)]
+    forks = {"_produce_v2", "_fetch_v2", "_produce_v3", "_fetch_v4"} & set(names)
+    assert not forks, forks
+    # the page loop lives in fetch_all; the routing client's fetch forwards
+    assert names.count("fetch_all") == 1
+    assert fetch_callers(wire) == {"fetch_all", "fetch"}, fetch_callers(wire)
+    assert not fetch_callers(sources), fetch_callers(sources)
+
+    broker = FakeKafkaBroker()
+    broker.server.server_close()
+
+    def target(handler):
+        handler = getattr(handler, "func", handler)  # functools.partial
+        return getattr(handler, "__func__", handler)  # bound method
+
+    h = broker._handlers
+    assert target(h[(API_PRODUCE, 0)]) is target(h[(API_PRODUCE, 3)])
+    assert target(h[(API_FETCH, 0)]) is target(h[(API_FETCH, 4)])
+    assert sources.read_text(encoding="utf-8").count('"wire_format"') == 1
