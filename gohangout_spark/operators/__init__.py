@@ -1,4 +1,10 @@
-from gohangout_spark.operators.base import Chain, Filter, FilterBox, FilterEffect
+from gohangout_spark.operators.base import (
+    Chain,
+    Filter,
+    FilterBox,
+    FilterEffect,
+    RowSubsetFilter,
+)
 from gohangout_spark.operators.basic import (
     Add,
     Drop,
@@ -74,14 +80,15 @@ FILTER_REGISTRY = {
     "QuantileBucket": QuantileBucket,
 }
 
-__all__ = ["Chain", "Filter", "FilterBox", "FilterEffect", "FILTER_REGISTRY"] + list(
-    FILTER_REGISTRY
-)
+__all__ = [
+    "Chain", "Filter", "FilterBox", "FilterEffect", "RowSubsetFilter", "FILTER_REGISTRY"
+] + list(FILTER_REGISTRY)
 
 
 def register_filter(name: str, cls) -> None:
     """Third-party filter registration — the Python analogue of the
     reference's .so plugin loading (filter/filter.go:40-61): any class
-    implementing the Filter interface (build() or apply_plan()) becomes
+    implementing one of the Filter shapes (build(), a RowSubsetFilter's
+    transform(), or a plan_level apply_plan()) becomes
     addressable from YAML configs by name."""
     FILTER_REGISTRY[name] = cls

@@ -29,11 +29,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gohangout_spark.operators.base import Filter, FilterBox
+from gohangout_spark.operators.base import Filter, FilterEffect
 
 
 class AsofLookup(Filter):
-    plan_level = True
+    if_unsupported = (
+        "AsofLookup does not support box-level `if` guards: the "
+        "enriched columns would be typed per-branch. Guard with a "
+        "Drop before/after instead."
+    )
 
     def __init__(
         self,
@@ -73,7 +77,7 @@ class AsofLookup(Filter):
             right = right.select(*keep)
         return right
 
-    def apply_plan(self, df: DataFrame, box: "FilterBox") -> DataFrame:
+    def build(self, df: DataFrame) -> FilterEffect:
         from gohangout_spark.functions.joins import asof_join
 
         if df.isStreaming:
@@ -81,12 +85,6 @@ class AsofLookup(Filter):
                 "AsofLookup is batch-only: the as-of window cannot run on an "
                 "unbounded stream. Enrich inside a foreachBatch stage, or "
                 "run a checkpointed --available-now backfill."
-            )
-        if box.ifs:
-            raise ValueError(
-                "AsofLookup does not support box-level `if` guards: the "
-                "enriched columns would be typed per-branch. Guard with a "
-                "Drop before/after instead."
             )
         right = self._right(df.sparkSession)
         out = asof_join(
@@ -106,7 +104,4 @@ class AsofLookup(Filter):
             if self.right_timestamp in df.columns
             else self.right_timestamp
         )
-        found = F.col(ts_out).isNotNull()
-        return out.withColumns(
-            {FilterBox._EFF: found, FilterBox._FAILED: ~found}
-        )
+        return FilterEffect(frame=out, success=F.col(ts_out).isNotNull())

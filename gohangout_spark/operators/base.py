@@ -48,20 +48,52 @@ class FilterEffect:
     # cannot keep the old type in a fixed-schema column, so the filter
     # supplies e.g. old.cast(target) here.
     otherwise: dict[str, Column] = field(default_factory=dict)
+    # the frame the Columns above are defined on, when the filter needs a
+    # join or a UDF column first (Translate's broadcast join, IPIP's geo
+    # column, AsofLookup's as-of join): the input's columns plus the
+    # filter's; ``scratch`` names the helper columns dropped after stage 1
+    frame: DataFrame | None = None
+    scratch: list[str] = field(default_factory=list)
 
 
 class Filter:
-    """Base class: subclasses declare their effect against an input df."""
+    """Base class. A filter declares what it computes in one of three
+    shapes; FilterBox owns the ``if`` guard and PostProcess for all of them:
+
+    - row-wise: ``build(df)`` returns a FilterEffect (per-row assignments,
+      success, drop) — optionally over a joined/UDF ``frame``;
+    - row-subset: a RowSubsetFilter's ``transform`` works on a set of rows
+      (dedup, curation gates, group bands); the box runs it on the
+      ``if``-passing rows;
+    - stream-restructuring: ``plan_level`` filters (the metric union, the
+      nested chain) override ``apply_plan(df, box)`` and read the box
+      themselves.
+    """
 
     def build(self, df: DataFrame) -> FilterEffect:  # pragma: no cover
         raise NotImplementedError
 
-    # Filters that restructure the plan (aggregations, nested chains)
-    # override apply() wholesale instead of build().
     plan_level = False
 
     def apply_plan(self, df: DataFrame, box: "FilterBox") -> DataFrame:  # pragma: no cover
         raise NotImplementedError
+
+    # set by a filter whose effect cannot be guarded: the error FilterBox
+    # raises when the box has ``if`` conditions
+    if_unsupported: str | None = None
+
+
+class RowSubsetFilter(Filter):
+    """A filter over a set of rows, not one row. ``transform`` sees only the
+    rows whose ``if`` passes; the rest pass through with the columns of
+    ``null_outputs()`` NULLed, so the union keeps one schema. It never
+    fails, so failTag never applies."""
+
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:  # pragma: no cover
+        raise NotImplementedError
+
+    def null_outputs(self) -> dict[str, Column]:
+        return {}
 
 
 class FilterBox:
@@ -114,22 +146,23 @@ class FilterBox:
         return out
 
     def _apply_inner(self, df: DataFrame) -> DataFrame:
-        if self.filter.plan_level:
-            # Plan-level filters (joins, aggregations, pandas-UDF enrichers)
-            # restructure the frame themselves, then hand back per-row
-            # __box_eff/__box_failed markers so the SHARED PostProcess stage
-            # (add_fields/remove_fields/failTag, topology/filter.go:69-94)
-            # applies to them exactly as to expression-level filters. A
-            # filter that manages the box config itself (nested Filters)
-            # returns no markers.
-            out = self.filter.apply_plan(df, self)
+        flt = self.filter
+        if flt.plan_level:
+            # the filter restructures the stream and reads the box config
+            # itself; a filter whose original rows still take PostProcess
+            # (LinkMetric's failTag) hands back __box_eff/__box_failed
+            out = flt.apply_plan(df, self)
             if self._EFF in out.columns:
                 out = self._post_process(out, unconditional=False, has_success=True)
                 out = out.drop(self._EFF, self._FAILED)
             return out
+        if self.ifs and flt.if_unsupported:
+            raise ValueError(flt.if_unsupported)
+        if isinstance(flt, RowSubsetFilter):
+            return self._apply_subset(df, flt)
 
         cond = compile_conditions(self.ifs, df, self.ts_field)
-        effect = self.filter.build(df)
+        effect = flt.build(df)
 
         if effect.drop_row is not None:
             # Drop-with-if = selective delete (filter/drop.go:20-22); a NULL
@@ -155,9 +188,12 @@ class FilterBox:
         else:
             assign_eff = eff
         out = self._project(
-            df, effect.assignments, effect.otherwise, assign_eff,
+            df if effect.frame is None else effect.frame,
+            effect.assignments, effect.otherwise, assign_eff,
             extra={self._EFF: eff, self._FAILED: failed},
         )
+        if effect.scratch:
+            out = out.drop(*effect.scratch)
 
         # ---- stage 2: PostProcess on the MUTATED event --------------------
         out = self._post_process(
@@ -166,6 +202,24 @@ class FilterBox:
             has_success=effect.success is not None,
             deletions=effect.deletions,
         )
+        return out.drop(self._EFF, self._FAILED)
+
+    def _apply_subset(self, df: DataFrame, flt: RowSubsetFilter) -> DataFrame:
+        """The guarded-subset split: the filter transforms the rows whose
+        ``if`` passes; the others pass through untouched (filter skipped)."""
+        markers = {self._EFF: F.lit(True), self._FAILED: F.lit(False)}
+        if self.ifs:
+            cond = F.coalesce(
+                compile_conditions(self.ifs, df, self.ts_field), F.lit(False)
+            )
+            hit = flt.transform(df.filter(cond), self.ts_field).withColumns(markers)
+            passthrough = df.filter(~cond).withColumns(
+                {**flt.null_outputs(), self._EFF: F.lit(False), self._FAILED: F.lit(False)}
+            )
+            out = hit.unionByName(passthrough)
+        else:
+            out = flt.transform(df, self.ts_field).withColumns(markers)
+        out = self._post_process(out, unconditional=not self.ifs, has_success=False)
         return out.drop(self._EFF, self._FAILED)
 
     def _post_process(

@@ -24,14 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gohangout_spark.expr.conditions import compile_conditions
 from gohangout_spark.expr.paths import field_col
-from gohangout_spark.operators.base import Filter, FilterBox
+from gohangout_spark.operators.base import RowSubsetFilter
 
 
-class Dedup(Filter):
-    plan_level = True
-
+class Dedup(RowSubsetFilter):
     def __init__(
         self,
         fields,
@@ -46,7 +43,7 @@ class Dedup(Filter):
         self.keep_within = keep_within
         self.order_by = order_by
 
-    def _dedup(self, df: DataFrame, ts_field: str) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         # identity keys may be nested paths — materialize them as flat
         # columns for dropDuplicates/partitionBy, dropped afterwards
         key_names = [f"__dk{i}" for i in range(len(self.fields))]
@@ -86,21 +83,3 @@ class Dedup(Filter):
         else:
             out = keyed.dropDuplicates(key_names)
         return out.drop(*key_names)
-
-    def apply_plan(self, df: DataFrame, box: "FilterBox") -> DataFrame:
-        if box.ifs:
-            # guard: only condition-passing rows are deduplicated; the rest
-            # pass through untouched (filter skipped → eff/failed False)
-            cond = F.coalesce(
-                compile_conditions(box.ifs, df, box.ts_field), F.lit(False)
-            )
-            deduped = self._dedup(df.filter(cond), box.ts_field).withColumns(
-                {FilterBox._EFF: F.lit(True), FilterBox._FAILED: F.lit(False)}
-            )
-            passthrough = df.filter(~cond).withColumns(
-                {FilterBox._EFF: F.lit(False), FilterBox._FAILED: F.lit(False)}
-            )
-            return deduped.unionByName(passthrough)
-        return self._dedup(df, box.ts_field).withColumns(
-            {FilterBox._EFF: F.lit(True), FilterBox._FAILED: F.lit(False)}
-        )

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gohangout_spark.expr.paths import field_col
-from gohangout_spark.operators.base import Filter, FilterBox
+from gohangout_spark.operators.base import Filter, FilterEffect
 
 GEO_FIELDS = ["country_name", "region_name", "city_name", "isp", "latitude", "longitude"]
 
@@ -235,8 +235,6 @@ def build_datx(ranges: list[tuple[str, list[str]]]) -> bytes:
 
 
 class IPIP(Filter):
-    plan_level = True
-
     def __init__(
         self,
         src: str,
@@ -254,36 +252,28 @@ class IPIP(Filter):
             provider = DatxProvider(database) if database else DeterministicFakeGeoProvider()
         self.provider = provider
 
-    def apply_plan(self, df: DataFrame, box: FilterBox) -> DataFrame:
+    def build(self, df: DataFrame) -> FilterEffect:
         """Lookup hit/miss maps to the reference's Filter() success bool
-        (ipip.go:84-99 returns false on unrenderable src or failed Find) —
-        the shared FilterBox stage reads the markers for failTag/add/remove."""
-        from gohangout_spark.expr.conditions import compile_conditions
-
+        (ipip.go:84-99 returns false on unrenderable src or failed Find);
+        the geo struct is a pandas-UDF scratch column on the effect's frame."""
         provider = self.provider
         src_col = field_col(self.src, df).cast("string")
-        cond = compile_conditions(box.ifs, df, box.ts_field)
 
         @F.pandas_udf(GEO_SCHEMA)
         def geo_lookup(ips: pd.Series) -> pd.DataFrame:
             return provider.lookup_batch(ips)
 
-        out = df.withColumn("__geo", geo_lookup(src_col))
-        found = src_col.isNotNull() & F.col("__geo.country_name").isNotNull()
-        eff = F.coalesce(cond & found, F.lit(False))
-        failed = F.coalesce(cond & ~found, F.lit(False))
-
-        assigns = {}
+        eff = FilterEffect(
+            frame=df.withColumn("__geo", geo_lookup(src_col)),
+            scratch=["__geo"],
+            success=src_col.isNotNull() & F.col("__geo.country_name").isNotNull(),
+        )
         if self.target:
-            assigns[self.target] = F.col("__geo")
+            eff.assignments[self.target] = F.col("__geo")
         else:
             for fname in GEO_FIELDS:
                 new = F.col("__geo").getItem(fname)
                 if not self.overwrite and fname in df.columns:
                     new = F.coalesce(F.col(f"`{fname}`"), new)
-                assigns[fname] = new
-        out = FilterBox._project(
-            out, assigns, {}, eff,
-            extra={FilterBox._EFF: eff, FilterBox._FAILED: failed},
-        )
-        return out.drop("__geo")
+                eff.assignments[fname] = new
+        return eff

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gohangout_spark.expr.paths import field_col
-from gohangout_spark.operators.base import Filter, FilterBox, FilterEffect
+from gohangout_spark.operators.base import Filter, FilterEffect, RowSubsetFilter
 
 
 class _TextOp(Filter):
@@ -79,36 +79,7 @@ class SimHash(_TextOp):
         return simhash_column(col)
 
 
-class _GuardedPlanOp(Filter):
-    """Plan-level curation op with the Dedup-style guard pattern: box ``if``
-    conditions split the frame, the op transforms the passing rows, the rest
-    pass through untouched with the op's output columns NULLed."""
-
-    plan_level = True
-
-    def apply_plan(self, df: DataFrame, box: FilterBox) -> DataFrame:
-        from gohangout_spark.expr.conditions import compile_conditions
-
-        if box.ifs:
-            cond = F.coalesce(
-                compile_conditions(box.ifs, df, box.ts_field), F.lit(False)
-            )
-            hit = self._transform(df.filter(cond)).withColumns(
-                {FilterBox._EFF: F.lit(True), FilterBox._FAILED: F.lit(False)}
-            )
-            passthrough = df.filter(~cond).withColumns(
-                dict(
-                    self._null_outputs(),
-                    **{FilterBox._EFF: F.lit(False), FilterBox._FAILED: F.lit(False)},
-                )
-            )
-            return hit.unionByName(passthrough)
-        return self._transform(df).withColumns(
-            {FilterBox._EFF: F.lit(True), FilterBox._FAILED: F.lit(False)}
-        )
-
-
-class Decontaminate(_GuardedPlanOp):
+class Decontaminate(RowSubsetFilter):
     """Benchmark decontamination as a YAML filter.
 
         - Decontaminate:
@@ -240,19 +211,19 @@ class Decontaminate(_GuardedPlanOp):
             out = out.withColumnRenamed("contaminated", self.target)
         return out
 
-    def _transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         marked = self._marked(df)
         if self.action == "drop":
             return marked.where(~F.col(self.target)).drop(self.target)
         return marked
 
-    def _null_outputs(self):
+    def null_outputs(self):
         if self.action == "drop":
             return {}
         return {self.target: F.lit(None).cast("boolean")}
 
 
-class QuantileBucket(_GuardedPlanOp):
+class QuantileBucket(RowSubsetFilter):
     """Per-group quantile bands as a YAML filter (CCNet head/middle/tail):
 
         - QuantileBucket:
@@ -277,7 +248,7 @@ class QuantileBucket(_GuardedPlanOp):
         self.id_field = id_field
         self.target = target
 
-    def _transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         from gohangout_spark.functions.curation import quantile_buckets
 
         if df.isStreaming:
@@ -299,7 +270,7 @@ class QuantileBucket(_GuardedPlanOp):
             labels=self.labels,
         )
 
-    def _null_outputs(self):
+    def null_outputs(self):
         typ = "string" if self.labels is not None else "int"
         return {self.target: F.lit(None).cast(typ)}
 
@@ -372,7 +343,7 @@ class RedactPii(_TextOp):
         return redact_pii(col)
 
 
-class GopherRules(_GuardedPlanOp):
+class GopherRules(RowSubsetFilter):
     """Gopher quality heuristics as a YAML filter (functions.curation.
     gopher_rules): adds the six per-rule boolean columns + ``gopher_keep``;
     ``action: drop`` keeps only passing docs (guarded rows only, when the
@@ -402,7 +373,7 @@ class GopherRules(_GuardedPlanOp):
         self.action = action
         self.thresholds = thresholds
 
-    def _transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         from gohangout_spark.functions.curation import gopher_rules
 
         out = gopher_rules(
@@ -414,18 +385,18 @@ class GopherRules(_GuardedPlanOp):
             out = out.where(F.col("gopher_keep")).drop(*self._OUT_COLS)
         return out
 
-    def _null_outputs(self):
+    def null_outputs(self):
         if self.action == "drop":
             return {}
         return {c: F.lit(None).cast("boolean") for c in self._OUT_COLS}
 
 
-class BoilerplateLines(_GuardedPlanOp):
+class BoilerplateLines(RowSubsetFilter):
     """C4-style line-wise boilerplate removal as a YAML filter
     (functions.curation.remove_boilerplate_lines): rewrites ``src`` to the
     kept lines and adds n_lines / n_kept; ``drop_empty: true`` drops docs
     where nothing survived (guarded rows only, as with the other
-    plan-level curation filters).
+    row-subset curation filters).
 
         - BoilerplateLines:
             src: text
@@ -442,7 +413,7 @@ class BoilerplateLines(_GuardedPlanOp):
         self.drop_empty = drop_empty
         self.rules = rules
 
-    def _transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         from gohangout_spark.functions.curation import remove_boilerplate_lines
 
         out = remove_boilerplate_lines(
@@ -461,11 +432,11 @@ class BoilerplateLines(_GuardedPlanOp):
             out = out.where(F.col("n_kept") > 0)
         return out
 
-    def _null_outputs(self):
+    def null_outputs(self):
         return {c: F.lit(None).cast("int") for c in self._OUT_COLS}
 
 
-class Classify(_GuardedPlanOp):
+class Classify(RowSubsetFilter):
     """Linear text-classifier gate as a YAML filter (functions.classify):
     score = sigmoid(dot(hashed_features(text), weights) + bias), weights
     inlined as plan literals — stateless, scan-side, STREAMING-safe.
@@ -517,7 +488,7 @@ class Classify(_GuardedPlanOp):
         # by ||v|| against a fixed bias and flips decisions by doc length)
         self.normalize = bool(normalize)
 
-    def _transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, ts_field: str) -> DataFrame:
         from gohangout_spark.functions.classify import linear_score_col
         from gohangout_spark.functions.similarity import hashed_embeddings
 
@@ -540,7 +511,7 @@ class Classify(_GuardedPlanOp):
             f"{self.target}_keep", F.col(self.target) >= self.threshold
         )
 
-    def _null_outputs(self):
+    def null_outputs(self):
         if self.action == "drop":
             return {}
         return {

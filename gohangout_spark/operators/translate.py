@@ -1,14 +1,16 @@
 """Translate filter — dictionary lookup source → target.
 
 Mirrors /root/reference/filter/translate.go:121-131 (apply) and :37-73
-(YAML dict load; the reference also背ground-refreshes every
+(YAML dict load; the reference also background-refreshes every
 ``refresh_interval`` s — in Spark that maps to reloading per ``foreachBatch``
-micro-batch, wired in streaming/runner).
+micro-batch, on ``Pipeline.run_streaming``'s per-batch refresh path).
 
 Scale design: small dicts compile to a literal in-plan map (zero shuffle,
 fully codegen'd); large dicts become a **broadcast hash join** against a dict
 DataFrame — never a shuffle join, since the dict is the small side by
-construction.
+construction. Both are one ``build``: the join path hands FilterBox the
+joined frame, so the ``if`` guard, keep-old-on-miss, nested targets,
+add/remove fields and failTag are the box's on both paths.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gohangout_spark.expr.paths import field_col
-from gohangout_spark.operators.base import Filter, FilterBox, FilterEffect
+from gohangout_spark.operators.base import Filter, FilterEffect
 
 _LITERAL_MAP_MAX = 10_000
 
@@ -78,59 +80,31 @@ class Translate(Filter):
                 return spark_t
         return None
 
-    # Small dict: in-plan literal map.
     def build(self, df: DataFrame) -> FilterEffect:
-        if len(self.dictionary) > _LITERAL_MAP_MAX:
-            raise RuntimeError("large dict handled by apply_plan")
         vt = self._value_type()
-        entries = []
-        for k, v in self.dictionary.items():
-            entries.append(F.lit(str(k)))
-            # cast to the shared type so e.g. int values are bigint here
-            # exactly as the broadcast path's typed schema makes them
-            entries.append(F.lit(str(v)) if vt is None else F.lit(v).cast(vt))
-        m = F.create_map(*entries)
-        looked_up = F.element_at(m, field_col(self.source, df).cast("string"))
+        src = field_col(self.source, df).cast("string")
         eff = FilterEffect()
+        if len(self.dictionary) <= _LITERAL_MAP_MAX:
+            entries = []
+            for k, v in self.dictionary.items():
+                entries.append(F.lit(str(k)))
+                # cast to the shared type so e.g. int values are bigint here
+                # exactly as the broadcast path's typed schema makes them
+                entries.append(F.lit(str(v)) if vt is None else F.lit(v).cast(vt))
+            looked_up = F.element_at(F.create_map(*entries), src)
+        else:
+            dict_df = df.sparkSession.createDataFrame(
+                [
+                    (str(k), str(v) if vt is None else v)
+                    for k, v in self.dictionary.items()
+                ],
+                schema=f"__translate_key string, __translate_val {vt or 'string'}",
+            )
+            eff.frame = df.join(
+                F.broadcast(dict_df), src == F.col("__translate_key"), "left"
+            )
+            eff.scratch = ["__translate_key", "__translate_val"]
+            looked_up = F.col("__translate_val")
         eff.assignments[self.target] = looked_up
         eff.success = looked_up.isNotNull()  # lookup miss = failure path
         return eff
-
-    @property
-    def plan_level(self) -> bool:  # type: ignore[override]
-        return len(self.dictionary) > _LITERAL_MAP_MAX
-
-    def apply_plan(self, df: DataFrame, box: FilterBox) -> DataFrame:
-        """Broadcast-join path for big dictionaries — same box contract as
-        the literal-map path: the join replaces the in-plan map lookup, and
-        the shared FilterBox stage (via __box_eff/__box_failed markers)
-        handles if-guard, keep-old-on-miss, nested targets, add/remove
-        fields, and duplicate-appending failTag — so both paths are
-        byte-identical for the same config."""
-        from gohangout_spark.expr.conditions import compile_conditions
-
-        spark = df.sparkSession
-        vt = self._value_type()
-        dict_df = spark.createDataFrame(
-            [
-                (str(k), str(v) if vt is None else v)
-                for k, v in self.dictionary.items()
-            ],
-            schema=f"__translate_key string, __translate_val {vt or 'string'}",
-        )
-        src = field_col(self.source, df).cast("string")
-        joined = df.join(
-            F.broadcast(dict_df), src == F.col("__translate_key"), "left"
-        )
-        cond = compile_conditions(box.ifs, df, box.ts_field)
-        hit = F.col("__translate_val").isNotNull()
-        eff = F.coalesce(cond & hit, F.lit(False))
-        failed = F.coalesce(cond & ~hit, F.lit(False))
-        out = FilterBox._project(
-            joined,
-            {self.target: F.col("__translate_val")},
-            {},
-            eff,
-            extra={FilterBox._EFF: eff, FilterBox._FAILED: failed},
-        )
-        return out.drop("__translate_key", "__translate_val")

@@ -1028,7 +1028,7 @@ def grok_target(spark, sf_dir):
 )
 def translate_broadcast_join(spark, sf_dir):
     """Large-dictionary Translate: > literal-map threshold → broadcast hash
-    join path (translate.py apply_plan)."""
+    join path (the joined frame of Translate.build)."""
     big_dict = {str(k): f"grp{k % 7}" for k in range(100_000) if k % 1000 < 600}
     df = _events(spark, sf_dir)
     out = FilterBox(

@@ -70,6 +70,118 @@ class TestBoxContract:
         assert "convertfail" in got["other"]["tags"]
 
 
+def _shape_rows(spark, inputs, ddl):
+    """≤10 rows: id, the guard field grp (in/out alternating), a junk field
+    for remove_fields, existing tags, then the shape's own inputs."""
+    rows = [
+        (i, "in" if i % 2 == 0 else "out", f"j{i}", ["t0"], *vals)
+        for i, vals in enumerate(inputs)
+    ]
+    return spark.createDataFrame(rows, "id long, grp string, junk string, tags array<string>, " + ddl)
+
+
+def _shape_grok(spark, tmp_path, monkeypatch):
+    df = _shape_rows(spark, [("ab-1",), ("cd-2",), ("zz",), ("ef-3",), ("??",), ("gh-4",)], "msg string")
+    return Grok(src="msg", match=[r"^(?P<word>\w+)-\d+$"]), df, lambda r: "-" in r["msg"]
+
+
+def _shape_translate(big):
+    def make(spark, tmp_path, monkeypatch):
+        import gohangout_spark.operators.translate as tmod
+
+        if big:
+            monkeypatch.setattr(tmod, "_LITERAL_MAP_MAX", 0)
+        d = {"a": "x", "b": "y"}
+        df = _shape_rows(spark, [("a",), ("b",), ("q",), ("r",), ("b",), (None,)], "key string")
+        return Translate(source="key", target="team", dictionary=d), df, lambda r: r["key"] in d
+
+    return make
+
+
+def _shape_ipip(spark, tmp_path, monkeypatch):
+    df = _shape_rows(spark, [("8.8.8.8",), ("10.0.0.1",), ("bad",), ("1.2.3.4",), (None,), ("nope",)], "ip string")
+    return IPIP(src="ip"), df, lambda r: (r["ip"] or "").count(".") == 3
+
+
+def _shape_asof(spark, tmp_path, monkeypatch):
+    from gohangout_spark.operators import AsofLookup
+
+    t = lambda d: datetime.datetime(2024, 1, d)
+    spark.createDataFrame(
+        [Row(item="x", valid_from=t(1), price=10.0), Row(item="y", valid_from=t(5), price=9.0)]
+    ).createOrReplaceTempView("box_contract_dim")
+    df = _shape_rows(
+        spark, [("x", t(3)), ("y", t(3)), ("y", t(6)), ("z", t(6))], "item string, ts timestamp"
+    )
+    flt = AsofLookup(table="box_contract_dim", on="item", timestamp="ts", right_timestamp="valid_from")
+    return flt, df, lambda r: r["item"] == "x" or (r["item"] == "y" and r["ts"] >= t(5))
+
+
+def _shape_dedup(spark, tmp_path, monkeypatch):
+    from gohangout_spark.operators import Dedup
+
+    df = _shape_rows(spark, [("a",), ("a",), ("a",), ("b",), ("b",), ("c",), ("c",)], "k string")
+    return Dedup(fields="k", order_by="id"), df, None
+
+
+def _shape_quantile(spark, tmp_path, monkeypatch):
+    from gohangout_spark.operators import QuantileBucket
+
+    df = _shape_rows(spark, [(float(v),) for v in (5, 1, 4, 2, 3, 6, 0, 7)], "score double")
+    return QuantileBucket(score_field="score", n_buckets=2, id_field="id"), df, None
+
+
+_SHAPES = {
+    "grok": _shape_grok,
+    "translate_literal": _shape_translate(big=False),
+    "translate_broadcast": _shape_translate(big=True),
+    "ipip": _shape_ipip,
+    "asof_lookup": _shape_asof,
+    "dedup": _shape_dedup,
+    "quantile_bucket": _shape_quantile,
+}
+
+
+@pytest.mark.parametrize("shape", list(_SHAPES))
+def test_box_contract_every_shape(spark, tmp_path, monkeypatch, shape):
+    """One box contract for every filter shape (row-wise build, build over a
+    joined/UDF frame, row subset) with if + add_fields + remove_fields +
+    failTag: the passing rows equal the unguarded box on just those rows,
+    the others come out unchanged with the filter's new columns NULL, and
+    the fail tag is appended exactly where success is false. ``ok`` is the
+    per-row success (None: the filter never fails)."""
+    flt, df, ok = _SHAPES[shape](spark, tmp_path, monkeypatch)
+    post = {"add_fields": {"added": "yes"}, "remove_fields": ["junk"], "fail_tag": "_fail"}
+    guard = ['EQ(grp,"in")']
+    if flt.if_unsupported:
+        with pytest.raises(ValueError, match="does not support box-level"):
+            FilterBox(flt, ifs=guard, **post).apply(df)
+        guard = []
+    inputs = {r["id"]: r.asDict() for r in df.collect()}
+    got = FilterBox(flt, ifs=guard, **post).apply(df).collect()
+    passing = df.filter(F.col("grp") == "in") if guard else df
+    ref = FilterBox(flt, **post).apply(passing)
+    ref_rows = sorted((r.asDict() for r in ref.collect()), key=lambda r: r["id"])
+
+    hit = [r.asDict() for r in got if not guard or r["grp"] == "in"]
+    hit_view = sorted(({c: r[c] for c in ref.columns} for r in hit), key=lambda r: r["id"])
+    assert hit_view == ref_rows
+    for r in hit:
+        # fields the unguarded box drops are NULLed under a guard
+        assert all(r[c] is None for c in r if c not in ref.columns), r
+        success = ok is None or ok(inputs[r["id"]])
+        assert r["added"] == ("yes" if success else None), r
+        assert r["tags"] == (["t0"] if success else ["t0", "_fail"]), r
+
+    new_cols = [c for c in got[0].asDict() if c not in df.columns]
+    assert "added" in new_cols
+    for r in got:
+        if guard and r["grp"] == "out":
+            r = r.asDict()
+            assert {c: r[c] for c in df.columns} == inputs[r["id"]]
+            assert all(r[c] is None for c in new_cols), r
+
+
 class TestBasicFilters:
     def test_add_render_and_overwrite(self, df):
         out = FilterBox(Add({"copy": "[name]", "lit": "static"})).apply(df)
@@ -763,7 +875,29 @@ class TestReviewFixesRound2:
         assert df.filter(compile_condition("EQ($.a[0],1)", df)).count() == 0
 
 
+def _assert_unguarded_subset_contract(spark, flt):
+    """A row-subset filter without ``if`` follows the box rule of a
+    row-wise filter without success: unconditional, so remove_fields DROPS
+    the field, and it never fails, so failTag adds no ``tags`` column."""
+    df = spark.createDataFrame(
+        [Row(k="a", junk="j", score=1.0, doc_id=1),
+         Row(k="a", junk="j", score=2.0, doc_id=2),
+         Row(k="b", junk="j", score=3.0, doc_id=3)]
+    )
+    ref = FilterBox(Add({"x": "v"}), remove_fields=["junk"]).apply(df)
+    out = FilterBox(flt, remove_fields=["junk"]).apply(df)
+    assert "junk" not in ref.columns and "junk" not in out.columns, out.columns
+    ref = FilterBox(Add({"x": "v"}), fail_tag="t").apply(df)
+    out = FilterBox(flt, fail_tag="t").apply(df)
+    assert "tags" not in ref.columns and "tags" not in out.columns, out.columns
+
+
 class TestDedup:
+    def test_unguarded_box_contract(self, spark):
+        from gohangout_spark.operators import Dedup
+
+        _assert_unguarded_subset_contract(spark, Dedup(fields="k"))
+
     def test_batch_order_by_deterministic(self, spark):
         from gohangout_spark.operators import Dedup, FilterBox
 
@@ -961,6 +1095,15 @@ outputs:
                 AsofLookup(path=dim, on="item", timestamp="ts",
                            right_timestamp="valid_from")
             ).apply(stream)
+
+
+class TestQuantileBucketBox:
+    def test_unguarded_box_contract(self, spark):
+        from gohangout_spark.operators import QuantileBucket
+
+        _assert_unguarded_subset_contract(
+            spark, QuantileBucket(score_field="score", n_buckets=2)
+        )
 
 
 class TestCanonicalize:

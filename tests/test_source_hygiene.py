@@ -7,7 +7,7 @@ specs parse; each I/O transport setting is read in one place; no module
 imports another's private names; the condition grammars are parsed in one
 place each; the replay gates' scaffolding is written once; the Kafka dev
 wire has one Produce, one Fetch and one page-drain path for both message
-formats."""
+formats; FilterBox alone owns a filter's ``if`` guard and success markers."""
 
 import importlib.util
 import pathlib
@@ -213,3 +213,43 @@ def test_kafka_wire_one_path_per_api():
     assert target(h[(API_PRODUCE, 0)]) is target(h[(API_PRODUCE, 3)])
     assert target(h[(API_FETCH, 0)]) is target(h[(API_FETCH, 4)])
     assert sources.read_text(encoding="utf-8").count('"wire_format"') == 1
+
+
+def test_filter_guard_defined_once():
+    """FilterBox alone compiles a box's ``if``, writes the eff/failed markers
+    and runs the guarded-subset split. Filters declare what they compute;
+    only the stream-restructuring ones (the metric union, the nested chain)
+    are plan-level and read the box themselves."""
+    import ast
+
+    ops = PKG / "operators"
+    texts = {path: path.read_text(encoding="utf-8") for path in sorted(PKG.rglob("*.py"))}
+
+    def outside(pattern, allowed):
+        return [
+            str(path.relative_to(ROOT))
+            for path, text in texts.items()
+            if path not in allowed and re.search(pattern, text)
+        ]
+
+    metrics, filters, base = ops / "metrics.py", ops / "filters.py", ops / "base.py"
+    assert not outside(r"compile_conditions\(box\.ifs", {base, metrics, filters})
+    assert not outside(r"\b_(EFF|FAILED)\b", {base, metrics})
+    assert not outside(r"FilterBox\._project\b", {base, filters})
+    assert not outside(r"_GuardedPlanOp", set())
+
+    plan_level = set()
+    for path, text in texts.items():
+        for cls in ast.walk(ast.parse(text)):
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            for node in cls.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "plan_level":
+                    plan_level.add(cls.name)
+                elif (
+                    isinstance(node, ast.Assign)
+                    and any(getattr(t, "id", None) == "plan_level" for t in node.targets)
+                    and not (isinstance(node.value, ast.Constant) and node.value.value is False)
+                ):
+                    plan_level.add(cls.name)
+    assert plan_level == {"LinkMetric", "Filters"}, plan_level
